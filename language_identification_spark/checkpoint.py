@@ -15,16 +15,15 @@ metrics".
   plan test).  The previous design filtered the raw source per bucket —
   xxhash64 can't push down, so at 10^12-file scale that was n_buckets full
   scans of the input (VERDICT r01 "what's wrong" #2).
-- **Checkpointing**: one snapshot commit per completed bucket (TableIO's
-  atomic manifest swap).  A bucket is DONE only when its **metrics** row is
-  committed — metrics commit last, so a crash between the results commit and
-  the metrics commit leaves an orphan results snapshot that resume prunes
-  and reprocesses (ADVICE r01: deriving done-ness from results lost the
-  bucket's lineage forever).
-- **Lineage + metrics**: one row per bucket: rows in/kept, per-reason drop
-  counts, redaction total, wall ms.  Mirrors the reference's raw-events /
-  merged-segments audit split (``disconnected_language_detector.py:995-996``,
-  counts at ``:1204,:1226``).
+- **Checkpointing**: ONE atomic commit per completed bucket (TableIO's
+  manifest swap) whose snapshot meta carries the bucket's metrics row, so
+  results and lineage become visible together; a crash after the data
+  files land but before the swap leaves an invisible orphan, and the bucket
+  is redone on resume (ADVICE r01: done-ness must never outrun lineage).
+- **Lineage + metrics**: one row per bucket (``read_metrics``): rows
+  in/kept, per-reason drop counts, redaction total, wall ms.  Mirrors the
+  reference's raw-events / merged-segments audit split
+  (``disconnected_language_detector.py:995-996``, counts at ``:1204,:1226``).
 - **Timeout watchdog (W6)**: ``bucket_timeout_sec`` bounds each bucket's
   wall clock; on expiry the bucket's Spark job group is cancelled and the
   runner raises ``BucketTimeout`` — the batch analog of the reference's
@@ -32,22 +31,27 @@ metrics".
   Cluster-level stragglers are additionally covered by the speculation/
   reaper confs in ``session.py``.
 
-Scale note: each bucket is a full parallel Spark job over ~1/n_buckets of
-the staged input; n_buckets trades checkpoint granularity against job-submit
-overhead.  At 10^12 files one would use a few thousand buckets so a restart
-loses <0.1% of work; the staging table costs one extra write+read of the
-input but replaces n_buckets full scans.
+Scale note: each bucket is one parallel Spark job over ~1/n_buckets of
+the staged input, and two buckets are in flight, so one bucket's plan build
+and commit overlap the other's job and its straggler tasks.
+n_buckets trades checkpoint granularity against per-bucket overhead; at
+10^12 files a few thousand buckets keep a restart's loss under 0.1%.  The
+staging table costs one extra write+read of the input but replaces
+n_buckets full scans.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import logging
 import os
 import threading
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,7 +61,8 @@ from .sources.tableio import ParquetTableIO
 # S8: the reference's dual console+file log sink (``setup_logging``,
 # disconnected_language_detector.py:116-139) maps to a module logger emitting
 # one structured line per bucket commit; the numeric metrics land in the
-# metrics TABLE (queryable), computed via df.observe() DURING the write.
+# commit's manifest entry (queryable via read_metrics), computed via
+# df.observe() DURING the write.
 log = logging.getLogger("language_identification_spark.checkpoint")
 
 _VERDICT_COLS = {"keep", "drop_reason", "n_redactions"}
@@ -65,6 +70,10 @@ _VERDICT_COLS = {"keep", "drop_reason", "n_redactions"}
 
 class BucketTimeout(RuntimeError):
     """A bucket exceeded ``bucket_timeout_sec`` and its jobs were cancelled."""
+
+
+class _Stopped(Exception):
+    """Another bucket failed first; this one must not commit."""
 
 
 def bucket_col(n_buckets: int) -> F.Column:
@@ -198,20 +207,6 @@ def stage_source(
     return spark.read.parquet(staging_dir)
 
 
-def _watchdog(spark: SparkSession, group: str, timeout_sec: float):
-    """Arm a timer that cancels ``group``'s jobs after ``timeout_sec``."""
-    fired = threading.Event()
-
-    def cancel():
-        fired.set()
-        spark.sparkContext.cancelJobGroup(group)
-
-    t = threading.Timer(timeout_sec, cancel)
-    t.daemon = True
-    t.start()
-    return t, fired
-
-
 def run_checkpointed(
     spark: SparkSession,
     src: DataFrame,
@@ -222,139 +217,132 @@ def run_checkpointed(
     fail_between: int | None = None,
     bucket_timeout_sec: float | None = None,
 ) -> DataFrame:
-    """Run ``stage_fn`` bucket by bucket with snapshot commits.
+    """Run ``stage_fn`` bucket by bucket, two buckets in flight, one
+    snapshot commit per bucket carrying its metrics row.
 
-    ``fail_after=k`` injects a crash after k fully committed buckets;
-    ``fail_between=k`` crashes the k-th bucket INSIDE the commit window —
-    after its results snapshot, before its metrics row (the half-commit
-    state resume must prune, ADVICE r01).  Returns the union of all
-    committed results.
+    ``fail_after=k`` injects a crash right after the k-th commit;
+    ``fail_between=k`` crashes the k-th commit INSIDE its window — data
+    files landed, manifest not swapped (the orphan state resume must
+    ignore).  They leave exactly k and k-1 commits: the bucket still in
+    flight is never committed.  Returns the union of all committed results.
     """
     results = ParquetTableIO(f"{out_root}/results")
-    metrics = ParquetTableIO(f"{out_root}/metrics")
-
-    # done-ness comes from METRICS (committed last); results snapshots for
-    # buckets missing their metrics row are half-commits from a crash in the
-    # window between the two appends — prune them so the rerun is clean
-    done = {m["bucket"] for m in metrics.committed_meta()}
-    orphans = [
-        s for s in results.snapshots() if s["meta"].get("bucket") not in done
-    ]
-    if orphans:
-        results.prune(lambda s: s["meta"].get("bucket") in done)
-
+    # a bucket is DONE only when its snapshot carries its metrics row; older
+    # roots (results + a separate metrics table) have none and are redone
+    results.prune(lambda s: "metrics" in s["meta"])
+    done = {m["bucket"] for m in results.committed_meta()}
     staged = stage_source(
         spark, src, f"{out_root}/staging", n_buckets,
         has_committed_work=bool(done),
     )
-    processed = 0
-    for b in range(n_buckets):
-        if b in done:
-            continue
+    stop = threading.Event()
+    errors: list[BaseException] = []
+    commits = itertools.count(1)
+
+    def run_bucket(b: int) -> None:
         t0 = time.monotonic()
-        part = staged.filter(F.col("_bucket") == b).drop("_bucket")
-        staged_out = stage_fn(part)
+        staged_out = stage_fn(staged.filter(F.col("_bucket") == b).drop("_bucket"))
         # S8: metrics via df.observe — computed by the SAME job that writes
         # the snapshot, so lineage costs zero extra scans and zero recompute
         has_verdict = _VERDICT_COLS.issubset(set(staged_out.columns))
-        obs = None
+        aggs = [F.count(F.lit(1)).alias("rows_in")]
         if has_verdict:
-            obs = Observation(f"bucket-{b}")
             reason = F.coalesce(F.col("drop_reason"), F.lit("keep"))
-            staged_out = staged_out.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_in"),
-                F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias(
-                    "rows_kept"
-                ),
-                F.coalesce(F.sum("n_redactions"), F.lit(0)).alias("n_redactions"),
+            aggs += [
+                F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+                F.sum("n_redactions").alias("n_redactions"),
                 *[
-                    F.coalesce(
-                        F.sum((reason == r).cast("long")), F.lit(0)
-                    ).alias(f"reason_{r}")
+                    F.sum((reason == r).cast("long")).alias(f"reason_{r}")
                     for r in ("keep", *DROP_REASONS)
                 ],
-            )
-        group = f"bucket-{b}"
-        timer = fired = None
+            ]
+        obs = Observation(f"bucket-{b}")
+        staged_out = staged_out.observe(obs, *aggs)
+        commit: dict = {}
+
+        def commit_meta() -> dict:  # runs under the results commit lock
+            if stop.is_set():
+                raise _Stopped
+            n = commit["n"] = next(commits)
+            if n in (fail_between, fail_after):
+                stop.set()
+            if n == fail_between:
+                raise RuntimeError(f"injected failure inside commit window of bucket {b}")
+            got = {name: int(v or 0) for name, v in obs.get.items()}
+            kept = got.get("rows_kept", 0)
+            commit["metrics"] = {
+                "rows_in": got["rows_in"],
+                "rows_kept": kept,
+                "rows_dropped": got["rows_in"] - kept,
+                "n_redactions": got.get("n_redactions", 0),
+                "wall_ms": int((time.monotonic() - t0) * 1000),
+                "dropped_by_reason": {
+                    name[len("reason_"):]: v
+                    for name, v in got.items()
+                    if name.startswith("reason_") and (v > 0 or name == "reason_keep")
+                },
+            }
+            return {"bucket": b, "metrics": commit["metrics"]}
+
+        # W6 watchdog: the job group is set in this bucket's own thread
+        fired = threading.Event()
         if bucket_timeout_sec is not None:
-            spark.sparkContext.setJobGroup(group, f"bucket {b}", True)
-            timer, fired = _watchdog(spark, group, bucket_timeout_sec)
+            spark.sparkContext.setJobGroup(f"bucket-{b}", f"bucket {b}", True)
+            timer = threading.Timer(bucket_timeout_sec, lambda: (
+                fired.set(), spark.sparkContext.cancelJobGroup(f"bucket-{b}")
+            ))
+            timer.daemon = True
+            timer.start()
         try:
-            results.append(staged_out, {"bucket": b})
-        except Exception as e:  # noqa: BLE001
-            if fired is not None and fired.is_set():
+            results.append(staged_out, commit_meta)
+        except Exception as e:
+            if fired.is_set():
                 raise BucketTimeout(
                     f"bucket {b} exceeded {bucket_timeout_sec}s wall clock"
                 ) from e
             raise
         finally:
-            if timer is not None:
+            if bucket_timeout_sec is not None:
                 timer.cancel()
-                spark.sparkContext.setJobGroup("", "")
-        if fail_between is not None and processed + 1 >= fail_between:
-            raise RuntimeError(
-                f"injected failure inside commit window of bucket {b}"
-            )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        if has_verdict:
-            got = obs.get
-            rows_in = int(got["rows_in"])
-            reasons = {
-                r: int(got[f"reason_{r}"])
-                for r in ("keep", *DROP_REASONS)
-                if int(got[f"reason_{r}"]) > 0 or r == "keep"
-            }
-            m_row = {
-                "rows_in": rows_in,
-                "rows_kept": int(got["rows_kept"]),
-                "rows_dropped": rows_in - int(got["rows_kept"]),
-                "n_redactions": int(got["n_redactions"]),
-                "bucket": b,
-                "wall_ms": wall_ms,
-                "dropped_by_reason": {
-                    k: v for k, v in reasons.items() if v > 0 or k == "keep"
-                },
-            }
-        else:  # arbitrary stage output: row count only
-            rows_in = spark.read.parquet(
-                results.snapshot_dir(results.snapshots()[-1]["id"])
-            ).count()
-            m_row = {
-                "rows_in": rows_in,
-                "rows_kept": 0,
-                "rows_dropped": rows_in,
-                "n_redactions": 0,
-                "bucket": b,
-                "wall_ms": wall_ms,
-                "dropped_by_reason": {},
-            }
+        m = commit["metrics"]
         log.info(
             "bucket=%d rows_in=%d kept=%d redactions=%d wall_ms=%d",
-            b, m_row["rows_in"], m_row["rows_kept"],
-            m_row["n_redactions"], wall_ms,
+            b, m["rows_in"], m["rows_kept"], m["n_redactions"], m["wall_ms"],
         )
-        m = spark.createDataFrame(
-            [
-                (
-                    m_row["rows_in"], m_row["rows_kept"], m_row["rows_dropped"],
-                    m_row["n_redactions"], m_row["bucket"], m_row["wall_ms"],
-                    m_row["dropped_by_reason"],
-                )
-            ],
-            "rows_in long, rows_kept long, rows_dropped long, n_redactions long,"
-            " bucket int, wall_ms int, dropped_by_reason map<string,long>",
-        )
-        metrics.append(m, {"bucket": b})
-        processed += 1
-        if fail_after is not None and processed >= fail_after:
+        if commit["n"] == fail_after:
             raise RuntimeError(f"injected failure after bucket {b}")
-    out = results.read(spark)
-    assert out is not None
-    return out
+
+    def guarded(b: int) -> None:
+        # the first error stops the other thread from committing or starting
+        if stop.is_set():
+            return
+        try:
+            run_bucket(b)
+        except _Stopped:
+            pass
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+            stop.set()
+
+    # two buckets in flight: one's plan build and commit overlap the other's
+    # job and its straggler tail; each thread inherits the caller's job group
+    try:
+        with ThreadPoolExecutor(2, thread_name_prefix="bucket") as pool:
+            for b in sorted(set(range(n_buckets)) - done):
+                pool.submit(inheritable_thread_target(spark)(guarded), b)
+    finally:
+        stop.set()
+    if errors:
+        raise errors[0]
+    return results.read(spark)
 
 
 def read_metrics(spark: SparkSession, out_root: str) -> DataFrame:
-    m = ParquetTableIO(f"{out_root}/metrics").read(spark)
-    assert m is not None
-    return m
+    """One lineage row per committed bucket, from the results manifest."""
+    schema = (
+        "rows_in long, rows_kept long, rows_dropped long, n_redactions long,"
+        " bucket int, wall_ms int, dropped_by_reason map<string,long>"
+    )
+    metas = ParquetTableIO(f"{out_root}/results").committed_meta()
+    rows = [{**m["metrics"], "bucket": m["bucket"]} for m in metas]
+    return spark.createDataFrame(sorted(rows, key=lambda r: r["bucket"]), schema)

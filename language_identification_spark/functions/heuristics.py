@@ -24,10 +24,12 @@ def with_heuristics(df: DataFrame, content: str = "content") -> DataFrame:
         df.withColumn("n_chars", F.length(c).cast("long"))
         # ASCII-whitespace strip (Java \s set), matching the labeler's
         # strip(" \t\n\r\f\v") — F.trim would strip only 0x20 and diverge
-        # from the ground truth on \n/\t-padded boundary rows (ADVICE r01)
+        # from the ground truth on \n/\t-padded boundary rows (ADVICE r01).
+        # btrim is linear; the regex ^\s+|\s+$ retried \s+$ from every
+        # interior whitespace char, quadratic in whitespace runs.
         .withColumn(
             "n_chars_stripped",
-            F.length(F.regexp_replace(c, r"^\s+|\s+$", "")).cast("long"),
+            F.length(F.btrim(c, F.lit(" \t\n\r\f\u000b"))).cast("long"),
         )
         .withColumn("n_lines", F.size(lines).cast("long"))
         .withColumn(

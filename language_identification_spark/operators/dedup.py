@@ -318,7 +318,6 @@ def jaccard_pairs(
     if staging_path is not None:
         feat.write.mode("overwrite").parquet(staging_path)
         feat = df.sparkSession.read.parquet(staging_path)
-        feat.count()  # eager materialization
     else:
         from pyspark import StorageLevel
 

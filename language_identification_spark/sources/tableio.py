@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 from collections.abc import Callable
 
@@ -38,6 +39,7 @@ class SnapshotTableIO:
 
     def __init__(self, table_path: str):
         self.table_path = table_path
+        self._lock = threading.Lock()
         os.makedirs(table_path, exist_ok=True)
 
     def _write(self, df: DataFrame, data_dir: str) -> None:
@@ -56,17 +58,25 @@ class SnapshotTableIO:
         with open(self._manifest_path) as f:
             return json.load(f)["snapshots"]
 
-    def append(self, df: DataFrame, meta: dict | None = None) -> str:
-        """Write df as a new snapshot; commit by atomic manifest replace."""
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self.table_path, f"snap-{snap_id}")
-        self._write(df, data_dir)
-        snaps = self.snapshots()
-        snaps.append({"id": snap_id, "dir": f"snap-{snap_id}", "meta": meta or {}})
-        tmp = self._manifest_path + f".tmp-{snap_id}"
+    def _swap(self, snaps: list[dict]) -> None:
+        tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
             json.dump({"snapshots": snaps}, f, indent=1)
         os.replace(tmp, self._manifest_path)  # the atomic commit point
+
+    def append(self, df: DataFrame, meta: dict | Callable[[], dict] | None = None) -> str:
+        """Write df as a new snapshot; commit by atomic manifest replace.
+
+        Commits through one instance are serialised by its lock.  A callable
+        ``meta`` runs under that lock once the data files landed: it can
+        record what the write produced (``Observation`` metrics), or raise to
+        veto the commit, leaving the data dir an invisible orphan."""
+        snap_id = uuid.uuid4().hex[:16]
+        self._write(df, self.snapshot_dir(snap_id))
+        with self._lock:
+            entry = (meta() if callable(meta) else meta) or {}
+            snap = {"id": snap_id, "dir": f"snap-{snap_id}", "meta": entry}
+            self._swap([*self.snapshots(), snap])
         return snap_id
 
     def snapshot_dir(self, snap_id: str) -> str:
@@ -89,14 +99,11 @@ class SnapshotTableIO:
         The data dirs become orphans (invisible to readers) — the same shape
         as Iceberg snapshot expiry.  Returns the number of dropped snapshots.
         """
-        snaps = self.snapshots()
-        kept = [s for s in snaps if keep(s)]
-        if len(kept) == len(snaps):
-            return 0
-        tmp = self._manifest_path + f".tmp-prune-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"snapshots": kept}, f, indent=1)
-        os.replace(tmp, self._manifest_path)
+        with self._lock:
+            snaps = self.snapshots()
+            kept = [s for s in snaps if keep(s)]
+            if len(kept) < len(snaps):
+                self._swap(kept)
         return len(snaps) - len(kept)
 
 

@@ -4,6 +4,9 @@ bucket; salting breaks the mega-repo skew."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,8 +17,12 @@ from language_identification_spark.checkpoint import (
 )
 from language_identification_spark.datagen.corpus import generate_source_files
 from language_identification_spark.plans.pipeline import quality_filter
+from language_identification_spark.sources.tableio import ParquetTableIO
 
 N_BUCKETS = 4
+# jobs of a pass that belong to no bucket: re-reading the staged table and
+# the results union (parquet schema inference), measured on Spark 4.1
+JOBS_OUTSIDE_BUCKETS = 2
 
 
 @pytest.fixture(scope="module")
@@ -29,10 +36,14 @@ def _sorted_rows(df):
     return [tuple(str(x) for x in r) for r in df.select(*cols).orderBy("commit").collect()]
 
 
-def test_resume_equals_single_run(spark, src, tmp_path):
-    full = run_checkpointed(
-        spark, src, str(tmp_path / "full"), quality_filter, N_BUCKETS
-    )
+@pytest.fixture(scope="module")
+def full_rows(spark, src, tmp_path_factory):
+    """Rows of one uninterrupted run, the reference every resume must equal."""
+    root = str(tmp_path_factory.mktemp("full"))
+    return _sorted_rows(run_checkpointed(spark, src, root, quality_filter, N_BUCKETS))
+
+
+def test_resume_equals_single_run(spark, src, tmp_path, full_rows):
     with pytest.raises(RuntimeError, match="injected failure"):
         run_checkpointed(
             spark, src, str(tmp_path / "resumed"), quality_filter, N_BUCKETS,
@@ -42,7 +53,7 @@ def test_resume_equals_single_run(spark, src, tmp_path):
     resumed = run_checkpointed(
         spark, src, str(tmp_path / "resumed"), quality_filter, N_BUCKETS
     )
-    assert _sorted_rows(resumed) == _sorted_rows(full)
+    assert _sorted_rows(resumed) == full_rows
 
 
 def test_resume_skips_completed_buckets(spark, src, tmp_path):
@@ -62,8 +73,16 @@ def test_resume_skips_completed_buckets(spark, src, tmp_path):
 def test_lineage_metrics_content(spark, src, tmp_path):
     root = str(tmp_path / "metrics")
     out = run_checkpointed(spark, src, root, quality_filter, N_BUCKETS)
-    m = read_metrics(spark, root).collect()
-    assert len(m) == N_BUCKETS
+    # one commit per bucket: the metrics row rides in the results manifest
+    assert not os.path.exists(os.path.join(root, "metrics"))
+    m_df = read_metrics(spark, root)
+    assert m_df.schema.simpleString() == (
+        "struct<rows_in:bigint,rows_kept:bigint,rows_dropped:bigint,"
+        "n_redactions:bigint,bucket:int,wall_ms:int,"
+        "dropped_by_reason:map<string,bigint>>"
+    )
+    m = m_df.collect()
+    assert [r.bucket for r in m] == list(range(N_BUCKETS))
     assert sum(r.rows_in for r in m) == src.count()
     for r in m:
         assert r.rows_in == r.rows_kept + r.rows_dropped
@@ -71,32 +90,93 @@ def test_lineage_metrics_content(spark, src, tmp_path):
         total_in_map = sum(r.dropped_by_reason.values())
         assert total_in_map == r.rows_in
     assert out.count() == src.count()
+    # each row equals the counts recomputed from the committed output
+    b_out = out.withColumn("b", bucket_col(N_BUCKETS)).withColumn(
+        "reason", F.coalesce("drop_reason", F.lit("keep"))
+    )
+    want = {
+        r.b: (r.rows_in, r.rows_kept, r.n_redactions)
+        for r in b_out.groupBy("b").agg(
+            F.count(F.lit(1)).alias("rows_in"),
+            F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+            F.sum("n_redactions").alias("n_redactions"),
+        ).collect()
+    }
+    by_reason = {}
+    for r in b_out.groupBy("b", "reason").count().collect():
+        by_reason.setdefault(r.b, {})[r.reason] = r["count"]
+    for r in m:
+        assert (r.rows_in, r.rows_kept, r.n_redactions) == want[r.bucket]
+        assert r.dropped_by_reason == by_reason[r.bucket]
 
 
 def test_crash_inside_commit_window_reprocesses_bucket(spark, src, tmp_path):
-    # ADVICE r01: a crash between the results commit and the metrics commit
-    # must NOT lose the bucket's metrics forever.  Done-ness derives from
-    # metrics; the orphan results snapshot is pruned and the bucket reruns.
+    # ADVICE r01: a crash after a bucket's data files land but before its
+    # manifest swap must not lose the bucket's metrics.  The data dir stays
+    # an invisible orphan, the bucket is not done, and the resume redoes it.
     root = str(tmp_path / "window")
     with pytest.raises(RuntimeError, match="inside commit window"):
         run_checkpointed(
             spark, src, root, quality_filter, N_BUCKETS, fail_between=2
         )
-    from language_identification_spark.sources.tableio import ParquetTableIO
-
     res = ParquetTableIO(f"{root}/results")
-    met = ParquetTableIO(f"{root}/metrics")
-    assert len(res.snapshots()) == 2  # one full commit + one orphan
-    assert len(met.snapshots()) == 1
+    assert len(res.snapshots()) == 1  # only the first commit
+    landed = [d for d in os.listdir(res.table_path) if d.startswith("snap-")]
+    assert len(landed) >= 2  # the crashed bucket's data files did land
     out = run_checkpointed(spark, src, root, quality_filter, N_BUCKETS)
-    # every bucket has exactly one results snapshot and one metrics row
-    assert sorted(s["meta"]["bucket"] for s in res.snapshots()) == list(
-        range(N_BUCKETS)
-    )
-    assert sorted(s["meta"]["bucket"] for s in met.snapshots()) == list(
-        range(N_BUCKETS)
-    )
+    # every bucket is committed exactly once, each with its metrics row
+    metas = res.committed_meta()
+    assert sorted(m["bucket"] for m in metas) == list(range(N_BUCKETS))
+    assert all("metrics" in m for m in metas)
     assert out.count() == src.count()
+
+
+def test_old_two_table_root_resumes_to_same_rows(spark, src, tmp_path, full_rows):
+    # roots written when a bucket committed twice (results, then a row in a
+    # separate metrics table) carry no metrics in the results manifest; the
+    # resume prunes those snapshots, redoes their buckets and ends with the
+    # same rows as an uninterrupted run
+    root = str(tmp_path / "old")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(
+            spark, src, root, quality_filter, N_BUCKETS, fail_after=2
+        )
+    res = ParquetTableIO(f"{root}/results")
+    old_metrics = ParquetTableIO(f"{root}/metrics")
+    for m in read_metrics(spark, root).collect():
+        old_metrics.append(spark.createDataFrame([m]), {"bucket": m.bucket})
+    manifest = os.path.join(res.table_path, "_manifest.json")
+    with open(manifest) as f:
+        snaps = json.load(f)["snapshots"]
+    with open(manifest, "w") as f:
+        json.dump({"snapshots": [
+            {**s, "meta": {"bucket": s["meta"]["bucket"]}} for s in snaps
+        ]}, f)
+    resumed = run_checkpointed(spark, src, root, quality_filter, N_BUCKETS)
+    assert _sorted_rows(resumed) == full_rows
+    assert sorted(m["bucket"] for m in res.committed_meta()) == list(
+        range(N_BUCKETS)
+    )
+    assert read_metrics(spark, root).count() == N_BUCKETS
+
+
+def test_bucket_pass_submits_one_job_per_bucket(spark, src, tmp_path):
+    # the per-bucket cost this runner pays: one Spark job (the results
+    # write, metrics observed in it), no metrics append, no re-read count.
+    # Bucket threads inherit the caller's job group, so all jobs count here.
+    from language_identification_spark.checkpoint import stage_source
+
+    root = str(tmp_path / "jobs")
+    stage_source(spark, src, f"{root}/staging", N_BUCKETS)
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-job-pin", "job-count pin")
+    try:
+        run_checkpointed(spark, src, root, quality_filter, N_BUCKETS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("ckpt-job-pin"))
+    assert n_jobs <= N_BUCKETS + JOBS_OUTSIDE_BUCKETS, n_jobs
 
 
 def test_bucket_reads_prune_at_source(spark, src, tmp_path):

@@ -102,7 +102,16 @@ def test_stateful_switch_machine(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    # with a processing-time timeout the stateful operator asks for another
+    # (no-data) batch forever, so availableNow never terminates by itself
+    # and processAllAvailable never returns: stop once the input is consumed
+    deadline = time.monotonic() + 120
+    while sum(p["numInputRows"] for p in q.recentProgress) < len(rows):
+        assert q.isActive, q.exception()
+        assert time.monotonic() < deadline, q.status
+        time.sleep(0.2)
+    q.stop()
+    assert not q.isActive and q.exception() is None
     got = [
         (r.label, r.island_start, r.island_end)
         for r in spark.sql(

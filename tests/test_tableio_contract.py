@@ -66,3 +66,65 @@ def test_prune_drops_snapshots_atomically(spark, tmp_path, impl):
     # manifest stays valid json after prune
     with open(os.path.join(t.table_path, "_manifest.json")) as f:
         assert len(json.load(f)["snapshots"]) == 1
+
+
+def test_callable_meta_runs_after_data_lands_and_can_veto(spark, tmp_path, impl):
+    t = impl(str(tmp_path / "t"))
+    seen = []
+
+    def meta():
+        landed = [d for d in os.listdir(t.table_path) if d.startswith("snap-")]
+        seen.append(len(landed))
+        return {"bucket": 0, "rows": 5}
+
+    t.append(_df(spark, 0, 5), meta)
+    assert seen == [1]  # the data dir existed before the manifest swap
+    assert t.committed_meta() == [{"bucket": 0, "rows": 5}]
+
+    def veto():
+        raise RuntimeError("veto")
+
+    with pytest.raises(RuntimeError, match="veto"):
+        t.append(_df(spark, 5, 9), veto)
+    # the vetoed snapshot's files landed but stay invisible
+    assert len([d for d in os.listdir(t.table_path) if d.startswith("snap-")]) == 2
+    assert t.read(spark).count() == 5
+    assert len(t.snapshots()) == 1
+
+
+def test_concurrent_appends_lose_no_commit(tmp_path):
+    # the manifest read-modify-write is serialised per table: many threads
+    # appending at once, with the interpreter switching threads as often as
+    # it can, must leave every snapshot in the manifest
+    import sys
+    import threading
+
+    from language_identification_spark.sources.tableio import SnapshotTableIO
+
+    class DirOnly(SnapshotTableIO):
+        def _write(self, df, data_dir):
+            os.makedirs(data_dir)
+
+    t = DirOnly(str(tmp_path / "t"))
+    n_threads, per_thread = 16, 25
+
+    def worker(i):
+        for j in range(per_thread):
+            t.append(None, lambda: {"w": i, "j": j})
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    metas = t.committed_meta()
+    assert len(metas) == n_threads * per_thread
+    assert {(m["w"], m["j"]) for m in metas} == {
+        (i, j) for i in range(n_threads) for j in range(per_thread)
+    }
