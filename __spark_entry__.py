@@ -2176,7 +2176,7 @@ def _q_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     return docs.select(
         "doc_id",
-        scrub_udf(F.col("text"), F.lit(True)).alias("sc"),
+        scrub_udf(F.col("text")).alias("sc"),
     ).select(
         "doc_id",
         F.col("sc.n_sub").cast("long").alias("n_redactions"),

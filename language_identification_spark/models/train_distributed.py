@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..hashing import char_trigram_hashes_batch, word_bigram_hashes_batch
+from ..pyworker import forget_zip_importers
 from . import langid as _langid
 from . import perplexity as _perplexity
 from .langid import LangIdModel
@@ -70,6 +71,7 @@ def _bucket_counts(
     text_col: str,
 ) -> DataFrame:
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         acc: dict = {}
         for pdf in batches:
             for lang, grp in pdf.groupby("lang", dropna=False):

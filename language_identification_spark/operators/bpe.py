@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pyworker import forget_zip_importers
+
 END_OF_WORD = "</w>"
 
 
@@ -241,6 +243,7 @@ def bpe_encode(
     mlist = [(str(left), str(right)) for left, right in merges]
 
     def _encode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             ids = pdf[id_col].tolist()
             texts = pdf[text_col].tolist()

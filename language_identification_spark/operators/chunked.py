@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pyworker import forget_zip_importers
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -107,6 +109,7 @@ def normalize_chunk_stream(chunks: Iterator[bytes]) -> str:
 
 
 def _normalize_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    forget_zip_importers()
     pdf = pdf.sort_values("chunk_idx")
     doc_id = int(pdf["doc_id"].iloc[0])
     text = normalize_chunk_stream(iter(pdf["payload"]))

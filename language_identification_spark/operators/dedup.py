@@ -29,6 +29,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..hashing import char_trigram_hashes_batch
+from ..partitioning import spread_scan
+from ..pyworker import forget_zip_importers
 
 SHINGLE_BUCKETS = 1 << 31  # shingle space for minhash/jaccard
 N_PERM = 64
@@ -86,6 +88,7 @@ def _minhash_batch(texts: pd.Series) -> pd.Series:
     C-speed and allocation-light (a (n_shingles, 64) matrix + ``minimum.at``
     was ~100x slower and ~0.5 GB per Arrow batch).
     """
+    forget_zip_importers()
     bts = [(t or "").lower().encode("utf-8") for t in texts]
     shingles, doc_ids = char_trigram_hashes_batch(bts, SHINGLE_BUCKETS)
     return pd.Series(
@@ -119,6 +122,7 @@ def _features_batch(texts: pd.Series) -> pd.DataFrame:
     (dominant) shingle-hashing work and lets the caller materialize one
     small feature table instead of re-evaluating UDF lineage per join side.
     """
+    forget_zip_importers()
     bts = [(t or "").lower().encode("utf-8") for t in texts]
     shingles, doc_ids = char_trigram_hashes_batch(bts, SHINGLE_BUCKETS)
     n = len(texts)
@@ -165,16 +169,6 @@ MAX_BUCKET = 64  # LSH bucket-size cap (skew guard)
 
 # last persist()ed feature table (see jaccard_pairs) — evicted on next call
 _PERSISTED_FEATURES: DataFrame | None = None
-
-
-def _spread_scan(df: DataFrame) -> tuple[DataFrame, bool]:
-    """(df, did_spread): spread an under-partitioned, big-enough scan to
-    4×parallelism for the feature-UDF pass — byte-gated, see
-    language_identification_spark.partitioning.  The follow-up feature
-    compaction only fires when this did."""
-    from ..partitioning import spread_scan
-
-    return spread_scan(df)
 
 
 def _feat_parts(df: DataFrame) -> int:
@@ -298,7 +292,7 @@ def jaccard_pairs(
     scan is already partitioned and the spread is a no-op; the feature
     repartition then never fires either.
     """
-    df, did_spread = _spread_scan(df)
+    df, did_spread = spread_scan(df)
     f = features_udf(F.col(text_col))
     feat = df.select(
         F.col(id_col),
@@ -434,8 +428,8 @@ def incremental_jaccard_pairs(
     f = features_udf(F.col(text_col))
 
     # same scan-spread / feature-compaction split as jaccard_pairs (r06)
-    lake, lake_spread = _spread_scan(lake)
-    delta, delta_spread = _spread_scan(delta)
+    lake, lake_spread = spread_scan(lake)
+    delta, delta_spread = spread_scan(delta)
     did_spread = lake_spread or delta_spread
 
     def _feat(df: DataFrame) -> DataFrame:
@@ -831,6 +825,7 @@ def connected_components_star(
 
 def _simhash_batch(texts: pd.Series) -> pd.Series:
     """64-bit SimHash over char-3-shingle hashes (count-weighted)."""
+    forget_zip_importers()
     bts = [(t or "").lower().encode("utf-8") for t in texts]
     shingles, doc_ids = char_trigram_hashes_batch(bts, SHINGLE_BUCKETS)
     n = len(texts)

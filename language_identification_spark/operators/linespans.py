@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pyworker import forget_zip_importers
 from .islands import merge_islands, pad_boundaries
 
 BLOCK_LINES = 4  # lines per classification block
@@ -46,6 +47,7 @@ _SPAN_SCHEMA = ArrayType(
 
 
 def _line_spans_batch(content: pd.Series) -> pd.Series:
+    forget_zip_importers()
     from ..models.registry import get_models
 
     lid, _ = get_models()

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pyworker import forget_zip_importers
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -129,6 +131,7 @@ def _decode(kind: str, payload: bytes) -> np.ndarray:
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    forget_zip_importers()
     for pdf in batches:
         payloads = pdf["payload"]
         feats = [

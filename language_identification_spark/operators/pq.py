@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
+from ..pyworker import forget_zip_importers
+
 PQ_M = 8  # subspaces
 PQ_K = 16  # centroids per subspace
 PQ_ITERS = 3
@@ -128,6 +130,7 @@ def _pq_assign_udf(books: np.ndarray):
     B = np.ascontiguousarray(books, dtype=np.float64)
 
     def _assign(vecs: pd.Series) -> pd.Series:
+        forget_zip_importers()
         mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
         m, k, subdim = B.shape
         out = np.empty((len(mat), m), dtype=np.int32)

@@ -65,6 +65,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pyworker import forget_zip_importers
+
 PPM = 1_000_000
 
 # Gopher Table A1 thresholds, ppm
@@ -159,6 +161,7 @@ def gopher_repetition(
     names = [f.name for f in fields]
 
     def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             ids = pdf[id_col].tolist()
             texts = pdf[text_col].tolist()

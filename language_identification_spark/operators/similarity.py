@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from ..pyworker import forget_zip_importers
+
 N_PLANES = 12
 _DIM_DEFAULT = 64
 _rng = np.random.default_rng(777)
@@ -103,6 +105,7 @@ def _bucket_of(vecs: np.ndarray) -> np.ndarray:
 
 
 def _lsh_bucket_batch(vecs: pd.Series) -> pd.Series:
+    forget_zip_importers()
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
     return pd.Series(_bucket_of(mat), index=vecs.index)
 
@@ -112,6 +115,7 @@ lsh_bucket_udf = pandas_udf(_lsh_bucket_batch, LongType())
 
 def _ivf_cell_batch(vecs: pd.Series) -> pd.Series:
     """Nearest-centroid cell id per vector (normalized dot product)."""
+    forget_zip_importers()
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
@@ -166,6 +170,7 @@ _DUP_ROWS = 4
 
 def _dup_band_batch(vecs: pd.Series) -> pd.Series:
     """Per vector: array of 4 band keys (band index packed with sign bits)."""
+    forget_zip_importers()
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
     bits = (mat @ _DUP_PLANES[: mat.shape[1]] > 0).astype(np.int64)
     out = np.zeros((len(mat), _DUP_BANDS), dtype=np.int64)
@@ -358,6 +363,7 @@ def _cell_assign_udf(centroids: np.ndarray):
     C = np.ascontiguousarray(centroids, dtype=np.float64)
 
     def _assign(vecs: pd.Series) -> pd.Series:
+        forget_zip_importers()
         mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
         norms[norms == 0] = 1.0

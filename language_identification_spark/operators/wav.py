@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pyworker import forget_zip_importers
+
 TARGET_RATE = 16_000
 HEADROOM_DB = 3.0
 
@@ -177,6 +179,7 @@ def _convert_batches(
     _NULL_PROPS = (None, None, None, None)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in batches:
             convs = [conv_one(p) for p in pdf["payload"]]
             props = [

@@ -59,9 +59,11 @@ def spread_scan(
     mult = mult or SPREAD_MULT
     min_bytes = SPREAD_MIN_BYTES if min_bytes is None else min_bytes
     sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df, False  # already parallelism-wide — the production case
+    # both gates must pass; the byte gate goes first because it only lists
+    # the scan's files, while the partition count needs a plan→RDD hop
     nbytes = input_bytes(df)
     if nbytes is not None and nbytes < min_bytes:
         return df, False  # too small for the exchange to pay for itself
+    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
+        return df, False  # already parallelism-wide — the production case
     return df.repartition(sc.defaultParallelism * mult), True

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
 from ..config import DEFAULT_CONFIG, FilterConfig
 from ..functions.heuristics import cheap_drop_reason, with_heuristics
 from ..functions.lang import canon_lang_col, primary_lang_col
+from ..pyworker import forget_zip_importers
+from ..scrub.patterns import jvm_trigger
 
 # explicit StructTypes (not DDL strings) so the UDFs can be defined at import
 # time without an active SparkContext
@@ -63,6 +65,7 @@ _CHUNK = 512
 
 def _analyze_batch(content: pd.Series, active: pd.Series) -> pd.DataFrame:
     """langid + perplexity for one Arrow batch (runs on executors)."""
+    forget_zip_importers()
     from ..models.registry import get_models
 
     lid, lm = get_models()
@@ -102,12 +105,15 @@ def _analyze_batch(content: pd.Series, active: pd.Series) -> pd.DataFrame:
     return out
 
 
-def _scrub_batch(content: pd.Series, keep: pd.Series) -> pd.DataFrame:
+def _scrub_batch(content: pd.Series) -> pd.DataFrame:
+    """Scrub every non-NULL row; NULL rows (not triggered) come back NULL
+    with ``n_sub`` 0, so the plan passes their content through itself."""
+    forget_zip_importers()
     from ..scrub.scrubber import scrub_series
 
     # pretriggered: the JVM rlike trigger (exact union of the patterns)
-    # already gated every masked row — skip the redundant Python prefilter
-    scrubbed, n_sub = scrub_series(content, keep, pretriggered=True)
+    # already gated every non-NULL row — skip the redundant Python prefilter
+    scrubbed, n_sub = scrub_series(content, pretriggered=True)
     return pd.DataFrame({"text": scrubbed, "n_sub": n_sub}, index=content.index)
 
 
@@ -171,23 +177,19 @@ def quality_filter(
     # regex in Python is the slow path, so it's gated twice (kept AND
     # triggered).  Untriggered kept rows pass through unchanged by
     # definition of the trigger (it is the exact union of the patterns).
-    from ..scrub.patterns import TRIGGER_REGEX
-
-    needs_scrub = (
-        F.col("keep") & F.col("content").rlike(TRIGGER_REGEX)
-        if scrub_enabled
-        else F.lit(False)
-    )
-    scrub_input = F.when(needs_scrub, F.col("content")).otherwise(F.lit(""))
-    df = df.withColumn("sc_raw", scrub_udf(scrub_input, needs_scrub))
-    df = df.withColumn(
-        "sc",
-        F.when(needs_scrub, F.col("sc_raw")).otherwise(
-            F.struct(
-                F.col("content").alias("text"), F.lit(0).cast("long").alias("n_sub")
-            )
-        ),
-    )
+    # The trigger is evaluated once per row: the UDF gets NULL for every
+    # row it must not touch and returns NULL text for it, so the
+    # pass-through is a coalesce, not a second rlike.
+    if scrub_enabled:
+        triggered = F.col("keep") & jvm_trigger(F.col("content"))
+        df = df.withColumn("sc", scrub_udf(F.when(triggered, F.col("content"))))
+        n_redactions = F.col("sc.n_sub")
+        scrubbed = F.when(
+            F.col("keep"), F.coalesce(F.col("sc.text"), F.col("content"))
+        )
+    else:
+        n_redactions = F.lit(0).cast("long")
+        scrubbed = F.lit(None).cast("string")
     return df.select(
         "repo",
         "path",
@@ -200,15 +202,8 @@ def quality_filter(
         F.round(F.col("nlp.ppl"), 6).alias("ppl"),
         "keep",
         "drop_reason",
-        F.when(F.lit(scrub_enabled) & F.col("keep"), F.col("sc.n_sub"))
-        .otherwise(F.lit(0))
-        .alias("n_redactions"),
-        F.when(F.lit(scrub_enabled) & F.col("keep"), F.col("sc.text")).alias(
-            "scrubbed_content"
-        ),
+        n_redactions.alias("n_redactions"),
+        scrubbed.alias("scrubbed_content"),
         F.sha2(F.encode(F.col("content"), "UTF-8"), 256).alias("content_sha256"),
-        F.when(
-            F.lit(scrub_enabled) & F.col("keep"),
-            F.sha2(F.encode(F.col("sc.text"), "UTF-8"), 256),
-        ).alias("scrubbed_sha256"),
+        F.sha2(F.encode(scrubbed, "UTF-8"), 256).alias("scrubbed_sha256"),
     )

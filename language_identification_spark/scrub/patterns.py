@@ -56,9 +56,8 @@ PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 # Engine-neutral flag: Python compiles with re.ASCII so \b/\w/\s use the
-# ASCII tables — exactly java.util.regex defaults (the JVM trigger) and RE2
-# (the DuckDB oracle).  Without it, Python's Unicode-aware \b can match where
-# the JVM trigger does not, silently skipping rows from the scrub stage.
+# ASCII tables — as RE2 (the DuckDB oracle) does.  Without it, Python's
+# Unicode-aware \b can match where the other engines do not.
 PATTERN_FLAGS = re.ASCII | re.MULTILINE
 
 COMPILED: tuple[tuple[str, "re.Pattern[str]", str], ...] = tuple(
@@ -67,6 +66,24 @@ COMPILED: tuple[tuple[str, "re.Pattern[str]", str], ...] = tuple(
 
 # union of all patterns — used as a JVM-side (Java regex) scrub trigger so
 # the Python scrub stage only ever sees rows that contain a candidate match.
-# Every construct used above ((?i:..), \b, [0-9] classes, lazy quantifiers)
-# parses identically in java.util.regex, Python re (ASCII mode), and RE2.
+# (?i:..), [0-9] classes, \s and lazy quantifiers parse identically in
+# java.util.regex, Python re (ASCII mode) and RE2; \b does not (below).
 TRIGGER_REGEX = "|".join(f"(?:{p})" for _n, p, _r in PATTERNS)
+
+
+def jvm_trigger(content):
+    r"""Column: does ``content`` contain a match of any pattern, by the
+    ASCII rules the scrubber and the labeler use?
+
+    Java 17's ``\b`` counts non-ASCII letters (``é``, ``ñ``) as word
+    characters, so ``éAKIA…`` or ``ñ10.0.0.1`` would not trigger although
+    Python's ``re.ASCII`` scrubs them.  Every non-ASCII code point is mapped
+    to U+0001 first: one ASCII non-word, non-space character, which every
+    pattern treats exactly as the original code point under ASCII rules.
+    The mapping is linear and leaves ``PATTERNS`` (the oracles' input)
+    unchanged."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(content, r"[^\x00-\x7F]", "\u0001").rlike(
+        TRIGGER_REGEX
+    )

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pyworker import forget_zip_importers
+
 STATE_SCHEMA = StructType(
     [
         StructField("label", StringType()),
@@ -77,6 +79,7 @@ def make_merge_islands_stateful(max_gap: int | float = float("inf")):
     def merge_fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         k = key[0]
         closed: list[tuple] = []
 
@@ -205,6 +208,7 @@ def make_merge_islands_eventtime(
     def merge_fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         k = key[0]
         closed: list[tuple] = []
         if state.exists:

@@ -49,6 +49,15 @@ def test_two_arrow_stages_zero_shuffles(spark, parquet_src):
     assert "Exchange" not in plan
 
 
+def test_scrub_trigger_evaluated_once(spark, parquet_src):
+    # the pass-through decision comes from the scrub UDF's NULL output, so
+    # the trigger regex is in the plan once (the UDF's argument), not twice
+    from language_identification_spark.scrub.patterns import TRIGGER_REGEX
+
+    out = quality_filter(spark.read.parquet(parquet_src))
+    assert _formatted_plan(out).count(TRIGGER_REGEX) == 1
+
+
 def test_jaccard_pairs_single_udf_evaluation(spark, parquet_src):
     # VERDICT r01 "what's wrong" #1: the self-join + two set joins must read
     # ONE materialized feature table, not re-evaluate UDF lineage per side.

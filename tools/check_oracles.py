@@ -2,17 +2,19 @@
 
 Runs every ``queries()`` entry at sf0.01 and compares row count, column
 names, and order-insensitive values against ``oracle_sql()`` where present.
-Usage: python tools/check_oracles.py [sf_dir] [only_query]
+Usage: python tools/check_oracles.py [sf_dir] [query[,query...]]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -31,15 +33,17 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # data-dependent oracle generators (ivf_topk_trained) derive constants
     # from the oracle-side tables — point them at the same sf_dir
-    import os
-
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    only = sys.argv[2] if len(sys.argv) > 2 else None
+    # the Python workers import the package too; they inherit the JVM's env
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
+    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
     import __spark_entry__ as entrymod
     from language_identification_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cores=8)
+    spark = get_spark("oracle-check")  # cores: SPARK_GRAFT_CPUS, else all
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
@@ -50,7 +54,7 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
-        if only and name != only:
+        if only and name not in only:
             continue
         try:
             got = fn(spark, sf_dir).toPandas()
