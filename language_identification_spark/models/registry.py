@@ -3,59 +3,25 @@
 The reference ships its models inside containers started once per host
 (``/root/reference/scripts/run-containers.ps1:35-45``); here the models are
 deterministic functions of the seed corpus, so instead of shipping weight
-files we rebuild them once per Python worker process on first use (a few ms)
-and cache at module level.  Every Spark executor worker and the single-process
-labeler therefore see byte-identical weights.
+files we rebuild them once per Python worker process on first use
+(~0.2 s) and keep them for the life of that process.  Nothing is cached
+on disk, so no stale file can ever be served.  Every Spark executor worker
+and the single-process labeler therefore see byte-identical weights.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
-import numpy as np
+import functools
 
 from ..datagen.corpus import training_corpus
 from . import langid, perplexity
 
-_CACHE: dict[str, object] = {}
-
 # bump when anything upstream of the weights changes (hashing spec, corpus,
-# smoothing) — stale disk caches must never be read
+# smoothing) — names the committed weight assets (tools/export_weights.py)
 _WEIGHTS_VERSION = "v3"  # v3: fixed-width zero-padded word hashing
 
 
-def _disk_cache_path() -> str:
-    return os.path.join(
-        tempfile.gettempdir(), f"lid_spark_models_{_WEIGHTS_VERSION}.npz"
-    )
-
-
-def _train() -> tuple["langid.LangIdModel", "perplexity.BigramLM"]:
+@functools.cache
+def get_models() -> tuple["langid.LangIdModel", "perplexity.BigramLM"]:
     corpus = training_corpus()
     return langid.train(corpus), perplexity.train(corpus)
-
-
-def get_models() -> tuple["langid.LangIdModel", "perplexity.BigramLM"]:
-    if "langid" not in _CACHE:
-        path = _disk_cache_path()
-        try:
-            z = np.load(path, allow_pickle=False)
-            lid = langid.LangIdModel(
-                langs=tuple(str(l) for l in z["langs"]), logp=z["lid_logp"]
-            )
-            lm = perplexity.BigramLM(
-                langs=tuple(str(l) for l in z["langs"]), logp=z["ppl_logp"]
-            )
-        except (OSError, KeyError, ValueError):
-            lid, lm = _train()
-            # atomic publish so 32 concurrently-starting workers never read
-            # a half-written file; losers of the race just overwrite equally
-            tmp = path + f".{os.getpid()}.tmp.npz"  # .npz so savez keeps the name
-            np.savez(
-                tmp, langs=np.array(lid.langs), lid_logp=lid.logp, ppl_logp=lm.logp
-            )
-            os.replace(tmp, path)
-        _CACHE["langid"] = lid
-        _CACHE["ppl"] = lm
-    return _CACHE["langid"], _CACHE["ppl"]  # type: ignore[return-value]

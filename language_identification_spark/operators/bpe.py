@@ -32,8 +32,9 @@ is scan-side, the word groupBy shuffles words not documents).  Each of
 the ``n_merges`` iterations is one job over the cached word table; the
 Exchange carries partial pair counts (O(local pair vocab) rows per
 partition).  The iteration's rewrite is whole-stage-codegen string ops —
-no UDF, no Python on the hot path.  Per-iteration state handoff persists
-the new symbol column and unpersists the old, so lineage stays O(1) deep.
+no UDF, no Python on the hot path.  Every ``cut_every`` merges the
+symbol table is materialized (``partitioning.materialize``), so lineage
+stays bounded.
 
 Reference parity: the reference engine has no tokenizer-training stage;
 this operator is part of the LLM-training-data extension surface (same
@@ -45,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import materialize
 from ..pyworker import forget_zip_importers
 
 END_OF_WORD = "</w>"
@@ -118,23 +120,7 @@ def _bpe_train_with_words(
     if cut_every <= 0:
         raise ValueError(f"cut_every must be positive, got {cut_every}")
 
-    def _cut(d: DataFrame) -> DataFrame:
-        # lineage cut: unlike PageRank's geometric plan growth, the merge
-        # chain references its input ONCE per iteration, so the plan only
-        # deepens linearly — but at production merge counts (10^3+) an
-        # uncut chain still makes Catalyst analysis quadratic-total and
-        # codegen depth unbounded.  Cutting every ``cut_every`` rounds
-        # bounds plan depth at ~3*cut_every string ops while paying the
-        # materialization cost 1/cut_every as often as an every-round
-        # cut.  Reliable checkpoint when a checkpoint dir is configured,
-        # localCheckpoint otherwise (same policy as pagerank_int /
-        # connected_components).
-        sc = d.sparkSession.sparkContext
-        if sc.getCheckpointDir():
-            return d.checkpoint(eager=True)
-        return d.localCheckpoint(eager=True)
-
-    cur = _cut(
+    cur = materialize(
         word_freqs(df, text_col=text_col, lowercase=lowercase).select(
             "word", "freq", initial_symbols(F.col("word")).alias("sym")
         )
@@ -152,8 +138,15 @@ def _bpe_train_with_words(
         a, b, cnt = best[0]["a"], best[0]["b"], best[0]["cnt"]
         merges.append((rank, a, b, int(cnt)))
         cur = cur.withColumn("sym", _merge_expr(F.col("sym"), a, b))
+        # lineage cut: unlike PageRank's geometric plan growth, the merge
+        # chain references its input ONCE per iteration, so the plan only
+        # deepens linearly — but at production merge counts (10^3+) an
+        # uncut chain still makes Catalyst analysis quadratic-total and
+        # codegen depth unbounded.  Cutting every ``cut_every`` rounds
+        # bounds plan depth at ~3*cut_every string ops while paying the
+        # materialization cost 1/cut_every as often as an every-round cut.
         if rank % cut_every == 0:
-            cur = _cut(cur)
+            cur = materialize(cur)
     mdf = spark.createDataFrame(
         merges, "merge_rank int, left string, right string, pair_count long"
     )

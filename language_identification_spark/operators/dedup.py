@@ -19,6 +19,7 @@ Generator; shingle hashing is the shared FNV spec in ``hashing.py``.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -29,7 +30,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..hashing import char_trigram_hashes_batch
-from ..partitioning import spread_scan
+from ..partitioning import materialize, spread_scan
 from ..pyworker import forget_zip_importers
 
 SHINGLE_BUCKETS = 1 << 31  # shingle space for minhash/jaccard
@@ -46,20 +47,13 @@ _MASK63 = np.uint64((1 << 63) - 1)
 
 def _chunked(fn, chunk: int = 1024):
     """Process a pandas Series in bounded chunks — keeps each call's numpy
-    working set small and recycled (same rationale as pipeline._CHUNK)."""
+    working set small and recycled (same rationale as pipeline._CHUNK).
+    ``fn`` may return a Series or a DataFrame (``pd.concat`` joins both);
+    the wrapper carries ``fn``'s type hints, from which ``pandas_udf``
+    infers the UDF kind."""
 
-    def wrapper(s: pd.Series) -> pd.Series:
-        if len(s) <= chunk:
-            return fn(s)
-        return pd.concat([fn(s.iloc[i : i + chunk]) for i in range(0, len(s), chunk)])
-
-    return wrapper
-
-
-def _chunked_df(fn, chunk: int = 1024):
-    """`_chunked` for pd.DataFrame-returning batch functions."""
-
-    def wrapper(s: pd.Series) -> pd.DataFrame:
+    @functools.wraps(fn)
+    def wrapper(s):
         if len(s) <= chunk:
             return fn(s)
         return pd.concat([fn(s.iloc[i : i + chunk]) for i in range(0, len(s), chunk)])
@@ -152,7 +146,7 @@ _FEATURES_SCHEMA = StructType(
         StructField("sh", ArrayType(LongType())),
     ]
 )
-features_udf = pandas_udf(_chunked_df(_features_batch), _FEATURES_SCHEMA)
+features_udf = pandas_udf(_chunked(_features_batch), _FEATURES_SCHEMA)
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -167,12 +161,9 @@ def minhash_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 MAX_BUCKET = 64  # LSH bucket-size cap (skew guard)
 
-# last persist()ed feature table (see jaccard_pairs) — evicted on next call
-_PERSISTED_FEATURES: DataFrame | None = None
-
 
 def _feat_parts(df: DataFrame) -> int:
-    """Bounded partition count for a persisted feature table whose source
+    """Bounded partition count for a materialized feature table whose source
     scan had to be spread: the downstream band/verify stages run fastest
     on few fat partitions of this ~100x-smaller-than-content table
     (interleaved A/B at sf1.0: 8 parts 14.4 s, 16 parts 16.2 s, 32 parts
@@ -264,13 +255,13 @@ def jaccard_pairs(
     """Exact char-3-shingle Jaccard over LSH candidate pairs.
 
     Signatures and distinct-shingle sets come out of ONE UDF pass over the
-    content, and that small feature table is materialized exactly once —
-    ``persist()`` by default, or a parquet staging table when
-    ``staging_path`` is given (the 100 TB path: features are ~100x smaller
-    than content, and a staged table survives executor loss without lineage
-    recompute).  The self-join and both verification joins then read the
-    materialized features; the UDF never re-evaluates and content never
-    shuffles.
+    content, and that small feature table is materialized exactly once by
+    ``partitioning.materialize`` — a lineage-cutting checkpoint by
+    default, or a parquet staging table when ``staging_path`` is given
+    (the 100 TB path: features are ~100x smaller than content, and a
+    staged table survives executor loss without lineage recompute).  The
+    self-join and both verification joins then read the materialized
+    features; the UDF never re-evaluates and content never shuffles.
 
     Exact verification is collapsed by content hash: training corpora are
     exact-dup-heavy, so candidate pairs repeat the same (set_a, set_b)
@@ -287,7 +278,7 @@ def jaccard_pairs(
     (more tasks than work).  The two are decoupled: when the input scan
     is under-partitioned, spread it to 4×parallelism for the UDF pass,
     then round-robin the ~100x-smaller feature table down to a bounded
-    partition count before persisting (interleaved A/B at sf1.0:
+    partition count before materializing (interleaved A/B at sf1.0:
     14.4 s vs 19.2 s raw vs 30.7 s spread-only).  At production scale the
     scan is already partitioned and the spread is a no-op; the feature
     repartition then never fires either.
@@ -309,27 +300,9 @@ def jaccard_pairs(
             256,
         ).alias("ch"),
     )
-    if staging_path is not None:
-        feat.write.mode("overwrite").parquet(staging_path)
-        feat = df.sparkSession.read.parquet(staging_path)
-    else:
-        from pyspark import StorageLevel
-
-        if did_spread:
-            feat = feat.repartition(_feat_parts(feat))
-        # repeated calls in one session (bench min-of-3, run loops) must not
-        # accumulate cached feature tables in executor storage (ADVICE r02):
-        # evict the previous call's table before persisting this one.  Long
-        # sessions wanting full control use staging_path instead.
-        global _PERSISTED_FEATURES
-        if _PERSISTED_FEATURES is not None:
-            try:
-                _PERSISTED_FEATURES.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — e.g. its session already stopped
-                pass
-        feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_FEATURES = feat
-        feat.count()  # eager: one computation, visible to every branch below
+    if staging_path is None and did_spread:
+        feat = feat.repartition(_feat_parts(feat))
+    feat = materialize(feat, staging_path)
     pairs = _pairs_from_bands(
         _band_table(feat.select(id_col, "sig"), id_col, max_bucket), id_col
     )
@@ -452,9 +425,7 @@ def incremental_jaccard_pairs(
         # committed (_SUCCESS) staging parquet is read as-is.  Callers own
         # invalidation (delete the directory when the lake changes) — the
         # same convention as the jobs' _done() stage handoff.
-        import os as _os
-
-        if not _os.path.exists(_os.path.join(lake_staging, "_SUCCESS")):
+        if not os.path.exists(os.path.join(lake_staging, "_SUCCESS")):
             feat_lake.write.mode("overwrite").parquet(lake_staging)
         feat_lake = lake.sparkSession.read.parquet(lake_staging)
     feat = feat_lake.withColumn("is_delta", F.lit(False)).unionByName(
@@ -462,33 +433,27 @@ def incremental_jaccard_pairs(
     )
     if did_spread:
         feat = feat.repartition(_feat_parts(feat))
-    feat = feat.persist()
-    feat.count()
-    try:
-        bands = _band_table(
-            feat.select(id_col, "sig"), id_col, max_bucket
-        ).join(feat.select(id_col, "is_delta"), id_col)
-        a, b = bands.alias("a"), bands.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                # at least one delta side: lake×lake never materializes
-                & (F.col("a.is_delta") | F.col("b.is_delta")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
+    feat = materialize(feat)
+    bands = _band_table(
+        feat.select(id_col, "sig"), id_col, max_bucket
+    ).join(feat.select(id_col, "is_delta"), id_col)
+    a, b = bands.alias("a"), bands.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            # at least one delta side: lake×lake never materializes
+            & (F.col("a.is_delta") | F.col("b.is_delta")),
         )
-        out = _verify_candidate_pairs(pairs, feat, id_col, threshold)
-        # materialize before unpersisting the feature table the plan reads
-        return out.localCheckpoint(eager=True)
-    finally:
-        feat.unpersist()
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+    return _verify_candidate_pairs(pairs, feat, id_col, threshold)
 
 
 def winnow_dup_pairs(
@@ -516,12 +481,12 @@ def winnow_dup_pairs(
     yield 10^10 pairs).  Content never shuffles.
 
     ``staging_path``: like ``jaccard_pairs``, materialize the small
-    (id, fp-array) feature table to parquet instead of
-    ``localCheckpoint`` — the cluster default (see ``jobs/run_dedup.py``):
-    localCheckpoint blocks are non-replicated executor-local state, so on a
-    real cluster losing one executor mid-join kills the job instead of
-    recomputing (VERDICT r04); a staged parquet table survives executor
-    loss and is ~100x smaller than content.
+    (id, fp-array) feature table to parquet instead of a checkpoint — the
+    cluster default (see ``jobs/run_dedup.py``): localCheckpoint blocks are
+    non-replicated executor-local state, so on a real cluster losing one
+    executor mid-join kills the job instead of recomputing (VERDICT r04); a
+    staged parquet table survives executor loss and is ~100x smaller than
+    content.
     """
     from pyspark.sql import Window
 
@@ -537,14 +502,8 @@ def winnow_dup_pairs(
     # pegging the driver in optimization/codegen for minutes (observed:
     # >400 s vs 4 s for the fingerprint computation itself).
     # The materialization makes the tiny (id, fp-array) table a leaf scan
-    # for all downstream plans: parquet staging when a path is given (the
-    # cluster-safe default in jobs/run_dedup.py), localCheckpoint otherwise
-    # (fine single-node; non-replicated on a cluster).
-    if staging_path is not None:
-        fps.write.mode("overwrite").parquet(staging_path)
-        fps = df.sparkSession.read.parquet(staging_path)
-    else:
-        fps = fps.localCheckpoint(eager=True)
+    # for all downstream plans.
+    fps = materialize(fps, staging_path)
     posting = fps.select(F.col(id_col), F.explode("winnow_fp").alias("fp"))
     bucket = F.count(F.lit(1)).over(Window.partitionBy("fp"))
     posting = (
@@ -625,7 +584,7 @@ def connected_components(
     fixpoint (count of changed labels == 0, checked driver-side — a scalar
     per round, not row data).
 
-    Lineage is truncated with ``localCheckpoint`` every round — WITHOUT it
+    Lineage is truncated with ``materialize`` every round — WITHOUT it
     each iteration's logical plan nests the previous one and Catalyst
     re-analysis time grows super-linearly (the well-known iterative-
     algorithm pitfall; the un-truncated loop took minutes at 500 nodes).
@@ -636,14 +595,15 @@ def connected_components(
     regardless of diameter.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    comp = (
+    sym = materialize(
+        e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    )
+    comp = materialize(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         # convergence detection rides the propagation job as an Observation
@@ -660,7 +620,7 @@ def connected_components(
         )
         tagged = comp.withColumn("own", F.lit(True)).unionByName(neighbor)
         obs = Observation()
-        new_comp = (
+        new_comp = materialize(
             tagged.groupBy("node")
             .agg(
                 F.min("comp").alias("comp"),
@@ -674,7 +634,6 @@ def connected_components(
                 ).alias("changed"),
             )
             .select("node", "comp")
-            .localCheckpoint()
         )
         changed = int(obs.get["changed"])
         comp = new_comp
@@ -715,23 +674,16 @@ def connected_components_star(
     # node set derive from it, and deriving either from the uncheckpointed
     # plan would re-execute the full upstream pair-mining pipeline (minhash,
     # banding, verification) a second time just to list endpoints
-    raw = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).localCheckpoint()
-    e = (
-        raw.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    raw = materialize(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
+    e = materialize(raw.filter(F.col("u") != F.col("v")).distinct())
     # node set from the UNFILTERED endpoints: a node whose only pair is a
     # self-pair (u == v) still satisfies the "every endpoint of ``pairs``
     # appears" contract — it must come out as its own singleton component,
     # exactly as connected_components returns it
-    nodes = (
+    nodes = materialize(
         raw.select(F.col("u").alias("node"))
         .unionByName(raw.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     # r06 negative result (guide §1): broadcasting the per-round min-label
     # tables was tried and measured 4x SLOWER on fork_collapse at sf1.0
@@ -791,17 +743,14 @@ def connected_components_star(
     for _ in range(max_iter):
         # convergence detection rides the round's lineage-cut job as an
         # Observation (same pattern as connected_components): the edge-set
-        # fingerprint is aggregated WHILE localCheckpoint materializes the
+        # fingerprint is aggregated WHILE ``materialize`` cuts the
         # round — one job per round instead of contract + a second pass over
         # the materialized edges.  Locally neutral (~5.1s either way at
         # sf0.1; re-reading checkpointed blocks is cheap), but the saved
         # pass scales with |E| where the old one re-scanned the full edge
         # set every round.
         obs = Observation()
-        e = (
-            _small_star(_large_star(e)).observe(obs, *_FP_METRICS)
-            .localCheckpoint()
-        )
+        e = materialize(_small_star(_large_star(e)).observe(obs, *_FP_METRICS))
         row = obs.get
         new_fp = (int(row["n"]), int(row["h"] or 0))
         if new_fp == fp:
@@ -868,11 +817,6 @@ def simhash_buckets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return out
 
 
-# last persist()ed simhash sig table (see simhash_dup_pairs) — evicted on
-# the next call, same discipline as _PERSISTED_FEATURES
-_PERSISTED_SIMHASH: DataFrame | None = None
-
-
 def simhash_dup_pairs(
     df: DataFrame,
     text_col: str,
@@ -892,19 +836,12 @@ def simhash_dup_pairs(
     ever shuffles, content stays in place.
 
     The (id, simhash) table is ~16 bytes/row, so it is materialized exactly
-    once — ``persist()`` by default, or a parquet staging table when
-    ``staging_path`` is given (the cluster path: survives executor loss
-    without lineage recompute) — and the self-join reads the materialized
-    fingerprints; without this the fingerprint UDF would re-evaluate over
-    the full content on BOTH join sides.
-
-    Cache-slot caveat (ADVICE r05): only the LATEST call's result keeps
-    the single-UDF-pass plan — each call evicts the previous call's
-    persisted signature table (the bench/runner discipline that stops
-    cached copies accumulating), so re-executing an EARLIER returned
-    DataFrame after a newer call silently recomputes fingerprints on both
-    join sides (slower, never wrong).  Long-lived multi-result sessions
-    should pass ``staging_path`` instead.
+    once by ``partitioning.materialize`` — a lineage-cutting checkpoint by
+    default, or a parquet staging table when ``staging_path`` is given (the
+    cluster path: survives executor loss without lineage recompute) — and
+    the self-join reads the materialized fingerprints; without this the
+    fingerprint UDF would re-evaluate over the full content on BOTH join
+    sides.
 
     ``max_bucket`` is the same dense-cluster skew guard as the MinHash LSH
     path (a bucket of c members yields c²/2 join rows); members of a capped
@@ -929,21 +866,7 @@ def simhash_dup_pairs(
     sigs = df.select(
         F.col(id_col), simhash_udf(F.col(text_col)).alias("simhash")
     )
-    if staging_path is not None:
-        sigs.write.mode("overwrite").parquet(staging_path)
-        sigs = df.sparkSession.read.parquet(staging_path)
-    else:
-        from pyspark import StorageLevel
-
-        global _PERSISTED_SIMHASH
-        if _PERSISTED_SIMHASH is not None:
-            try:
-                _PERSISTED_SIMHASH.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — e.g. its session already stopped
-                pass
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_SIMHASH = sigs
-        sigs.count()  # eager: one UDF pass, visible to both join sides
+    sigs = materialize(sigs, staging_path)
     posts = sigs.select(
         F.col(id_col),
         F.col("simhash"),

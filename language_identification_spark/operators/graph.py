@@ -32,8 +32,8 @@ O(files x imports-per-file) but immediately collapsed to distinct
 content never shuffles.  The rank table is O(#repos) (tens of millions
 of rows at GitHub scale — megabytes), so every per-iteration join is
 broadcast-able; only the one-time edge aggregation shuffles at corpus
-scale.  Each iteration's state handoff persists the new rank table and
-unpersists the old, keeping lineage O(1) deep.
+scale.  Each iteration's state handoff cuts the lineage
+(``partitioning.materialize``), keeping it O(1) deep.
 
 Reference parity: the reference engine has no graph stage; this is part
 of the LLM-training-data extension surface (repo-level curation, same
@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..partitioning import materialize
 
 SCALE = 1_000_000_000  # ppb rank mass
 IMPORT_RE = r"(?m)^(?:import|from)[ ]+([A-Za-z_][A-Za-z0-9_.]*)"
@@ -157,16 +159,9 @@ def topo_layers(
     partial-aggregated groupBy over the edge list joined to the current
     assignment on short keys.  Content never enters; the tables carry
     (id, id) and (id, long).  Per-round lineage is cut exactly like
-    ``pagerank_int`` (checkpoint dir on clusters, localCheckpoint
-    locally) so Catalyst analysis stays O(1) per iteration.
+    ``pagerank_int`` (``partitioning.materialize``) so Catalyst analysis
+    stays O(1) per iteration.
     """
-
-    def _cut(df: DataFrame) -> DataFrame:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir():
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     nodes = nodes.persist()
     if nodes.isEmpty():
         nodes.unpersist()
@@ -181,7 +176,7 @@ def topo_layers(
     # tiny shuffle it replaces.  Kept as shuffle joins.
 
     obs0 = Observation()
-    assigned = _cut(
+    assigned = materialize(
         nodes.join(
             edges.select(F.col("dst").alias("node")).distinct(),
             "node",
@@ -223,7 +218,7 @@ def topo_layers(
             # exactly "assignment count unchanged" — one job per round
             # instead of a separate isEmpty() probe plus the cut
             obs = Observation()
-            new_assigned = _cut(
+            new_assigned = materialize(
                 assigned.unionByName(ready).observe(
                     obs, F.count(F.lit(1)).alias("n")
                 )
@@ -275,19 +270,6 @@ def pagerank_int(
     ed = edges.join(outdeg, "src").persist()
     ed.count()
 
-    def _cut(df: DataFrame) -> DataFrame:
-        # LINEAGE CUT, not just a cache: each iteration's plan embeds the
-        # previous ranks subtree three times (dangling anti-join, inflow
-        # join, next-rank join), so without truncation the logical plan —
-        # and Catalyst's analysis time — grows geometrically with
-        # iterations even though persist() caches the data.  Reliable
-        # checkpoint when a checkpoint dir is configured (cluster path),
-        # localCheckpoint otherwise (single-node path).
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir():
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # dangling-ness (no out-edges) is a static property of the node set:
     # flag it ONCE, carry the flag in the ranks table, and collect each
     # round's dangling mass as an Observation on the materialization the
@@ -310,7 +292,7 @@ def pagerank_int(
         ).alias("dangling")
 
     obs0 = Observation()
-    ranks = _cut(
+    ranks = materialize(
         flagged.select(
             "node", F.lit(SCALE // n).cast("long").alias("rank_ppb"), "has_out"
         ).observe(obs0, _dang_metric())
@@ -329,7 +311,13 @@ def pagerank_int(
                 .agg(F.sum("contrib").alias("inflow"))
             )
             obs = Observation()
-            ranks = _cut(
+            # LINEAGE CUT, not just a cache: each iteration's plan embeds
+            # the previous ranks subtree three times (dangling anti-join,
+            # inflow join, next-rank join), so without truncation the
+            # logical plan — and Catalyst's analysis time — grows
+            # geometrically with iterations even though persist() would
+            # cache the data.
+            ranks = materialize(
                 flagged.join(inflow, "node", "left").select(
                     "node",
                     (

@@ -21,12 +21,11 @@ Spark-first shape, and why it scales:
 * Query terms are a handful of literals; per-term tf is
   ``size(filter(words, w -> w = term))`` — whole-stage codegen, no UDF.
 
-The corpus is scanned twice (stats, then score).  That is deliberate:
-persisting the tokenized corpus to skip one scan trades cluster memory
-or storage for a scan of data that parquet reads back at NVMe speed —
-the right call only when the same corpus serves MANY queries, in which
-case the caller should stage ``with_words`` output once and pass
-``text_is_words=True``.
+The corpus is scanned once: ``bm25_topk`` materializes the small
+(id, doc length, per-term tf) table when it is called (one job, via
+``partitioning.materialize``) and both passes read that.  When the same
+corpus serves MANY queries, stage ``with_words`` output once and pass
+``text_is_words=True`` so each query skips the tokenization too.
 
 No reference analog: part of the LLM-training-data extension surface.
 """
@@ -37,13 +36,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from language_identification_spark.operators.decontaminate import with_words
+from language_identification_spark.partitioning import materialize
 
 # Lucene defaults
 K1 = 1.2
 B = 0.75
-
-# last persist()ed tokenized tf table (see bm25_topk) — evicted next call
-_PERSISTED_BM25: DataFrame | None = None
 
 
 def bm25_topk(
@@ -87,20 +84,12 @@ def bm25_topk(
         F.size(F.filter(words, _eq(t))).alias(f"_tf_{i}")
         for i, t in enumerate(terms)
     ]
-    base = base.select(F.col(id_col), F.size(words).alias("_dl"), *tf_cols)
     # r06 (guide §5): both the stats aggregation and the scoring pass read
-    # ``base`` — without a persist the tokenize+per-term-tf scan runs twice.
-    # The table is (id, k+1 ints) — ~100x smaller than content.  Single-slot
-    # eviction like dedup._PERSISTED_FEATURES so repeated bench runs don't
-    # accumulate cached copies.
-    global _PERSISTED_BM25
-    if _PERSISTED_BM25 is not None:
-        try:
-            _PERSISTED_BM25.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001
-            pass
-    base = base.persist()
-    _PERSISTED_BM25 = base
+    # ``base`` — without materializing it the tokenize+per-term-tf scan runs
+    # twice.  The table is (id, k+1 ints) — ~100x smaller than content.
+    base = materialize(
+        base.select(F.col(id_col), F.size(words).alias("_dl"), *tf_cols)
+    )
 
     # pass 1: k+2 scalars out of a full scan (map-side partial agg)
     stats = base.agg(

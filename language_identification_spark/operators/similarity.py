@@ -19,11 +19,12 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from ..partitioning import materialize
 from ..pyworker import forget_zip_importers
 
 N_PLANES = 12
@@ -192,10 +193,6 @@ _DUP_BROADCAST_MAX_ROWS = int(
     os.environ.get("SPARK_GRAFT_DUP_BROADCAST_MAX_ROWS", "1000000")
 )
 
-# last persist()ed banded-feature table — evicted on the next call (same
-# single-slot discipline as dedup._PERSISTED_FEATURES)
-_PERSISTED_DUP_FEAT: DataFrame | None = None
-
 
 def cosine_dup_pairs(
     df: DataFrame, threshold: float = 0.9,
@@ -209,7 +206,9 @@ def cosine_dup_pairs(
     §2.3/§2.4/§4):
 
     - The banded feature table ``(id, vec, norm, b0..b3)`` is computed by
-      ONE UDF pass and persisted; the norm is precomputed per VECTOR
+      ONE UDF pass and materialized (``partitioning.materialize``; the
+      row count for the broadcast gate is observed on that same job); the
+      norm is precomputed per VECTOR
       instead of twice per candidate pair.
     - Vectors and band keys travel together through the explode, so the
       band self-join verifies candidates IN PLACE — the two per-pair
@@ -235,6 +234,7 @@ def cosine_dup_pairs(
       ``SPARK_GRAFT_DUP_BROADCAST_MAX_ROWS`` env) it falls back to the
       shuffle join on the band key.
     """
+    obs = Observation()
     feat = df.select(
         F.col(id_col), F.col(vec_col), dup_band_udf(F.col(vec_col)).alias("bands")
     ).select(
@@ -247,15 +247,8 @@ def cosine_dup_pairs(
         _norm_hof(F.col(vec_col)).alias("_nrm"),
         *[F.col("bands").getItem(j).alias(f"_b{j}") for j in range(_DUP_BANDS)],
     )
-    global _PERSISTED_DUP_FEAT
-    if _PERSISTED_DUP_FEAT is not None:
-        try:
-            _PERSISTED_DUP_FEAT.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — e.g. its session already stopped
-            pass
-    feat = feat.persist()
-    n_rows = feat.count()
-    _PERSISTED_DUP_FEAT = feat
+    feat = materialize(feat.observe(obs, F.count(F.lit(1)).alias("n")))
+    n_rows = obs.get["n"]
     keys = feat.select(
         F.col(id_col),
         F.col("_vd"),

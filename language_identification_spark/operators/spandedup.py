@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..partitioning import materialize
+
 
 def _tokens(text_col: str) -> Column:
     # literal single-space split, matching string_split(text, ' ') in
@@ -112,8 +114,7 @@ def mark_repeated_spans(
         F.col(id_col), F.posexplode(gram_hashes).alias("_p0", "_g")
     ).select(id_col, (F.col("_p0") + 1).alias("_i"), "_g")
     if staging_path is not None:
-        posting.write.mode("overwrite").parquet(staging_path)
-        posting = docs.sparkSession.read.parquet(staging_path)
+        posting = materialize(posting, staging_path)
     dup = (
         posting.groupBy("_g")
         .agg(F.countDistinct(id_col).alias("_nd"))

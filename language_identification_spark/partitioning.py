@@ -1,4 +1,5 @@
-"""Scan-parallelism guards (r06, guide §2.5 / §6).
+"""Scan-parallelism guards (r06, guide §2.5 / §6) and ``materialize``,
+the one lifetime rule for intermediates a returned DataFrame reads.
 
 The driver's sf tables are SINGLE-row-group parquet files, so a scan
 yields 1-2 partitions regardless of scale factor — ``maxPartitionBytes``
@@ -67,3 +68,30 @@ def spread_scan(
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df, False  # already parallelism-wide — the production case
     return df.repartition(sc.defaultParallelism * mult), True
+
+
+def materialize(df: DataFrame, staging_path: str | None = None) -> DataFrame:
+    """Compute ``df`` once; return a DataFrame that reads the result.
+
+    - ``staging_path``: write parquet there and read it back (survives
+      executor loss; the path belongs to the caller);
+    - else, with a checkpoint dir configured: ``checkpoint(eager=True)``
+      (reliable, replicated storage — the cluster path);
+    - else ``localCheckpoint(eager=True)`` (executor-local blocks: a lost
+      executor fails the job instead of recomputing).
+
+    Either way the returned plan is a leaf scan of the result, so the
+    lineage is cut and nothing upstream (e.g. a Python UDF) re-runs.  No
+    caller evicts or releases anything, so a later call can never change
+    what an earlier returned DataFrame computes: Spark's ContextCleaner
+    drops localCheckpoint blocks once nothing references them, reliable
+    checkpoint files follow the checkpoint dir's cleanup policy
+    (``spark.cleaner.referenceTracking.cleanCheckpoints``), and staged
+    parquet belongs to the caller's path.
+    """
+    if staging_path is not None:
+        df.write.mode("overwrite").parquet(staging_path)
+        return df.sparkSession.read.parquet(staging_path)
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -13,6 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM, capped at 24g, as a Spark size string.
+
+    A fixed 24g let G1 grow the local-mode JVM (driver + executors) past
+    the RAM of a 15 GB host until the kernel's OOM killer ended the run.
+    ``SPARK_DRIVER_MEM`` overrides this per deployment.
+    """
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(_DRIVER_MEM_CAP_MB, ram // 2 // (1 << 20))}m"
+
 
 def get_spark(app: str = "language_identification_spark",
               cores: int | None = None,
@@ -55,7 +71,10 @@ def get_spark(app: str = "language_identification_spark",
         .config("spark.speculation.quantile", "0.9")
         .config("spark.task.reaper.enabled", "true")
         .config("spark.task.reaper.killTimeout", "60s")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.python.worker.reuse", "true")
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "536870912")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "536870912")

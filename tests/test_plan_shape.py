@@ -61,10 +61,9 @@ def test_scrub_trigger_evaluated_once(spark, parquet_src):
 def test_jaccard_pairs_single_udf_evaluation(spark, parquet_src):
     # VERDICT r01 "what's wrong" #1: the self-join + two set joins must read
     # ONE materialized feature table, not re-evaluate UDF lineage per side.
-    # In the formatted plan every ArrowEvalPython occurrence must be the SAME
-    # physical node (same id), referenced through InMemoryTableScan sites.
-    import re
-
+    # The features UDF runs once, when jaccard_pairs materializes the table;
+    # the returned plan reads only that table — no Python stage and no scan
+    # of the content.
     from language_identification_spark.operators.dedup import jaccard_pairs
 
     df = spark.read.parquet(parquet_src).selectExpr(
@@ -72,11 +71,9 @@ def test_jaccard_pairs_single_udf_evaluation(spark, parquet_src):
     )
     plan = _formatted_plan(jaccard_pairs(df, "text", "doc_id", 0.5))
     header = plan.split("\n\n")[0]
-    udf_ids = set(re.findall(r"ArrowEvalPython \((\d+)\)", header))
-    assert len(udf_ids) == 1, header
-    scan_ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", header))
-    assert len(scan_ids) == 1, header  # content is scanned by one node only
-    assert header.count("InMemoryTableScan") >= 4
+    assert "ArrowEvalPython" not in plan, plan
+    assert "Scan parquet" not in plan, plan
+    assert header.count("Scan ExistingRDD") >= 4, header
 
 
 def test_analyze_input_clipped_jvm_side(spark, parquet_src):
@@ -139,9 +136,9 @@ def test_winnow_dup_pairs_plan_shape(spark):
 
 def test_simhash_dup_pairs_plan_shape(spark):
     # the SimHash pair miner's 100 TB shape: the fingerprint UDF runs ONCE
-    # (persisted (id, simhash) table feeds both self-join sides — an
-    # InMemoryTableScan, not a second ArrowEvalPython), every Exchange is on
-    # a short key (chunk bucket / id pair), and content never shuffles
+    # (the materialized (id, simhash) table feeds both self-join sides, not
+    # a second ArrowEvalPython), every Exchange is on a short key (chunk
+    # bucket / id pair), and content never shuffles
     from language_identification_spark.operators.dedup import simhash_dup_pairs
 
     rows = [
@@ -153,16 +150,14 @@ def test_simhash_dup_pairs_plan_shape(spark):
     phys = plan.split("== Physical Plan ==", 1)[1]
     tree = phys.split("\n\n", 1)[0]
 
-    # both self-join sides read the persisted (id, simhash) table; the
-    # fingerprint UDF appears ONLY inside the InMemoryRelation's cache-build
-    # plan (it ran once, at the eager persist), never on the live path.
+    # both self-join sides read the materialized (id, simhash) table; the
+    # fingerprint UDF ran once, when simhash_dup_pairs materialized it, and
+    # is not in the returned plan at all.
     # r06 (ADVICE r05): assert the INVARIANTS with >= bounds rather than
     # exact physical-plan node counts, which flapped across Spark/AQE
     # config changes with unchanged semantics.
-    assert tree.count("InMemoryTableScan") >= 2, tree
-    first_udf = tree.index("ArrowEvalPython")
-    assert tree.index("InMemoryRelation") < first_udf, tree
-    assert tree.index("InMemoryTableScan") < first_udf, tree
+    assert "ArrowEvalPython" not in plan, plan
+    assert tree.count("Scan ExistingRDD") >= 2, tree
     exchanges = [l for l in phys.splitlines() if "hashpartitioning" in l]
     assert exchanges, phys
     for l in exchanges:
