@@ -36,12 +36,10 @@ Scale shape (100 TB lens):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from language_identification_spark.scrub.patterns import PATTERNS
+from language_identification_spark.scrub.patterns import PATTERNS, jvm_scrub
 
 # candidate charset: base64/base64url/hex/uuid-ish material.  24+ chars is
 # the conventional floor (AWS secret keys are 40, most API tokens 32+);
@@ -54,11 +52,6 @@ SECRET_TOKEN_REGEX = r"[A-Za-z0-9+/=_-]{24,}"
 # every random base64/alnum credential while keeping hex and identifiers
 # out; raise it for stricter precision.
 DEFAULT_ENTROPY_BITS = 4.2
-
-
-def _java_repl(repl: str) -> str:
-    """Python ``\\1`` backreferences -> Java ``$1`` (JVM regexp_replace)."""
-    return re.sub(r"\\(\d)", r"$\1", repl)
 
 
 def scrub_audit(
@@ -75,14 +68,11 @@ def scrub_audit(
     (a PEM body consumed by the private_key rule is not re-counted by
     the email rule, etc.).
     """
-    cur: Column = F.coalesce(F.col(text_col), F.lit(""))
-    counts: list[Column] = []
-    names: list[str] = []
-    for name, pat, repl in PATTERNS:
-        counts.append(F.regexp_count(cur, F.lit(pat)).cast("long").alias(f"n_{name}"))
-        names.append(f"n_{name}")
-        cur = F.regexp_replace(cur, pat, _java_repl(repl))
-    per_doc = df.select(F.col(repo_col), *counts)
+    _, counts = jvm_scrub(F.coalesce(F.col(text_col), F.lit("")))
+    names = [f"n_{name}" for name, _pat, _repl in PATTERNS]
+    per_doc = df.select(
+        F.col(repo_col), *[c.alias(n) for c, n in zip(counts, names)]
+    )
     total = sum((F.col(n) for n in names[1:]), F.col(names[0]))
     per_doc = per_doc.withColumn("n_total", total)
     agg = per_doc.groupBy(repo_col).agg(

@@ -44,8 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..scrub.patterns import PATTERNS
-from .audit import _java_repl
+from ..scrub.patterns import jvm_scrub
 from .codestats import COMMENT_RE
 
 
@@ -61,22 +60,7 @@ def _closes(line: Column) -> Column:
 
 def scrub_line_expr(line: Column) -> Column:
     """The frozen ordered count+replace chain's REPLACE side, per line."""
-    cur = line
-    for _name, pat, repl in PATTERNS:
-        cur = F.regexp_replace(cur, pat, _java_repl(repl))
-    return cur
-
-
-def count_line_expr(line: Column) -> Column:
-    """Total substitutions the ordered chain makes on ``line`` (counts
-    interleaved with replaces, so a PEM body consumed by an earlier rule
-    is not re-counted by a later one — the ``scrub_series`` contract)."""
-    cur = line
-    total: Column = F.lit(0).cast("long")
-    for _name, pat, repl in PATTERNS:
-        total = total + F.regexp_count(cur, F.lit(pat)).cast("long")
-        cur = F.regexp_replace(cur, pat, _java_repl(repl))
-    return total
+    return jvm_scrub(line)[0]
 
 
 def comment_scope_flags(lines: Column) -> Column:
@@ -138,9 +122,9 @@ def scrub_comments_scoped(
         F.zip_with(
             lines,
             flags,
-            lambda l, f: F.when(f, count_line_expr(l)).otherwise(
-                F.lit(0).cast("long")
-            ),
+            lambda l, f: F.when(
+                f, sum(jvm_scrub(l)[1], F.lit(0).cast("long"))
+            ).otherwise(F.lit(0).cast("long")),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,

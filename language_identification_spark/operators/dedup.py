@@ -1,15 +1,20 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four tiers, all DataFrame/pandas-UDF native (no per-row Python):
+Tiers, all DataFrame/pandas-UDF native (no per-row Python):
 
 - exact:   sha256 hash-groupBy (one shuffle on the hash)
-- minhash: char-shingle MinHash + LSH banding (shuffle on band buckets —
-           candidate pairs without the O(n²) cross join)
-- simhash: 64-bit weighted word-hash fingerprint, near-dup via identical
+- minhash: char-shingle MinHash + LSH banding, exact shingle-Jaccard
+           verification of the band candidates (``jaccard_pairs``, and
+           ``incremental_jaccard_pairs`` for a delta against a lake)
+- winnow:  MOSS-style shared winnowing fingerprints (``winnow_dup_pairs``)
+- simhash: 64-bit weighted shingle-hash fingerprint, near-dup via identical
            16-bit chunks (pigeonhole: hamming<=3 ⇒ one of 4 chunks equal)
-- ngram jaccard: exact verification on LSH candidate pairs
 
-Scale notes: every step is a hash-shuffle on short keys (signatures, never
+Every near-dup miner has the same skeleton: materialize a small feature
+table once, explode it into a posting list ``(id, key…)``, drop keys shared
+by more than ``max_bucket`` rows (``_capped``), self-join rows sharing
+every key with ``a.id < b.id`` (``_self_join``), then verify or count per
+pair.  Every step is a hash-shuffle on short keys (signatures, never
 content); candidate verification joins carry only doc ids + shingle sets of
 candidate rows.  At 100 TB the content column never shuffles.
 
@@ -20,11 +25,12 @@ Generator; shingle hashing is the shared FNV spec in ``hashing.py``.
 from __future__ import annotations
 
 import functools
+import operator
 import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -75,24 +81,15 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _minhash_batch(texts: pd.Series) -> pd.Series:
-    """(vectorized) 64-perm MinHash signature per row over char 3-shingles.
+def _sigs_from_shingles(
+    shingles: np.ndarray, doc_ids: np.ndarray, n: int
+) -> np.ndarray:
+    """(vectorized) 64-perm MinHash signature per doc over its shingles.
 
     One pass per permutation with ``minimum.reduceat`` over doc segments —
     C-speed and allocation-light (a (n_shingles, 64) matrix + ``minimum.at``
     was ~100x slower and ~0.5 GB per Arrow batch).
     """
-    forget_zip_importers()
-    bts = [(t or "").lower().encode("utf-8") for t in texts]
-    shingles, doc_ids = char_trigram_hashes_batch(bts, SHINGLE_BUCKETS)
-    return pd.Series(
-        list(_sigs_from_shingles(shingles, doc_ids, len(texts))), index=texts.index
-    )
-
-
-def _sigs_from_shingles(
-    shingles: np.ndarray, doc_ids: np.ndarray, n: int
-) -> np.ndarray:
     sigs = np.full((n, N_PERM), int(_MASK63), dtype=np.int64)
     if len(shingles):
         s = shingles.astype(np.uint64)
@@ -138,7 +135,6 @@ def _features_batch(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"sig": list(sigs), "sh": sets}, index=texts.index)
 
 
-minhash_udf = pandas_udf(_chunked(_minhash_batch), ArrayType(LongType()))
 # explicit StructType so the UDF can be defined without an active SparkContext
 _FEATURES_SCHEMA = StructType(
     [
@@ -149,17 +145,59 @@ _FEATURES_SCHEMA = StructType(
 features_udf = pandas_udf(_chunked(_features_batch), _FEATURES_SCHEMA)
 
 
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return df.select(F.col(id_col), minhash_udf(F.col(text_col)).alias("sig"))
-
-
-def minhash_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """``(id, sig array<long>, sh array<long>)`` — one UDF pass for both."""
+def _jaccard_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(id, sig, sh, ch)``: MinHash signature and distinct shingle set
+    from one UDF pass, plus the content hash ``ch`` in the SAME projection
+    (no extra scan/join)."""
     f = features_udf(F.col(text_col))
-    return df.select(F.col(id_col), f.getField("sig").alias("sig"), f.getField("sh").alias("sh"))
+    return df.select(
+        F.col(id_col),
+        f.getField("sig").alias("sig"),
+        f.getField("sh").alias("sh"),
+        # lower() so case-variants collapse like their shingle sets do, and
+        # coalesce(NULL → "") so NULL-text docs collapse with empty-text ones
+        # exactly as the features UDF's `t or ""` does — without it sha2 of
+        # NULL is NULL and every pair touching a NULL doc would fall through
+        # both the need filter and the intra-hash 1.0 branch (ADVICE r03)
+        F.sha2(
+            F.encode(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "UTF-8"),
+            256,
+        ).alias("ch"),
+    )
 
 
-MAX_BUCKET = 64  # LSH bucket-size cap (skew guard)
+MAX_BUCKET = 64  # posting-list key cap (skew guard, see ``_capped``)
+
+
+def _capped(posting: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
+    """Drop the posting rows whose ``keys`` group has more than
+    ``max_bucket`` members.
+
+    The dense-cluster skew guard of every self-join below: a key shared by
+    c rows yields c²/2 pairs, so one pathological template cluster (e.g.
+    thousands of files sharing a generated-code header or a license
+    comment) would explode the join quadratically.  Members of a dropped
+    group still pair up through their OTHER, more selective keys, and
+    exact-duplicate clusters are the job of ``exact_dedup``.
+    """
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return posting.withColumn("_bs", n).filter(F.col("_bs") <= max_bucket).drop("_bs")
+
+
+def _self_join(
+    posting: DataFrame, id_col: str, keys: list[str], also: Column | None = None
+) -> DataFrame:
+    """Rows ``a`` and ``b`` of ``posting`` that share every key, with
+    ``a.<id_col> < b.<id_col>`` (and ``also``, over the ``a.``/``b.``
+    columns, when given)."""
+    a, b = posting.alias("a"), posting.alias("b")
+    cond = functools.reduce(
+        operator.and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]
+        + ([] if also is None else [also]),
+    )
+    return a.join(b, cond)
 
 
 def _feat_parts(df: DataFrame) -> int:
@@ -200,48 +238,21 @@ def _band_table(sigs: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
             )
         ).alias("bb"),
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    from pyspark.sql import Window
-
-    bucket_size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-    return bands.withColumn("_bs", bucket_size).filter(
-        F.col("_bs") <= max_bucket
-    ).drop("_bs")
+    return _capped(bands, ["band", "bucket"], max_bucket)
 
 
-def _pairs_from_bands(bands: DataFrame, id_col: str) -> DataFrame:
-    a = bands.alias("a")
-    b = bands.alias("b")
+def _pairs_from_bands(
+    bands: DataFrame, id_col: str, also: Column | None = None
+) -> DataFrame:
+    """Distinct LSH candidate pairs ``(id_a, id_b)``, id_a < id_b, whose
+    signatures collide in at least one band (and satisfy ``also``)."""
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        _self_join(bands, id_col, ["band", "bucket"], also)
         .select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
         .distinct()
     )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame, text_col: str, id_col: str, max_bucket: int = MAX_BUCKET
-) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding — no O(n²) cross join.
-
-    Returns distinct ``(id_a, id_b)`` with id_a < id_b whose signatures
-    collide in at least one band.
-
-    ``max_bucket`` is the standard dense-cluster skew guard: a bucket with c
-    members yields c²/2 pairs, so one pathological template cluster (e.g.
-    thousands of files sharing a generated-code header) would explode the
-    join quadratically.  Buckets larger than the cap are dropped — members of
-    a dense cluster still pair up through their OTHER, more selective bands,
-    and exact-duplicate clusters are the job of ``exact_dedup``, not LSH.
-    """
-    sigs = minhash_signatures(df, text_col, id_col)
-    return _pairs_from_bands(_band_table(sigs, id_col, max_bucket), id_col)
 
 
 def jaccard_pairs(
@@ -284,22 +295,7 @@ def jaccard_pairs(
     repartition then never fires either.
     """
     df, did_spread = spread_scan(df)
-    f = features_udf(F.col(text_col))
-    feat = df.select(
-        F.col(id_col),
-        f.getField("sig").alias("sig"),
-        f.getField("sh").alias("sh"),
-        # JVM-side content hash in the SAME projection (no extra scan/join);
-        # lower() so case-variants collapse like their shingle sets do, and
-        # coalesce(NULL → "") so NULL-text docs collapse with empty-text ones
-        # exactly as the features UDF's `t or ""` does — without it sha2 of
-        # NULL is NULL and every pair touching a NULL doc would fall through
-        # both the need filter and the intra-hash 1.0 branch (ADVICE r03)
-        F.sha2(
-            F.encode(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "UTF-8"),
-            256,
-        ).alias("ch"),
-    )
+    feat = _jaccard_features(df, text_col, id_col)
     if staging_path is None and did_spread:
         feat = feat.repartition(_feat_parts(feat))
     feat = materialize(feat, staging_path)
@@ -398,27 +394,12 @@ def incremental_jaccard_pairs(
     Output matches ``jaccard_pairs``: ``id_a``, ``id_b``, ``jaccard``
     (ids may come from either side; id_a < id_b).
     """
-    f = features_udf(F.col(text_col))
-
     # same scan-spread / feature-compaction split as jaccard_pairs (r06)
     lake, lake_spread = spread_scan(lake)
     delta, delta_spread = spread_scan(delta)
     did_spread = lake_spread or delta_spread
 
-    def _feat(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            f.getField("sig").alias("sig"),
-            f.getField("sh").alias("sh"),
-            F.sha2(
-                F.encode(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))), "UTF-8"
-                ),
-                256,
-            ).alias("ch"),
-        )
-
-    feat_lake = _feat(lake)
+    feat_lake = _jaccard_features(lake, text_col, id_col)
     if lake_staging is not None:
         # REUSE an existing staged table: the whole point of staging is
         # that nightly increments never re-scan lake content, so a
@@ -429,7 +410,7 @@ def incremental_jaccard_pairs(
             feat_lake.write.mode("overwrite").parquet(lake_staging)
         feat_lake = lake.sparkSession.read.parquet(lake_staging)
     feat = feat_lake.withColumn("is_delta", F.lit(False)).unionByName(
-        _feat(delta).withColumn("is_delta", F.lit(True))
+        _jaccard_features(delta, text_col, id_col).withColumn("is_delta", F.lit(True))
     )
     if did_spread:
         feat = feat.repartition(_feat_parts(feat))
@@ -437,21 +418,9 @@ def incremental_jaccard_pairs(
     bands = _band_table(
         feat.select(id_col, "sig"), id_col, max_bucket
     ).join(feat.select(id_col, "is_delta"), id_col)
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            # at least one delta side: lake×lake never materializes
-            & (F.col("a.is_delta") | F.col("b.is_delta")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    # at least one delta side: lake×lake never materializes
+    pairs = _pairs_from_bands(
+        bands, id_col, F.col("a.is_delta") | F.col("b.is_delta")
     )
     return _verify_candidate_pairs(pairs, feat, id_col, threshold)
 
@@ -476,9 +445,8 @@ def winnow_dup_pairs(
     fingerprints come from the pure-Catalyst ``with_winnow_fingerprints``
     (no UDF), the posting list shuffles on the 64-bit fingerprint, and
     fingerprints shared by more than ``max_bucket`` documents are dropped
-    before the self-join — the same boilerplate/skew guard as the LSH
-    bucket cap (a license header shared by 100k files would otherwise
-    yield 10^10 pairs).  Content never shuffles.
+    before the self-join (``_capped``: a license header shared by 100k
+    files would otherwise yield 10^10 pairs).  Content never shuffles.
 
     ``staging_path``: like ``jaccard_pairs``, materialize the small
     (id, fp-array) feature table to parquet instead of a checkpoint — the
@@ -488,8 +456,6 @@ def winnow_dup_pairs(
     staged parquet table survives executor loss and is ~100x smaller than
     content.
     """
-    from pyspark.sql import Window
-
     from ..functions.text import with_winnow_fingerprints
 
     fps = with_winnow_fingerprints(
@@ -504,20 +470,13 @@ def winnow_dup_pairs(
     # The materialization makes the tiny (id, fp-array) table a leaf scan
     # for all downstream plans.
     fps = materialize(fps, staging_path)
-    posting = fps.select(F.col(id_col), F.explode("winnow_fp").alias("fp"))
-    bucket = F.count(F.lit(1)).over(Window.partitionBy("fp"))
-    posting = (
-        posting.withColumn("_n", bucket)
-        .filter(F.col("_n") <= max_bucket)
-        .drop("_n")
+    posting = _capped(
+        fps.select(F.col(id_col), F.explode("winnow_fp").alias("fp")),
+        ["fp"],
+        max_bucket,
     )
-    a, b = posting.alias("a"), posting.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        _self_join(posting, id_col, ["fp"])
         .groupBy(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -805,15 +764,20 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
 simhash_udf = pandas_udf(_chunked(_simhash_batch), LongType())
 
 
+def _simhash_chunks() -> list[Column]:
+    """The 4 disjoint 16-bit chunks of the ``simhash`` column, low first."""
+    return [
+        F.shiftrightunsigned(F.col("simhash"), c * 16).bitwiseAND(F.lit(0xFFFF))
+        for c in range(4)
+    ]
+
+
 def simhash_buckets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """SimHash fingerprints + the 4×16-bit chunk keys used for near-dup
     bucketing (hamming<=3 guarantees a shared chunk)."""
     out = df.select(F.col(id_col), simhash_udf(F.col(text_col)).alias("simhash"))
-    for c in range(4):
-        out = out.withColumn(
-            f"chunk{c}",
-            F.shiftrightunsigned(F.col("simhash"), c * 16).bitwiseAND(F.lit(0xFFFF)),
-        )
+    for c, chunk in enumerate(_simhash_chunks()):
+        out = out.withColumn(f"chunk{c}", chunk)
     return out
 
 
@@ -843,8 +807,7 @@ def simhash_dup_pairs(
     fingerprint UDF would re-evaluate over the full content on BOTH join
     sides.
 
-    ``max_bucket`` is the same dense-cluster skew guard as the MinHash LSH
-    path (a bucket of c members yields c²/2 join rows); members of a capped
+    ``max_bucket`` is the skew guard of ``_capped``: members of a capped
     bucket still pair up through their other, more selective chunks.
 
     ``max_hamming`` must be <= 3: with 4 disjoint chunks the pigeonhole
@@ -854,8 +817,6 @@ def simhash_dup_pairs(
 
     Returns distinct ``(id_a, id_b, hamming)`` with ``id_a < id_b``.
     """
-    from pyspark.sql import Window
-
     if not 0 <= max_hamming <= 3:
         raise ValueError(
             f"max_hamming={max_hamming}: the 4-chunk bucketing only has "
@@ -867,34 +828,17 @@ def simhash_dup_pairs(
         F.col(id_col), simhash_udf(F.col(text_col)).alias("simhash")
     )
     sigs = materialize(sigs, staging_path)
-    posts = sigs.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), c * 16).bitwiseAND(
-                        F.lit(0xFFFF)
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ci", "cv"),
+    posts = _capped(
+        sigs.select(
+            F.col(id_col),
+            F.col("simhash"),
+            F.posexplode(F.array(*_simhash_chunks())).alias("ci", "cv"),
+        ),
+        ["ci", "cv"],
+        max_bucket,
     )
-    bucket_size = F.count(F.lit(1)).over(Window.partitionBy("ci", "cv"))
-    posts = (
-        posts.withColumn("_bs", bucket_size)
-        .filter(F.col("_bs") <= max_bucket)
-        .drop("_bs")
-    )
-    a, b = posts.alias("a"), posts.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        _self_join(posts, id_col, ["ci", "cv"])
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),

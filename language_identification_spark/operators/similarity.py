@@ -189,9 +189,7 @@ dup_band_udf = pandas_udf(_dup_band_batch, ArrayType(LongType()))
 # Above this many input rows the band self-join falls back to the shuffle
 # strategy (the broadcast table is the banded input itself — 4 rows per
 # vector with the vector carried, so ~1.3 GB/M rows framed).
-_DUP_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_DUP_BROADCAST_MAX_ROWS", "1000000")
-)
+_DUP_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def cosine_dup_pairs(
@@ -230,9 +228,8 @@ def cosine_dup_pairs(
       handful of tasks while the downstream per-pair work explodes —
       the classic "shuffle bytes small, compute huge" mismatch.  The
       broadcast path spreads candidate generation + verification evenly
-      over 4×parallelism tasks.  Above the threshold (or via the
-      ``SPARK_GRAFT_DUP_BROADCAST_MAX_ROWS`` env) it falls back to the
-      shuffle join on the band key.
+      over 4×parallelism tasks.  Above the threshold it falls back to
+      the shuffle join on the band key.
     """
     obs = Observation()
     feat = df.select(

@@ -13,10 +13,10 @@ sf0.1 (~0.6 MB of documents) the round-robin shuffle plus 128 near-empty
 tasks cost MORE than the 2-task compute they replace (measured: vocab_topk
 0.34 s → 2.07 s, quantize 0.70 s → 2.47 s), while at sf1.0 the same
 queries win 2-50x.  The byte gate reads the scan's file sizes; inputs
-below ``SPARK_GRAFT_SPREAD_MIN_BYTES`` (default 3 MB compressed) are left
-alone.  At production partition counts the guard is a no-op either way,
-so none of this is a local[32] tune — it adapts to input size exactly as
-guide §2 prescribes.
+below ``SPREAD_MIN_BYTES`` (3 MB compressed) are left alone.  At
+production partition counts the guard is a no-op either way, so none of
+this is a local[32] tune — it adapts to input size exactly as guide §2
+prescribes.
 """
 
 from __future__ import annotations
@@ -26,10 +26,8 @@ import re
 
 from pyspark.sql import DataFrame
 
-SPREAD_MULT = int(os.environ.get("SPARK_GRAFT_SPREAD_MULT", "4"))
-SPREAD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(3 * 1024 * 1024))
-)
+SPREAD_MULT = 4
+SPREAD_MIN_BYTES = 3 * 1024 * 1024
 
 _FILE_URI = re.compile(r"^file:(//)?")
 

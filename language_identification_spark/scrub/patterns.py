@@ -71,6 +71,42 @@ COMPILED: tuple[tuple[str, "re.Pattern[str]", str], ...] = tuple(
 TRIGGER_REGEX = "|".join(f"(?:{p})" for _n, p, _r in PATTERNS)
 
 
+# ``\b`` as re.ASCII and RE2 read it, spelled for java.util.regex (whose
+# ``\b`` counts non-ASCII letters as word characters on Java 17).  Each
+# lookaround tests one character, so the rewrite stays linear and adds no
+# capture group.
+_ASCII_WORD_BOUNDARY = (
+    r"(?:(?<=[A-Za-z0-9_])(?![A-Za-z0-9_])|(?<![A-Za-z0-9_])(?=[A-Za-z0-9_]))"
+)
+
+
+def _java_repl(repl: str) -> str:
+    """Python ``\\1`` backreferences -> Java ``$1`` (JVM regexp_replace)."""
+    return re.sub(r"\\(\d)", r"$\1", repl)
+
+
+def jvm_scrub(text):
+    r"""The ordered count+replace chain over ``PATTERNS`` as JVM columns.
+
+    Returns ``(scrubbed, counts)``: ``text`` with every rule applied in
+    spec order, and one long column per rule (spec order) counting its
+    substitutions on the text the earlier rules left — a PEM body consumed
+    by ``private_key`` is not re-counted by ``email``.  Both equal what
+    ``scrub_series`` gives: every ``\b`` is rewritten to the ASCII word
+    boundary first, so a secret next to ``é`` or ``ñ`` is scrubbed as the
+    labeler scrubs it.  ``PATTERNS`` itself stays RE2-compatible for the
+    oracles."""
+    from pyspark.sql import functions as F
+
+    cur = text
+    counts = []
+    for _name, pat, repl in PATTERNS:
+        pat = pat.replace(r"\b", _ASCII_WORD_BOUNDARY)
+        counts.append(F.regexp_count(cur, F.lit(pat)).cast("long"))
+        cur = F.regexp_replace(cur, pat, _java_repl(repl))
+    return cur, counts
+
+
 def jvm_trigger(content):
     r"""Column: does ``content`` contain a match of any pattern, by the
     ASCII rules the scrubber and the labeler use?

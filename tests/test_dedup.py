@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from language_identification_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
-    lsh_candidate_pairs,
     simhash_buckets,
 )
 
@@ -43,7 +42,11 @@ def test_exact_dedup(docs):
 
 
 def test_lsh_finds_near_dups(docs):
-    pairs = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(docs, "text", "doc_id").collect()}
+    # threshold 0.0 keeps every LSH band candidate
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in jaccard_pairs(docs, "text", "doc_id", threshold=0.0).collect()
+    }
     assert (0, 1) in pairs  # exact dup always collides
     assert (0, 2) in pairs or (1, 2) in pairs  # near dup should collide
     assert not any(3 in p for p in pairs)  # unrelated doc never pairs
@@ -259,7 +262,9 @@ def test_exact_dup_cluster_beyond_cap_is_exact_dedups_job(spark):
     n = 6
     rows = [(i, BASE) for i in range(n)] + [(99, "unrelated text entirely")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = lsh_candidate_pairs(df, "text", "doc_id", max_bucket=4).collect()
+    pairs = jaccard_pairs(
+        df, "text", "doc_id", threshold=0.0, max_bucket=4
+    ).collect()
     assert pairs == []
     groups = {
         r.representative: r.n_copies
