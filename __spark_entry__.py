@@ -2155,13 +2155,13 @@ def _q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from language_identification_spark.plans.pipeline import analyze_udf
+    from language_identification_spark.plans.pipeline import flagship_udf
 
     docs = _docs(spark, sf_dir)
     return docs.select(
         "doc_id",
         "lang",
-        analyze_udf(F.col("text"), F.lit(True)).alias("nlp"),
+        flagship_udf(F.col("text"), F.lit(True), F.lit(None)).alias("nlp"),
     ).select(
         "doc_id",
         "lang",
@@ -2171,12 +2171,12 @@ def _q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from language_identification_spark.plans.pipeline import scrub_udf
+    from language_identification_spark.plans.pipeline import flagship_udf
 
     docs = _docs(spark, sf_dir)
     return docs.select(
         "doc_id",
-        scrub_udf(F.col("text")).alias("sc"),
+        flagship_udf(F.lit(""), F.lit(False), F.col("text")).alias("sc"),
     ).select(
         "doc_id",
         F.col("sc.n_sub").cast("long").alias("n_redactions"),
@@ -2608,11 +2608,11 @@ def _q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from language_identification_spark.operators.calibration import (
         threshold_sweep,
     )
-    from language_identification_spark.plans.pipeline import analyze_udf
+    from language_identification_spark.plans.pipeline import flagship_udf
 
     docs = _docs(spark, sf_dir)
     scored = docs.select(
-        "lang", analyze_udf(F.col("text"), F.lit(True)).alias("nlp")
+        "lang", flagship_udf(F.col("text"), F.lit(True), F.lit(None)).alias("nlp")
     ).select(
         F.round(F.col("nlp.confidence") * 1000).cast("long").alias("conf"),
         (F.col("nlp.detected_lang") == F.col("lang")).alias("match"),

@@ -4,14 +4,15 @@ Single-pass Catalyst plan (contrast with the reference's thread-per-stage
 push pipeline, ``/root/reference/disconnected_language_detector.py:961-1240``;
 lifecycle mapping in SURVEY.md §3.4):
 
-1. pure expressions: lang canon/collapse, heuristic features, cheap verdict
-   (whole-stage codegen; Catalyst pushes column pruning into the scan)
-2. ONE Arrow pandas UDF for langid + perplexity, masked so rows already
-   dropped by cheap rules skip model work entirely (early-filter craft rule,
-   SURVEY.md §4.1) — content crosses the JVM↔Python boundary once
+1. pure expressions: lang canon/collapse, heuristic features, cheap verdict,
+   scrub trigger (whole-stage codegen; Catalyst pushes column pruning into
+   the scan)
+2. ONE Arrow pandas UDF for langid + perplexity + regex scrub — content
+   crosses the JVM↔Python boundary once.  Rows already dropped by cheap
+   rules skip model work (early-filter craft rule, SURVEY.md §4.1); only
+   rows that are not cheap-dropped AND hit the trigger are scrubbed
 3. pure-expression verdict assembly (single F.when tree, config.py order)
-4. ONE Arrow pandas UDF for the regex scrub, masked to kept rows only
-5. final projection incl. sha256 invariants (built-in ``F.sha2`` — no UDF)
+4. final projection incl. sha256 invariants (built-in ``F.sha2`` — no UDF)
 
 Scale notes (100 TB / 1000 executors): no shuffle anywhere in this plan —
 it is embarrassingly parallel per input split; partition sizing and skew
@@ -40,19 +41,19 @@ from ..functions.heuristics import cheap_drop_reason, with_heuristics
 from ..functions.lang import canon_lang_col, primary_lang_col
 from ..pyworker import forget_zip_importers
 from ..scrub.patterns import jvm_trigger
+from ..scrub.scrubber import scrub_series
 
-# explicit StructTypes (not DDL strings) so the UDFs can be defined at import
+# an explicit StructType (not a DDL string) so the UDF can be defined at import
 # time without an active SparkContext
-_ANALYZE_SCHEMA = StructType(
+_SCHEMA = StructType(
     [
         StructField("detected_lang", StringType()),
         StructField("confidence", DoubleType()),
         StructField("mean_ll", DoubleType()),
         StructField("ppl", DoubleType()),
+        StructField("text", StringType()),
+        StructField("n_sub", LongType()),
     ]
-)
-_SCRUB_SCHEMA = StructType(
-    [StructField("text", StringType()), StructField("n_sub", LongType())]
 )
 
 
@@ -105,20 +106,20 @@ def _analyze_batch(content: pd.Series, active: pd.Series) -> pd.DataFrame:
     return out
 
 
-def _scrub_batch(content: pd.Series) -> pd.DataFrame:
-    """Scrub every non-NULL row; NULL rows (not triggered) come back NULL
-    with ``n_sub`` 0, so the plan passes their content through itself."""
-    forget_zip_importers()
-    from ..scrub.scrubber import scrub_series
-
+def _flagship_batch(
+    sample: pd.Series, active: pd.Series, to_scrub: pd.Series
+) -> pd.DataFrame:
+    """langid + perplexity over ``sample`` where ``active``, then the scrub
+    of every non-NULL ``to_scrub`` row; NULL rows (not triggered) come back
+    NULL with ``n_sub`` 0, so the plan passes their content through itself."""
+    out = _analyze_batch(sample, active)
     # pretriggered: the JVM rlike trigger (exact union of the patterns)
     # already gated every non-NULL row — skip the redundant Python prefilter
-    scrubbed, n_sub = scrub_series(content, pretriggered=True)
-    return pd.DataFrame({"text": scrubbed, "n_sub": n_sub}, index=content.index)
+    out["text"], out["n_sub"] = scrub_series(to_scrub, pretriggered=True)
+    return out
 
 
-analyze_udf = pandas_udf(_analyze_batch, _ANALYZE_SCHEMA)
-scrub_udf = pandas_udf(_scrub_batch, _SCRUB_SCHEMA)
+flagship_udf = pandas_udf(_flagship_batch, _SCHEMA)
 
 
 def quality_filter(
@@ -149,12 +150,23 @@ def quality_filter(
     # SAMPLE_BYTES-worth of chars ever crosses Arrow (models never read
     # further — hashing.py clips at the same byte count), (b) cheap-dropped
     # rows ship as "" so a 5 MB minified blob costs nothing downstream
+    active = F.col("cheap_reason").isNull()
     analyze_input = F.when(
-        F.col("cheap_reason").isNull(), F.substring(F.col("content"), 1, 4096)
+        active, F.substring(F.col("content"), 1, 4096)
     ).otherwise(F.lit(""))
-    df = df.withColumn(
-        "nlp", analyze_udf(analyze_input, F.col("cheap_reason").isNull())
+    # scrub trigger runs as compiled Java regex inside codegen, so the scrub
+    # in the same UDF touches only rows that are not cheap-dropped and hold a
+    # candidate match (a triggered row the models then drop is scrubbed for
+    # nothing: rare, and the price of one crossing).  Untriggered rows pass
+    # through unchanged, the trigger being the exact union of the patterns;
+    # they reach the UDF as NULL and come back NULL, so the pass-through is
+    # a coalesce and the trigger is evaluated once per row.
+    to_scrub = (
+        F.when(active & jvm_trigger(F.col("content")), F.col("content"))
+        if scrub_enabled
+        else F.lit(None).cast("string")
     )
+    df = df.withColumn("nlp", flagship_udf(analyze_input, active, to_scrub))
     reason = F.coalesce(
         F.col("cheap_reason"),
         F.when(
@@ -172,24 +184,12 @@ def quality_filter(
     df = df.withColumn("drop_reason", reason).withColumn(
         "keep", F.col("drop_reason").isNull()
     )
-    # scrub trigger runs as compiled Java regex inside codegen; the Python
-    # scrub UDF then touches only rows that contain a candidate match —
-    # regex in Python is the slow path, so it's gated twice (kept AND
-    # triggered).  Untriggered kept rows pass through unchanged by
-    # definition of the trigger (it is the exact union of the patterns).
-    # The trigger is evaluated once per row: the UDF gets NULL for every
-    # row it must not touch and returns NULL text for it, so the
-    # pass-through is a coalesce, not a second rlike.
-    if scrub_enabled:
-        triggered = F.col("keep") & jvm_trigger(F.col("content"))
-        df = df.withColumn("sc", scrub_udf(F.when(triggered, F.col("content"))))
-        n_redactions = F.col("sc.n_sub")
-        scrubbed = F.when(
-            F.col("keep"), F.coalesce(F.col("sc.text"), F.col("content"))
-        )
-    else:
-        n_redactions = F.lit(0).cast("long")
-        scrubbed = F.lit(None).cast("string")
+    n_redactions = F.when(F.col("keep"), F.col("nlp.n_sub")).otherwise(0)
+    scrubbed = (
+        F.when(F.col("keep"), F.coalesce(F.col("nlp.text"), F.col("content")))
+        if scrub_enabled
+        else F.lit(None).cast("string")
+    )
     return df.select(
         "repo",
         "path",

@@ -106,3 +106,24 @@ def test_secrets_next_to_non_ascii_letters_are_scrubbed(spark):
     assert (got["n_redactions"] == exp["n_redactions"]).all()
     exp_sha = [hashlib.sha256(t.encode()).hexdigest() for t in exp["scrubbed_content"]]
     assert list(got["scrubbed_sha256"]) == exp_sha
+
+
+MODEL_REASONS = ("langid_low_confidence", "langid_mismatch", "perplexity")
+
+
+def test_model_dropped_pii_rows_are_not_redacted(spark):
+    # the scrub runs in the models' own Python stage, so it sees every
+    # triggered row the cheap rules pass, before the models' verdict; a row
+    # the models then drop must still come out as dropped and unredacted
+    src, _ = generate_source_files(400, seed=42)
+    src["content"] = src["content"] + "\ncontact alice@example.com\n"
+    exp = label_frame(src)
+    pdf = src[exp["drop_reason"].isin(MODEL_REASONS).to_numpy()]
+    assert len(pdf) >= 100
+    got = quality_filter(spark.createDataFrame(pdf)).toPandas()
+    assert len(got) == len(pdf)
+    assert set(got["drop_reason"]) <= set(MODEL_REASONS)
+    assert not got["keep"].any()
+    assert (got["n_redactions"] == 0).all()
+    assert got["scrubbed_content"].isna().all()
+    assert got["scrubbed_sha256"].isna().all()

@@ -1,6 +1,6 @@
 """Physical-plan pins: the scale properties SURVEY §4 promises must hold in
 the actual Catalyst plan — predicate pushdown to the parquet scan, column
-pruning, exactly two Arrow UDF stages, zero shuffles in quality_filter."""
+pruning, exactly one Arrow UDF stage, zero shuffles in quality_filter."""
 
 from __future__ import annotations
 
@@ -42,10 +42,11 @@ def test_filter_pushdown_and_column_pruning(spark, parquet_src):
     assert "content" in read_schema
 
 
-def test_two_arrow_stages_zero_shuffles(spark, parquet_src):
+def test_one_arrow_stage_zero_shuffles(spark, parquet_src):
+    # langid, perplexity and scrub share one Python crossing per row
     out = quality_filter(spark.read.parquet(parquet_src))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 2
+    assert plan.count("ArrowEvalPython") == 1
     assert "Exchange" not in plan
 
 

@@ -29,6 +29,32 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def open_tables(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(got: pd.DataFrame, con, oracle: str | None) -> str | None:
+    """None when ``got`` equals the oracle's result (order-insensitive) or
+    there is no oracle; else what differs."""
+    if oracle is None:
+        return None
+    g, e = normalize(got), normalize(con.sql(oracle).df())
+    if list(g.columns) != list(e.columns):
+        return f"columns {list(g.columns)} vs {list(e.columns)}"
+    if len(g) != len(e):
+        return f"rowcount {len(g)} vs {len(e)}"
+    if not g.equals(e):
+        neq = (g != e).any(axis=1)
+        first = pd.concat([g[neq].head(3), e[neq].head(3)])
+        return f"{int(neq.sum())}/{len(g)} rows differ; first:\n{first}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # data-dependent oracle generators (ivf_topk_trained) derive constants
@@ -44,16 +70,10 @@ def main() -> int:
     from language_identification_spark.session import get_spark
 
     spark = get_spark("oracle-check")  # cores: SPARK_GRAFT_CPUS, else all
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    qs = entrymod.queries()
+    con = open_tables(sf_dir)
     oracles = entrymod.oracle_sql()
     failures = 0
-    for name, fn in qs.items():
+    for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
         try:
@@ -62,27 +82,14 @@ def main() -> int:
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             failures += 1
             continue
-        if name not in oracles:
+        diff = compare(got, con, oracles.get(name))
+        if diff is not None:
+            print(f"FAIL {name}: {diff}")
+            failures += 1
+        elif name in oracles:
+            print(f"ok   {name}: {len(got)} rows match oracle")
+        else:
             print(f"ok   {name}: rows-only ({len(got)} rows)")
-            assert len(got) >= 0
-            continue
-        exp = con.sql(oracles[name]).df()
-        g, e = normalize(got), normalize(exp)
-        if list(g.columns) != list(e.columns):
-            print(f"FAIL {name}: columns {list(g.columns)} vs {list(e.columns)}")
-            failures += 1
-            continue
-        if len(g) != len(e):
-            print(f"FAIL {name}: rowcount {len(g)} vs {len(e)}")
-            failures += 1
-            continue
-        if not g.equals(e):
-            neq = (g != e).any(axis=1)
-            print(f"FAIL {name}: {int(neq.sum())}/{len(g)} rows differ; first:")
-            print(pd.concat([g[neq].head(3), e[neq].head(3)]))
-            failures += 1
-            continue
-        print(f"ok   {name}: {len(g)} rows match oracle")
     spark.stop()
     print("FAILURES:", failures)
     return 1 if failures else 0
