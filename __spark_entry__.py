@@ -30,13 +30,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _spread(df: DataFrame, mult: int = 0) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Scan-parallelism guard — see language_identification_spark.partitioning
     (byte-gated so sub-MB small-sf scans are left alone; a no-op at
     production partition counts)."""
     from language_identification_spark.partitioning import spread_scan
 
-    out, _ = spread_scan(df, mult=mult)
+    out, _ = spread_scan(df)
     return out
 
 
@@ -1484,23 +1484,23 @@ FROM jac WHERE jraw >= 0.5
 
 def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from language_identification_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
         jaccard_pairs,
     )
 
     docs = _docs(spark, sf_dir)
     pairs = jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
-    return connected_components(pairs).select(
+    return connected_components_star(pairs).select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("comp").cast("long").alias("component"),
     )
 
 
 def _q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deduplicated corpus itself: pairs → components (via the
-    large-star/small-star contraction — this query is the star variant's
-    oracle-grade check; propagation is oracled by `dedup_components`) →
-    keep the component-min representative plus every un-grouped doc."""
+    """The deduplicated corpus itself: pairs → components (the
+    large-star/small-star contraction, oracled on its own by
+    `dedup_components`) → keep the component-min representative plus every
+    un-grouped doc."""
     from language_identification_spark.operators.dedup import (
         connected_components_star,
         jaccard_pairs,
@@ -1554,12 +1554,8 @@ def _q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the deterministic sha256 bucket; singletons hash their own id.
     The whole assignment is reproducible off-cluster — the oracle
     recomputes components AND buckets bit-for-bit.  Components come from
-    the O(log n) large-star/small-star contraction — same choice as the
-    curation job and `dup_weighted_docs`: the sf0.1 dup graph has a
-    diameter-8 tail that costs min-label propagation ~3x the wall time for
-    identical labels (measured 16.2s vs 5.0s warm on the materialized
-    178k-pair graph).  The oracle's recursive closure is
-    variant-independent, so either contraction checks green."""
+    the O(log n) large-star/small-star contraction, checked against the
+    oracle's recursive-CTE closure."""
     from language_identification_spark.operators.dedup import (
         connected_components_star,
         jaccard_pairs,
@@ -3060,12 +3056,9 @@ def _q_dup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Soft dedup: every document weighted by the inverse of its near-dup
     cluster size (integer floor-div ppm — engine-portable, no float-round
     divergence).  Reuses the oracled MinHash pair miner and the
-    large-star/small-star component contraction (O(log n) rounds — the
-    sf0.1 dup graph has a diameter-8 tail that costs min-label propagation
-    2.5x the wall time for identical labels; propagation itself stays
-    oracled by `dedup_components`).  The oracle re-derives cluster sizes
-    from the recursive-CTE closure, so it checks the labels independently
-    of which contraction computed them."""
+    large-star/small-star component contraction (O(log n) rounds).  The
+    oracle re-derives cluster sizes from the recursive-CTE closure, so it
+    checks the labels independently of how they were computed."""
     from language_identification_spark.operators.dedup import (
         connected_components_star,
         duplicate_weights,

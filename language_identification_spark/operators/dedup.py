@@ -525,125 +525,35 @@ def exact_jaccard_pairs(
     return pairs.withColumn("jaccard", F.round(jac, 6))
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Transitive near-dup groups: (node, component) where component is the
-    minimum id reachable through the pair graph — what a dedup pipeline
-    needs AFTER pair mining (keep one representative per component, not per
-    pair).
-
-    Iterative min-label propagation: each round every node adopts the
-    smallest component id among itself and its neighbors; converges in
-    O(graph diameter) rounds (near-dup clusters are dense, so typically
-    2-4).  Each round is one shuffle on node ids; the loop stops at the
-    fixpoint (count of changed labels == 0, checked driver-side — a scalar
-    per round, not row data).
-
-    Lineage is truncated with ``materialize`` every round — WITHOUT it
-    each iteration's logical plan nests the previous one and Catalyst
-    re-analysis time grows super-linearly (the well-known iterative-
-    algorithm pitfall; the un-truncated loop took minutes at 500 nodes).
-    At web scale the same loop holds (duplicate clusters stay small);
-    pathological giant components (diameter > max_iter) raise instead of
-    returning wrong labels silently (ADVICE r02) — use
-    ``connected_components_star`` for that regime: O(log n) rounds
-    regardless of diameter.
-    """
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = materialize(
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
-    comp = materialize(
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    for _ in range(max_iter):
-        # convergence detection rides the propagation job as an Observation
-        # (docs/SCALE.md "iterative operators"): tag each node's OWN label
-        # in the union, aggregate old and new labels together, and observe
-        # the changed count during the lineage-cut materialization — one
-        # job per round instead of propagation + a separate join/count.
-        # min(comp) <= own comp always, so "changed" is exactly "min over
-        # self+neighbors strictly improved".
-        neighbor = sym.join(
-            comp.withColumnRenamed("node", "dst"), "dst"
-        ).select(
-            F.col("src").alias("node"), F.col("comp"), F.lit(False).alias("own")
-        )
-        tagged = comp.withColumn("own", F.lit(True)).unionByName(neighbor)
-        obs = Observation()
-        new_comp = materialize(
-            tagged.groupBy("node")
-            .agg(
-                F.min("comp").alias("comp"),
-                F.min(F.when(F.col("own"), F.col("comp"))).alias("comp_old"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum((F.col("comp") != F.col("comp_old")).cast("long")),
-                    F.lit(0),
-                ).alias("changed"),
-            )
-            .select("node", "comp")
-        )
-        changed = int(obs.get["changed"])
-        comp = new_comp
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): the graph has a component "
-            "with diameter > max_iter — use connected_components_star "
-            "(O(log n) rounds) for chain-shaped/giant components"
-        )
-    return comp
+STAR_MAX_ROUNDS = 40  # O(log n) rounds: unreachable below 2^20 nodes
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 40,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star
+    """Transitive near-dup groups via alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the giant-component-safe variant.
+    Beyond", SoCC'14) — what a dedup pipeline needs AFTER pair mining (keep
+    one representative per component, not per pair).
 
-    Converges in O(log n) rounds regardless of component diameter, where
-    min-label propagation needs O(diameter) rounds: the regime where a
-    web-scale dedup graph contains chain-shaped or giant components
-    (boilerplate families, templated pages).  Per round: large-star hangs
-    every larger neighbor off its node's minimum (one groupBy + one join),
-    small-star re-parents the smaller neighbors likewise.  At the fixpoint
-    the edge set is exactly {(node, component_min)} stars.
+    Converges in O(log n) rounds regardless of component diameter, so
+    chain-shaped or giant components (boilerplate families, templated
+    pages) cost no more rounds than small dense clusters.  Per round:
+    large-star hangs every larger neighbor off its node's minimum (one
+    groupBy + one join), small-star re-parents the smaller neighbors
+    likewise.  At the fixpoint the edge set is exactly
+    {(node, component_min)} stars.
 
-    Same contract as ``connected_components``: (node, comp) with comp = the
-    minimum reachable id; every endpoint of ``pairs`` appears.
+    Returns (node, comp) with comp = the minimum reachable id; every
+    endpoint of ``pairs`` appears, including a node whose only pair is a
+    self-pair (its own singleton component).  Raises ``RuntimeError`` when
+    the edge set has not reached its fixpoint after ``STAR_MAX_ROUNDS``.
     """
     # materialize the raw endpoint pairs ONCE: both the edge set and the
     # node set derive from it, and deriving either from the uncheckpointed
     # plan would re-execute the full upstream pair-mining pipeline (minhash,
     # banding, verification) a second time just to list endpoints
     raw = materialize(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
-    e = materialize(raw.filter(F.col("u") != F.col("v")).distinct())
-    # node set from the UNFILTERED endpoints: a node whose only pair is a
-    # self-pair (u == v) still satisfies the "every endpoint of ``pairs``
-    # appears" contract — it must come out as its own singleton component,
-    # exactly as connected_components returns it
-    nodes = materialize(
-        raw.select(F.col("u").alias("node"))
-        .unionByName(raw.select(F.col("v").alias("node")))
-        .distinct()
-    )
     # r06 negative result (guide §1): broadcasting the per-round min-label
     # tables was tried and measured 4x SLOWER on fork_collapse at sf1.0
     # (3.2 s -> 13.3 s) — the label table changes every round, so each
@@ -663,9 +573,14 @@ def connected_components_star(
         ).alias("h"),
     )
 
-    def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-        row = edges.select(*_FP_METRICS).first()
-        return int(row["n"]), int(row["h"])
+    def _cut(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+        # every lineage cut observes the edge-set fingerprint on its own
+        # materializing job (docs/SCALE.md "iterative operators"), so
+        # convergence detection costs no second pass over the edges
+        obs = Observation()
+        edges = materialize(edges.observe(obs, *_FP_METRICS))
+        row = obs.get
+        return edges, (int(row["n"]), int(row["h"]))
 
     def _large_star(edges: DataFrame) -> DataFrame:
         sym = edges.unionByName(
@@ -698,30 +613,25 @@ def connected_components_star(
             .distinct()
         )
 
-    fp = _fingerprint(e)
-    for _ in range(max_iter):
-        # convergence detection rides the round's lineage-cut job as an
-        # Observation (same pattern as connected_components): the edge-set
-        # fingerprint is aggregated WHILE ``materialize`` cuts the
-        # round — one job per round instead of contract + a second pass over
-        # the materialized edges.  Locally neutral (~5.1s either way at
-        # sf0.1; re-reading checkpointed blocks is cheap), but the saved
-        # pass scales with |E| where the old one re-scanned the full edge
-        # set every round.
-        obs = Observation()
-        e = materialize(_small_star(_large_star(e)).observe(obs, *_FP_METRICS))
-        row = obs.get
-        new_fp = (int(row["n"]), int(row["h"] or 0))
+    e, fp = _cut(raw.filter(F.col("u") != F.col("v")).distinct())
+    for _ in range(STAR_MAX_ROUNDS):
+        e, new_fp = _cut(_small_star(_large_star(e)))
         if new_fp == fp:
             break
         fp = new_fp
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
+            f"connected_components_star did not converge in {STAR_MAX_ROUNDS} "
             "rounds — this should be unreachable for any graph of "
-            f"< 2^{max_iter // 2} nodes; check the input for NaN/null ids"
+            f"< 2^{STAR_MAX_ROUNDS // 2} nodes; check the input for NaN/null ids"
         )
-    # fixpoint edges are (child, root) stars; roots map to themselves
+    # node set from the UNFILTERED endpoints, so self-pair-only nodes
+    # appear; fixpoint edges are (child, root) stars, roots map to themselves
+    nodes = (
+        raw.select(F.col("u").alias("node"))
+        .unionByName(raw.select(F.col("v").alias("node")))
+        .distinct()
+    )
     return nodes.join(
         e.select(F.col("u").alias("node"), F.col("v").alias("parent")),
         "node",

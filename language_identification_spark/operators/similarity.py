@@ -537,7 +537,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    max_iter: int = 40,
 ) -> DataFrame:
     """SemDeDup-style end-to-end semantic deduplication (Abbas et al.,
     2023): keep ONE representative per group of embedding-near-duplicate
@@ -563,5 +562,5 @@ def semantic_dedup(
     )
 
     pairs = cosine_dup_pairs(df, threshold=threshold, vec_col=vec_col, id_col=id_col)
-    comps = connected_components_star(pairs, max_iter=max_iter)
+    comps = connected_components_star(pairs)
     return keep_representatives(df, comps, id_col=id_col)

@@ -71,9 +71,9 @@ def leakage_safe_split(
 ) -> DataFrame:
     """Assign every doc a split; near-dup components are co-assigned.
 
-    ``components`` is the ``connected_components`` output (one row per doc
-    that appears in any dup pair, mapping it to its component's min id).
-    Docs absent from it are singletons and hash their own id.  Returns
+    ``components`` is the ``connected_components_star`` output (one row
+    per doc that appears in any dup pair, mapping it to its component's min
+    id).  Docs absent from it are singletons and hash their own id.  Returns
     ``(id_col, split_key, bucket, split)`` — ``split_key`` published so an
     auditor can re-derive the assignment off-cluster.
     """

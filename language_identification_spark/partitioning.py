@@ -7,16 +7,16 @@ and ``minPartitionNum`` cannot split below one row group, and every
 row-local operator downstream runs on 2 of N cores (measured:
 gopher_repetition spent 76 s at sf1.0 with 30 cores idle).
 
-``spread_scan`` repartitions such a scan to ``mult × defaultParallelism``
-— but ONLY when the input is big enough to amortize the exchange: at
-sf0.1 (~0.6 MB of documents) the round-robin shuffle plus 128 near-empty
-tasks cost MORE than the 2-task compute they replace (measured: vocab_topk
-0.34 s → 2.07 s, quantize 0.70 s → 2.47 s), while at sf1.0 the same
-queries win 2-50x.  The byte gate reads the scan's file sizes; inputs
-below ``SPREAD_MIN_BYTES`` (3 MB compressed) are left alone.  At
-production partition counts the guard is a no-op either way, so none of
-this is a local[32] tune — it adapts to input size exactly as guide §2
-prescribes.
+``spread_scan`` repartitions such a scan to
+``SPREAD_MULT × defaultParallelism`` — but ONLY when the input is big
+enough to amortize the exchange: at sf0.1 (~0.6 MB of documents) the
+round-robin shuffle plus 128 near-empty tasks cost MORE than the 2-task
+compute they replace (measured: vocab_topk 0.34 s → 2.07 s, quantize
+0.70 s → 2.47 s), while at sf1.0 the same queries win 2-50x.  The byte
+gate reads the scan's file sizes; inputs below ``SPREAD_MIN_BYTES`` (3 MB
+compressed) are left alone.  At production partition counts the guard is
+a no-op either way, so none of this is a local[32] tune — it adapts to
+input size exactly as guide §2 prescribes.
 """
 
 from __future__ import annotations
@@ -51,21 +51,17 @@ def input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def spread_scan(
-    df: DataFrame, mult: int = 0, min_bytes: int | None = None
-) -> tuple[DataFrame, bool]:
+def spread_scan(df: DataFrame) -> tuple[DataFrame, bool]:
     """(df, did_spread) — see module docstring."""
-    mult = mult or SPREAD_MULT
-    min_bytes = SPREAD_MIN_BYTES if min_bytes is None else min_bytes
     sc = df.sparkSession.sparkContext
     # both gates must pass; the byte gate goes first because it only lists
     # the scan's files, while the partition count needs a plan→RDD hop
     nbytes = input_bytes(df)
-    if nbytes is not None and nbytes < min_bytes:
+    if nbytes is not None and nbytes < SPREAD_MIN_BYTES:
         return df, False  # too small for the exchange to pay for itself
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df, False  # already parallelism-wide — the production case
-    return df.repartition(sc.defaultParallelism * mult), True
+    return df.repartition(sc.defaultParallelism * SPREAD_MULT), True
 
 
 def materialize(df: DataFrame, staging_path: str | None = None) -> DataFrame:

@@ -105,55 +105,68 @@ def test_simhash_dup_pairs_bucket_cap(spark):
     assert got.count() == 45  # 10 choose 2, all hamming 0
 
 
+def _union_find(edges):
+    """Pure-Python reference: node -> minimum id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_connected_components(spark):
     from language_identification_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 3)], "id_a long, id_b long"
     )
-    got = {r.node: r.comp for r in connected_components(pairs).collect()}
+    got = {r.node: r.comp for r in connected_components_star(pairs).collect()}
     # {1,2,3,9} form one component labeled by its minimum, {5,6} another
     assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
 
 
-def test_connected_components_star_matches_propagation(spark):
-    """Star contraction agrees with min-label propagation on random graphs
+def test_connected_components_star_matches_union_find(spark):
+    """Star contraction agrees with a union-find reference on random graphs
     and on the basic fixture."""
     import random
 
     from language_identification_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (9, 3), (7, 7)], "id_a long, id_b long"
-    )
+    fixture = [(1, 2), (2, 3), (5, 6), (9, 3), (7, 7)]
+    pairs = spark.createDataFrame(fixture, "id_a long, id_b long")
     got = {r.node: r.comp for r in connected_components_star(pairs).collect()}
     # 7's only pair is a self-pair: still an endpoint, so it must appear —
-    # as its own singleton — from BOTH variants (contract parity)
+    # as its own singleton
     assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5, 7: 7}
+    assert got == _union_find(fixture)
 
     rng = random.Random(7)
-    # self-edges left in deliberately: both variants must agree on them
+    # self-edges left in deliberately: they must not merge or drop nodes
     edges = [
         (rng.randrange(60), rng.randrange(60)) for _ in range(70)
     ]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    prop = {r.node: r.comp for r in connected_components(df).collect()}
     star = {r.node: r.comp for r in connected_components_star(df).collect()}
-    assert star == prop
+    assert star == _union_find(edges)
 
 
-def test_connected_components_star_handles_long_chain(spark):
-    """A 60-node chain (diameter 59): propagation at max_iter=25 must RAISE
-    (not silently mislabel — ADVICE r02), star converges in O(log n)."""
-    import pytest as _pytest
-
+def test_connected_components_star_handles_long_chain(spark, monkeypatch):
+    """A 60-node chain (diameter 59): star converges in O(log n) rounds,
+    and raises rather than mislabel when its round cap is too low."""
+    from language_identification_spark.operators import dedup
     from language_identification_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
@@ -162,8 +175,9 @@ def test_connected_components_star_handles_long_chain(spark):
     )
     got = {r.node: r.comp for r in connected_components_star(chain).collect()}
     assert got == {i: 0 for i in range(60)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=10)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(chain)
 
 
 def test_keep_representatives(spark):

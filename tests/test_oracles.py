@@ -1,6 +1,8 @@
-"""The flagship's driver queries against their DuckDB oracles at sf0.001:
-the same per-query comparison ``tools/check_oracles.py`` runs by hand, so an
-oracle regression in the keep/drop + scrub path fails the suite."""
+"""Driver queries against their DuckDB oracles at sf0.001: the same
+per-query comparison ``tools/check_oracles.py`` runs by hand, so an oracle
+regression in the keep/drop + scrub path, or in the connected-components
+contraction (``fork_collapse`` and ``semantic_dedup`` run it end to end
+against a recursive-CTE closure), fails the suite."""
 
 from __future__ import annotations
 
@@ -29,7 +31,14 @@ def entry():
 
 @pytest.mark.parametrize(
     "name",
-    ["quality_filter_full", "langid_documents", "scrub_documents", "threshold_sweep"],
+    [
+        "quality_filter_full",
+        "langid_documents",
+        "scrub_documents",
+        "threshold_sweep",
+        "fork_collapse",
+        "semantic_dedup",
+    ],
 )
 def test_flagship_query_matches_oracle(spark, entry, name):
     queries, oracles, con = entry

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from language_identification_spark import partitioning
 from language_identification_spark.partitioning import spread_scan
 
 
@@ -23,15 +24,18 @@ def test_small_scan_left_alone_without_rdd_hop(one_file_scan, monkeypatch):
     assert (out, did) == (one_file_scan, False)
 
 
-def test_spread_branch(spark, one_file_scan):
+def test_spread_branch(spark, one_file_scan, monkeypatch):
+    monkeypatch.setattr(partitioning, "SPREAD_MULT", 2)
+    monkeypatch.setattr(partitioning, "SPREAD_MIN_BYTES", 0)
     assert one_file_scan.rdd.getNumPartitions() == 1
-    out, did = spread_scan(one_file_scan, mult=2, min_bytes=0)
+    out, did = spread_scan(one_file_scan)
     assert did
     assert out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
     assert sorted(r.id for r in out.collect()) == list(range(1000))
 
 
-def test_wide_scan_left_alone(spark, one_file_scan):
+def test_wide_scan_left_alone(spark, one_file_scan, monkeypatch):
+    monkeypatch.setattr(partitioning, "SPREAD_MIN_BYTES", 0)
     wide = one_file_scan.repartition(spark.sparkContext.defaultParallelism)
-    out, did = spread_scan(wide, min_bytes=0)
+    out, did = spread_scan(wide)
     assert (out, did) == (wide, False)
