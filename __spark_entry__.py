@@ -1530,7 +1530,7 @@ def _sql_dedup_components() -> str:
     a recursive CTE computing each node's minimum reachable id."""
     pairs_sql = _sql_minhash_pairs()
     return f"""
-WITH RECURSIVE pairs AS (
+WITH RECURSIVE pairs AS MATERIALIZED (
   SELECT id_a, id_b FROM ({pairs_sql}) t
 ),
 edges AS (
@@ -1925,7 +1925,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_semantic_dedup() -> str:
     pairs_sql = _sql_cosine_dup_pairs()
     return f"""
-WITH RECURSIVE pairs AS (
+WITH RECURSIVE pairs AS MATERIALIZED (
   SELECT id_a, id_b FROM ({pairs_sql}) t
 ),
 edges AS (
@@ -2170,13 +2170,17 @@ def _q_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from language_identification_spark.plans.pipeline import flagship_udf
 
     docs = _docs(spark, sf_dir)
+    # the UDF sends back NULL text for a row it left unchanged
     return docs.select(
         "doc_id",
+        "text",
         flagship_udf(F.lit(""), F.lit(False), F.col("text")).alias("sc"),
     ).select(
         "doc_id",
         F.col("sc.n_sub").cast("long").alias("n_redactions"),
-        F.sha2(F.encode(F.col("sc.text"), "UTF-8"), 256).alias("scrubbed_sha256"),
+        F.sha2(
+            F.encode(F.coalesce(F.col("sc.text"), F.col("text")), "UTF-8"), 256
+        ).alias("scrubbed_sha256"),
     )
 
 

@@ -4,13 +4,13 @@ Single-pass Catalyst plan (contrast with the reference's thread-per-stage
 push pipeline, ``/root/reference/disconnected_language_detector.py:961-1240``;
 lifecycle mapping in SURVEY.md §3.4):
 
-1. pure expressions: lang canon/collapse, heuristic features, cheap verdict,
-   scrub trigger (whole-stage codegen; Catalyst pushes column pruning into
-   the scan)
+1. pure expressions: lang canon/collapse, heuristic features, cheap verdict
+   (whole-stage codegen; Catalyst pushes column pruning into the scan)
 2. ONE Arrow pandas UDF for langid + perplexity + regex scrub — content
    crosses the JVM↔Python boundary once.  Rows already dropped by cheap
-   rules skip model work (early-filter craft rule, SURVEY.md §4.1); only
-   rows that are not cheap-dropped AND hit the trigger are scrubbed
+   rules skip model work and the scrub (early-filter craft rule, SURVEY.md
+   §4.1); every other row is scrubbed in that same Python pass, and only
+   rows with a substitution send text back
 3. pure-expression verdict assembly (single F.when tree, config.py order)
 4. final projection incl. sha256 invariants (built-in ``F.sha2`` — no UDF)
 
@@ -40,7 +40,6 @@ from ..config import DEFAULT_CONFIG, FilterConfig
 from ..functions.heuristics import cheap_drop_reason, with_heuristics
 from ..functions.lang import canon_lang_col, primary_lang_col
 from ..pyworker import forget_zip_importers
-from ..scrub.patterns import jvm_trigger
 from ..scrub.scrubber import scrub_series
 
 # an explicit StructType (not a DDL string) so the UDF can be defined at import
@@ -110,12 +109,13 @@ def _flagship_batch(
     sample: pd.Series, active: pd.Series, to_scrub: pd.Series
 ) -> pd.DataFrame:
     """langid + perplexity over ``sample`` where ``active``, then the scrub
-    of every non-NULL ``to_scrub`` row; NULL rows (not triggered) come back
-    NULL with ``n_sub`` 0, so the plan passes their content through itself."""
+    of every non-NULL ``to_scrub`` row.  ``text`` is NULL wherever ``n_sub``
+    is 0 (NULL input or no match): an unchanged row is not sent back, the
+    plan passes its content through itself."""
     out = _analyze_batch(sample, active)
-    # pretriggered: the JVM rlike trigger (exact union of the patterns)
-    # already gated every non-NULL row — skip the redundant Python prefilter
-    out["text"], out["n_sub"] = scrub_series(to_scrub, pretriggered=True)
+    text, n_sub = scrub_series(to_scrub)
+    out["text"] = text.where(n_sub > 0, None)
+    out["n_sub"] = n_sub
     return out
 
 
@@ -154,15 +154,14 @@ def quality_filter(
     analyze_input = F.when(
         active, F.substring(F.col("content"), 1, 4096)
     ).otherwise(F.lit(""))
-    # scrub trigger runs as compiled Java regex inside codegen, so the scrub
-    # in the same UDF touches only rows that are not cheap-dropped and hold a
-    # candidate match (a triggered row the models then drop is scrubbed for
-    # nothing: rare, and the price of one crossing).  Untriggered rows pass
-    # through unchanged, the trigger being the exact union of the patterns;
-    # they reach the UDF as NULL and come back NULL, so the pass-through is
-    # a coalesce and the trigger is evaluated once per row.
+    # every row that is not cheap-dropped is scrubbed in the same UDF, one
+    # regex pass per pattern (a row the models then drop is scrubbed for
+    # nothing: the price of one crossing).  No JVM gate runs in front: Java
+    # regex over the pattern union costs more than the Python scrub it
+    # would spare.  A row without a match comes back NULL, so the
+    # pass-through below is a coalesce.
     to_scrub = (
-        F.when(active & jvm_trigger(F.col("content")), F.col("content"))
+        F.when(active, F.col("content"))
         if scrub_enabled
         else F.lit(None).cast("string")
     )

@@ -1,9 +1,9 @@
 """Ordered PII/secret scrub patterns — the frozen spec shared as DATA.
 
-Both the Spark scrub stage (``scrub/scrubber.py``, pandas-vectorized) and the
-independent labeler (``datagen/labeler.py``, plain ``re``) apply exactly this
-list in exactly this order.  Order matters: PEM blocks are removed first so
-their base64 body can't partially match later patterns.
+Both the Spark scrub stage (``scrub/scrubber.py``) and the independent
+labeler (``datagen/labeler.py``) apply exactly this list in exactly this
+order, one ``subn`` per pattern.  Order matters: PEM blocks are removed
+first so their base64 body can't partially match later patterns.
 
 Reference analog: the per-segment content transformation keyed by detected
 label (``/root/reference/disconnected_language_detector.py:559-894``) — here
@@ -64,10 +64,12 @@ COMPILED: tuple[tuple[str, "re.Pattern[str]", str], ...] = tuple(
     (name, re.compile(pat, PATTERN_FLAGS), repl) for name, pat, repl in PATTERNS
 )
 
-# union of all patterns — used as a JVM-side (Java regex) scrub trigger so
-# the Python scrub stage only ever sees rows that contain a candidate match.
-# (?i:..), [0-9] classes, \s and lazy quantifiers parse identically in
-# java.util.regex, Python re (ASCII mode) and RE2; \b does not (below).
+# union of all patterns.  The flagship runs no trigger in front of the scrub
+# (every row the models see is scrubbed in their Python pass); the
+# benchmark's ``trigger.s`` ablation still times this union as a Java
+# ``rlike``.  (?i:..), [0-9] classes, \s and lazy quantifiers parse
+# identically in java.util.regex, Python re (ASCII mode) and RE2; \b does
+# not (below).
 TRIGGER_REGEX = "|".join(f"(?:{p})" for _n, p, _r in PATTERNS)
 
 
@@ -106,20 +108,3 @@ def jvm_scrub(text):
         cur = F.regexp_replace(cur, pat, _java_repl(repl))
     return cur, counts
 
-
-def jvm_trigger(content):
-    r"""Column: does ``content`` contain a match of any pattern, by the
-    ASCII rules the scrubber and the labeler use?
-
-    Java 17's ``\b`` counts non-ASCII letters (``é``, ``ñ``) as word
-    characters, so ``éAKIA…`` or ``ñ10.0.0.1`` would not trigger although
-    Python's ``re.ASCII`` scrubs them.  Every non-ASCII code point is mapped
-    to U+0001 first: one ASCII non-word, non-space character, which every
-    pattern treats exactly as the original code point under ASCII rules.
-    The mapping is linear and leaves ``PATTERNS`` (the oracles' input)
-    unchanged."""
-    from pyspark.sql import functions as F
-
-    return F.regexp_replace(content, r"[^\x00-\x7F]", "\u0001").rlike(
-        TRIGGER_REGEX
-    )

@@ -1,27 +1,28 @@
-"""Pandas-vectorized scrub pass (the Spark-side implementation).
+"""Batch scrub pass (the Spark-side implementation).
 
-Used inside the pipeline's Arrow pandas UDF; operates on whole batches with
-``pandas.Series.str`` ops — no per-row Python at the Spark level.  A ``mask``
-lets the caller skip rows already marked for drop (single-pass plan: the
-scrub cost is only paid for kept rows, without re-scanning the source —
-SURVEY.md §4.1 "early filter before downstream work").
+Used inside the pipeline's Arrow pandas UDF on every row the models see.
+Each row takes one ``re.Pattern.subn`` per pattern, in spec order — the
+labeler's own loop (``datagen/labeler.py``): the substitution count and the
+scrubbed text come out of the same regex pass.  A row with no match costs
+the six scans and comes back unchanged with ``n_sub`` 0.  A ``mask`` lets
+the caller skip rows already marked for drop (SURVEY.md §4.1 "early filter
+before downstream work").
 """
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 
-from .patterns import COMPILED, PATTERN_FLAGS, PATTERNS
+from .patterns import COMPILED
 
-# one cheap combined pass decides which rows need the 6 expensive
-# count+replace passes; in realistic corpora only a few % do.  The union of
-# the real patterns is exact, so the prefilter can never change results.
-_PREFILTER = re.compile(
-    "|".join(f"(?:{p})" for _n, p, _r in PATTERNS), PATTERN_FLAGS
-)
+
+def _scrub_one(text: str) -> tuple[str, int]:
+    n = 0
+    for _name, rx, repl in COMPILED:
+        text, k = rx.subn(repl, text)
+        n += k
+    return text, n
 
 
 def scrub_series(
@@ -31,32 +32,19 @@ def scrub_series(
 ) -> tuple[pd.Series, pd.Series]:
     """Returns ``(scrubbed, n_sub)`` aligned with ``content``.
 
-    Rows where ``mask`` is False are passed through untouched with n_sub=0.
-    ``pretriggered=True`` means every masked row is already known to contain
-    a candidate match (the pipeline's JVM ``rlike`` trigger is the exact same
-    union), so the Python prefilter pass is skipped — it would be pure
-    redundant regex work on the hot path.
+    Rows where ``mask`` is False, and NULL rows, are passed through
+    untouched with n_sub=0.  ``pretriggered`` no longer changes anything:
+    there is no prefilter to skip (a union pre-search costs more in Python
+    than the six passes it would guard), so every masked row is scrubbed
+    the same way whatever the flag says.
     """
     if mask is None:
         mask = pd.Series(True, index=content.index)
     active = content[mask.fillna(False) & content.notna()]
     out = content.copy()
     n_sub = pd.Series(np.zeros(len(content), dtype=np.int64), index=content.index)
-    if len(active) and not pretriggered:
-        # re.Pattern.search per row (C speed) — pandas str.contains warns on
-        # patterns with capture groups and is no faster
-        hit = np.fromiter(
-            (_PREFILTER.search(x) is not None for x in active),
-            dtype=bool,
-            count=len(active),
-        )
-        active = active[hit]
     if len(active):
-        scrubbed = active
-        counts = np.zeros(len(active), dtype=np.int64)
-        for _name, rx, repl in COMPILED:
-            counts += scrubbed.str.count(rx).to_numpy(dtype=np.int64)
-            scrubbed = scrubbed.str.replace(rx, repl, regex=True)
-        out.loc[scrubbed.index] = scrubbed
-        n_sub.loc[scrubbed.index] = counts
+        texts, counts = zip(*map(_scrub_one, active))
+        out.loc[active.index] = list(texts)
+        n_sub.loc[active.index] = list(counts)
     return out, n_sub

@@ -1,8 +1,9 @@
 """Driver queries against their DuckDB oracles at sf0.001: the same
 per-query comparison ``tools/check_oracles.py`` runs by hand, so an oracle
 regression in the keep/drop + scrub path, or in the connected-components
-contraction (``fork_collapse`` and ``semantic_dedup`` run it end to end
-against a recursive-CTE closure), fails the suite."""
+contraction (``fork_collapse``, ``semantic_dedup`` and the four
+minhash-component queries run it end to end against a recursive-CTE
+closure), fails the suite."""
 
 from __future__ import annotations
 
@@ -38,6 +39,10 @@ def entry():
         "threshold_sweep",
         "fork_collapse",
         "semantic_dedup",
+        "dedup_components",
+        "dedup_representatives",
+        "leakage_safe_split",
+        "dup_weighted_docs",
     ],
 )
 def test_flagship_query_matches_oracle(spark, entry, name):

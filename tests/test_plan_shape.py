@@ -50,13 +50,14 @@ def test_one_arrow_stage_zero_shuffles(spark, parquet_src):
     assert "Exchange" not in plan
 
 
-def test_scrub_trigger_evaluated_once(spark, parquet_src):
-    # the pass-through decision comes from the scrub UDF's NULL output, so
-    # the trigger regex is in the plan once (the UDF's argument), not twice
+def test_no_jvm_scrub_gate(spark, parquet_src):
+    # every row the models see is scrubbed in their Python pass: no JVM
+    # trigger over the pattern union, and no non-ASCII mask in front of one
     from language_identification_spark.scrub.patterns import TRIGGER_REGEX
 
-    out = quality_filter(spark.read.parquet(parquet_src))
-    assert _formatted_plan(out).count(TRIGGER_REGEX) == 1
+    plan = _formatted_plan(quality_filter(spark.read.parquet(parquet_src)))
+    assert TRIGGER_REGEX not in plan
+    assert "[^\\x00-\\x7F]" not in plan
 
 
 def test_jaccard_pairs_single_udf_evaluation(spark, parquet_src):
