@@ -4005,8 +4005,8 @@ pii AS MATERIALIZED (
 
 
 def _q_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-repo PII/secret census over the planted corpus — counts replay
-    the scrubber's ordered count+replace chain JVM-side (zero Python),
+    """Per-repo PII/secret census over the planted corpus — counts come
+    from the scrub chain itself in one Arrow UDF (six longs back per row),
     then one partial-aggregated groupBy on the repo key."""
     from language_identification_spark.operators.audit import scrub_audit
 
@@ -4636,8 +4636,8 @@ def _q_scrub_comments_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Comment-scoped PII scrub: the frozen scrub chain applied ONLY inside
     comment regions (full-line ``#``/``//`` comments + ``/* */`` blocks via
     a row-local clamped-depth fold over the line array), leaving executable
-    text untouched.  Zero Exchange, zero UDF; verified by the rewritten
-    text's sha256."""
+    text untouched.  Zero Exchange, one Arrow UDF (the scrub chain per
+    scoped line); verified by the rewritten text's sha256."""
     from language_identification_spark.operators.commentscope import (
         scrub_comments_scoped,
     )

@@ -49,13 +49,6 @@ def stopword_ratio_col(c: Column) -> Column:
     return stop.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def avg_token_len_col(c: Column) -> Column:
-    t = F.trim(c)
-    n_tok = token_count_col(c)
-    n_nonspace = F.length(F.regexp_replace(t, r"\s", ""))
-    return F.when(n_tok > 0, n_nonspace.cast("double") / n_tok).otherwise(F.lit(0.0))
-
-
 def quality_score_col(c: Column) -> Column:
     """Composite [0,1] quality score from length, punctuation, and stopword
     signals — a pure-expression stand-in for model-based quality filters."""

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from language_identification_spark.functions.text import STOPWORDS
 
-N_FEATURES = 3
 DEFAULT_ITERS = 40
 DEFAULT_LR = 4.0
 

@@ -21,12 +21,12 @@ extension surface.  The pattern spec it audits mirrors the per-label
 transform in ``/root/reference/disconnected_language_detector.py:559-894``.
 
 Scale shape (100 TB lens):
-- ``scrub_audit``: counts are computed scan-side per row (JVM regex inside
-  whole-stage codegen — no Python), then one partial-aggregated groupBy on
-  the repo key; the Exchange carries O(#repos x 8 longs), content never
-  shuffles.  Counting replays the scrubber's ordered count-then-replace
-  chain so audit numbers equal what the scrub stage actually redacts
-  (earlier rules consume text later rules would otherwise double-count).
+- ``scrub_audit``: one Arrow UDF runs the scrub chain itself
+  (``scrubber.scrub_text``) per row and sends back six longs, not the
+  text, so audit numbers equal what the scrub redacts (earlier rules
+  consume text later rules would otherwise double-count).  Then one
+  partial-aggregated groupBy on the repo key: the Exchange carries
+  O(#repos x 8 longs), content never shuffles.
 - ``secret_candidates``: regexp_extract_all + posexplode emits only the
   rare candidate tokens (a ~1e-3 row multiplier on code corpora), entropy
   is a bounded O(len * distinct_chars) fold per token, and the output
@@ -36,10 +36,17 @@ Scale shape (100 TB lens):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType, StructField, StructType
 
-from language_identification_spark.scrub.patterns import PATTERNS, jvm_scrub
+from ..pyworker import forget_zip_importers
+from ..scrub.patterns import PATTERNS
+from ..scrub.scrubber import scrub_text
+
+_RULE_COLS = [f"n_{name}" for name, _pat, _repl in PATTERNS]
 
 # candidate charset: base64/base64url/hex/uuid-ish material.  24+ chars is
 # the conventional floor (AWS secret keys are 40, most API tokens 32+);
@@ -54,6 +61,17 @@ SECRET_TOKEN_REGEX = r"[A-Za-z0-9+/=_-]{24,}"
 DEFAULT_ENTROPY_BITS = 4.2
 
 
+def _rule_counts_batch(text: pd.Series) -> pd.DataFrame:
+    """Each row's per-rule substitution counts, in spec order."""
+    forget_zip_importers()
+    return pd.DataFrame([scrub_text(t)[1] for t in text], columns=_RULE_COLS, dtype="int64")
+
+
+_rule_counts_udf = pandas_udf(
+    _rule_counts_batch, StructType([StructField(n, LongType()) for n in _RULE_COLS])
+)
+
+
 def scrub_audit(
     df: DataFrame,
     repo_col: str = "source",
@@ -63,20 +81,17 @@ def scrub_audit(
 
     Output: ``<repo_col>``, one ``n_<rule>`` long per pattern in spec
     order, plus ``n_redactions`` (total substitutions), ``n_docs_hit``
-    (docs with >=1 hit) and ``n_docs``.  Counts replay the scrubber's
-    ordered count+replace chain, so they match ``scrub_series`` exactly
-    (a PEM body consumed by the private_key rule is not re-counted by
-    the email rule, etc.).
+    (docs with >=1 hit) and ``n_docs``.  The counts come from the scrub
+    chain itself, so they match ``scrub_series`` exactly (a PEM body
+    consumed by the private_key rule is not re-counted by the email rule,
+    etc.).
     """
-    _, counts = jvm_scrub(F.coalesce(F.col(text_col), F.lit("")))
-    names = [f"n_{name}" for name, _pat, _repl in PATTERNS]
-    per_doc = df.select(
-        F.col(repo_col), *[c.alias(n) for c, n in zip(counts, names)]
-    )
-    total = sum((F.col(n) for n in names[1:]), F.col(names[0]))
+    counts = _rule_counts_udf(F.coalesce(F.col(text_col), F.lit("")))
+    per_doc = df.select(F.col(repo_col), counts.alias("c")).select(repo_col, "c.*")
+    total = sum((F.col(n) for n in _RULE_COLS[1:]), F.col(_RULE_COLS[0]))
     per_doc = per_doc.withColumn("n_total", total)
     agg = per_doc.groupBy(repo_col).agg(
-        *[F.sum(n).alias(n) for n in names],
+        *[F.sum(n).alias(n) for n in _RULE_COLS],
         F.sum("n_total").alias("n_redactions"),
         F.sum((F.col("n_total") > 0).cast("long")).alias("n_docs_hit"),
         F.count(F.lit(1)).alias("n_docs"),

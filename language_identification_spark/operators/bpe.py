@@ -213,7 +213,8 @@ def bpe_encode(
     (~2 s).  Byte-for-byte equal output: split/trim/join/replace all
     mirror the JVM ops one-to-one (Java regex ``\\s`` without
     UNICODE_CHARACTER_CLASS == Python ``re.ASCII`` ``\\s``; Spark
-    ``trim`` strips 0x20 only == ``str.strip(' ')``).  Still row-local:
+    ``trim`` strips 0x20 only == ``str.strip(' ')``; ``str.lower()`` ==
+    ``F.lower`` on ASCII only).  Still row-local:
     one scan, no Exchange, only (id, text) cross the Python boundary.
 
     Output: ``id_col``, ``n_subwords``, ``out_col`` (space-joined subword
@@ -246,6 +247,8 @@ def bpe_encode(
                 t = "" if t is None else str(t)
                 t = t.strip(" ")
                 if lowercase:
+                    # == training's F.lower on ASCII only: CPython's and the
+                    # JVM's Unicode case tables may disagree beyond ASCII
                     t = t.lower()
                 words = [w for w in ws_re.split(t) if w != ""] if t else []
                 sym = " ".join(" ".join(w) + " </w>" for w in words)

@@ -24,11 +24,11 @@ Scope model (same documented regex-level approximation as
   positive is extra redaction of PII-shaped strings only — non-PII text is
   never altered, so over-scoping errs on the privacy-safe side.
 
-Everything is a row-local Catalyst expression: the depth tracker is a
-single ``F.aggregate`` fold over the line array (no window, no Exchange,
-no UDF), the scrub itself is the frozen ordered pattern chain from
-``scrub/patterns.py`` applied per scoped line via ``zip_with``.  At 100 TB
-this operator is embarrassingly parallel — one projection per file split.
+Everything is row-local: the depth tracker is a single ``F.aggregate``
+fold over the line array (Catalyst: no window, no Exchange), and the scrub
+is the one scrub chain (``scrub/scrubber.py``) run per scoped line in one
+Arrow UDF, ``scrub_scoped_lines``.  At 100 TB this operator is
+embarrassingly parallel — one projection per file split.
 
 The per-line application means the multi-line ``private_key`` PEM rule
 cannot span lines here (each line is scrubbed independently); PEM blocks
@@ -41,10 +41,15 @@ window cumulative sums — an independent formulation of the same fold.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..scrub.patterns import jvm_scrub
+from ..pyworker import forget_zip_importers
+from ..scrub.scrubber import scrub_series
 from .codestats import COMMENT_RE
 
 
@@ -56,11 +61,6 @@ def _opens(line: Column) -> Column:
 
 def _closes(line: Column) -> Column:
     return F.size(F.split(line, r"\*/")) - 1
-
-
-def scrub_line_expr(line: Column) -> Column:
-    """The frozen ordered count+replace chain's REPLACE side, per line."""
-    return jvm_scrub(line)[0]
 
 
 def comment_scope_flags(lines: Column) -> Column:
@@ -92,6 +92,32 @@ def comment_scope_flags(lines: Column) -> Column:
     return F.aggregate(lines, init, step, lambda acc: acc["flags"])
 
 
+def _scrub_scoped_batch(lines: pd.Series, flags: pd.Series) -> pd.DataFrame:
+    """Scrub every line flagged in scope, each on its own, and re-join each
+    row with ``\\n``: ``text`` is the rewritten row, ``n_sub`` its
+    substitutions."""
+    forget_zip_importers()
+    text, n_sub = scrub_series(
+        pd.Series([line for row in lines for line in row], dtype=object),
+        mask=pd.Series([f for row in flags for f in row], dtype=bool),
+    )
+    text = text.tolist()
+    bounds = np.concatenate(([0], np.cumsum(lines.map(len)))).astype(np.int64)
+    return pd.DataFrame(
+        {
+            "text": ["\n".join(text[a:b]) for a, b in zip(bounds[:-1], bounds[1:])],
+            "n_sub": np.diff(np.concatenate(([0], np.cumsum(n_sub)))[bounds]),
+        }
+    )
+
+
+# (lines array<string>, flags array<boolean>) -> struct<text, n_sub>
+scrub_scoped_lines = pandas_udf(
+    _scrub_scoped_batch,
+    StructType([StructField("text", StringType()), StructField("n_sub", LongType())]),
+)
+
+
 def scrub_comments_scoped(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -101,41 +127,26 @@ def scrub_comments_scoped(
     chain substitutions within scoped lines only), ``scrubbed_chars`` and
     ``scrubbed_sha256`` of the rewritten text — the exact-rewrite check
     without hauling text through the compare (the ``strip_comments`` /
-    ``collapse_runs`` contract).  One projection, zero Exchange, zero UDF.
+    ``collapse_runs`` contract).  One projection with one Arrow UDF, zero
+    Exchange.
 
     Callers that want the rewritten corpus itself use the same building
     blocks directly::
 
-        flags = comment_scope_flags(F.split(text, "\\n"))
-        out = F.array_join(F.zip_with(lines, flags, ...), "\\n")
+        lines = F.split(text, "\\n")
+        out = scrub_scoped_lines(lines, comment_scope_flags(lines))["text"]
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
     lines = F.split(text, "\n")
-    flags = comment_scope_flags(lines)
-    out_lines = F.zip_with(
-        lines,
-        flags,
-        lambda l, f: F.when(f, scrub_line_expr(l)).otherwise(l),
+    scoped = df.select(
+        F.col(id_col), lines.alias("lines"), comment_scope_flags(lines).alias("flags")
     )
-    scrubbed = F.array_join(out_lines, "\n")
-    n_red = F.aggregate(
-        F.zip_with(
-            lines,
-            flags,
-            lambda l, f: F.when(
-                f, sum(jvm_scrub(l)[1], F.lit(0).cast("long"))
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return df.select(
-        F.col(id_col),
-        F.size(lines).cast("long").alias("n_lines"),
-        F.size(F.filter(flags, lambda x: x)).cast("long").alias(
-            "n_scoped_lines"
-        ),
-        n_red.alias("n_redactions"),
-        F.length(scrubbed).cast("long").alias("scrubbed_chars"),
-        F.sha2(F.encode(scrubbed, "UTF-8"), 256).alias("scrubbed_sha256"),
+    s = scrub_scoped_lines("lines", "flags")
+    return scoped.select(
+        id_col,
+        F.size("lines").cast("long").alias("n_lines"),
+        F.size(F.filter("flags", lambda x: x)).cast("long").alias("n_scoped_lines"),
+        s["n_sub"].alias("n_redactions"),
+        F.length(s["text"]).cast("long").alias("scrubbed_chars"),
+        F.sha2(F.encode(s["text"], "UTF-8"), 256).alias("scrubbed_sha256"),
     )

@@ -26,9 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -36,18 +34,6 @@ from pyspark.sql.types import (
 )
 
 from ..pyworker import forget_zip_importers
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [

@@ -1,8 +1,9 @@
 """Ordered PII/secret scrub patterns — the frozen spec shared as DATA.
 
-Both the Spark scrub stage (``scrub/scrubber.py``) and the independent
-labeler (``datagen/labeler.py``) apply exactly this list in exactly this
-order, one ``subn`` per pattern.  Order matters: PEM blocks are removed
+The Spark scrub chain (``scrub/scrubber.py``, which every Spark-side
+scrub runs), the independent labeler (``datagen/labeler.py``) and the
+DuckDB oracle SQL (RE2) apply exactly this list in exactly this order,
+one ``subn`` per pattern.  Order matters: PEM blocks are removed
 first so their base64 body can't partially match later patterns.
 
 Reference analog: the per-segment content transformation keyed by detected
@@ -69,42 +70,6 @@ COMPILED: tuple[tuple[str, "re.Pattern[str]", str], ...] = tuple(
 # benchmark's ``trigger.s`` ablation still times this union as a Java
 # ``rlike``.  (?i:..), [0-9] classes, \s and lazy quantifiers parse
 # identically in java.util.regex, Python re (ASCII mode) and RE2; \b does
-# not (below).
+# not (Java 17's \b counts non-ASCII letters as word characters).
 TRIGGER_REGEX = "|".join(f"(?:{p})" for _n, p, _r in PATTERNS)
-
-
-# ``\b`` as re.ASCII and RE2 read it, spelled for java.util.regex (whose
-# ``\b`` counts non-ASCII letters as word characters on Java 17).  Each
-# lookaround tests one character, so the rewrite stays linear and adds no
-# capture group.
-_ASCII_WORD_BOUNDARY = (
-    r"(?:(?<=[A-Za-z0-9_])(?![A-Za-z0-9_])|(?<![A-Za-z0-9_])(?=[A-Za-z0-9_]))"
-)
-
-
-def _java_repl(repl: str) -> str:
-    """Python ``\\1`` backreferences -> Java ``$1`` (JVM regexp_replace)."""
-    return re.sub(r"\\(\d)", r"$\1", repl)
-
-
-def jvm_scrub(text):
-    r"""The ordered count+replace chain over ``PATTERNS`` as JVM columns.
-
-    Returns ``(scrubbed, counts)``: ``text`` with every rule applied in
-    spec order, and one long column per rule (spec order) counting its
-    substitutions on the text the earlier rules left — a PEM body consumed
-    by ``private_key`` is not re-counted by ``email``.  Both equal what
-    ``scrub_series`` gives: every ``\b`` is rewritten to the ASCII word
-    boundary first, so a secret next to ``é`` or ``ñ`` is scrubbed as the
-    labeler scrubs it.  ``PATTERNS`` itself stays RE2-compatible for the
-    oracles."""
-    from pyspark.sql import functions as F
-
-    cur = text
-    counts = []
-    for _name, pat, repl in PATTERNS:
-        pat = pat.replace(r"\b", _ASCII_WORD_BOUNDARY)
-        counts.append(F.regexp_count(cur, F.lit(pat)).cast("long"))
-        cur = F.regexp_replace(cur, pat, _java_repl(repl))
-    return cur, counts
 

@@ -59,10 +59,10 @@ def test_scrub_audit_ordered_chain_no_double_count(spark):
     assert out["n_redactions"] == 1
 
 
-def test_scrub_audit_plan_jvm_only_one_exchange(spark):
+def test_scrub_audit_plan_one_python_stage_one_exchange(spark):
     df = spark.createDataFrame([Row(source="r", text="a@b.com")])
     plan = scrub_audit(df)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan  # pure JVM regex, no Python stage
+    assert plan.count("ArrowEvalPython") == 1  # the scrub chain's counts
     assert plan.count("Exchange") == 1  # exactly the groupBy
 
 

@@ -1,9 +1,10 @@
 """Driver queries against their DuckDB oracles at sf0.001: the same
 per-query comparison ``tools/check_oracles.py`` runs by hand, so an oracle
-regression in the keep/drop + scrub path, or in the connected-components
-contraction (``fork_collapse``, ``semantic_dedup`` and the four
-minhash-component queries run it end to end against a recursive-CTE
-closure), fails the suite."""
+regression in the keep/drop + scrub path, in the scrub family
+(``scrub_audit``, ``scrub_comments_scoped``, ``entropy_secrets``), or in
+the connected-components contraction (``fork_collapse``, ``semantic_dedup``
+and the four minhash-component queries run it end to end against a
+recursive-CTE closure), fails the suite."""
 
 from __future__ import annotations
 
@@ -43,6 +44,9 @@ def entry():
         "dedup_representatives",
         "leakage_safe_split",
         "dup_weighted_docs",
+        "scrub_audit",
+        "scrub_comments_scoped",
+        "entropy_secrets",
     ],
 )
 def test_flagship_query_matches_oracle(spark, entry, name):

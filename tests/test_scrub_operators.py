@@ -1,10 +1,12 @@
-"""The JVM count+replace scrub chain (``scrub/patterns.py::jvm_scrub``)
-equals ``scrub_series`` next to non-ASCII letters, where Java 17's own
-``\\b`` would count ``é``/``ñ`` as word characters."""
+"""``scrub_audit`` and ``scrub_comments_scoped`` give what ``scrub_series``
+gives, next to non-ASCII letters too (where a Java 17 ``\\b`` would count
+``é``/``ñ`` as word characters): every Spark-side scrub runs the one scrub
+chain."""
 
 from __future__ import annotations
 
 import hashlib
+import time
 
 import pandas as pd
 
@@ -57,3 +59,27 @@ def test_scoped_comment_scrub_matches_scrub_series(spark):
     assert [got[i].scrubbed_sha256 for i in range(len(ROWS))] == [
         hashlib.sha256(t.encode()).hexdigest() for t in text_exp
     ]
+
+
+def test_scrub_audit_begin_without_end_is_linear(spark):
+    from language_identification_spark.config import DEFAULT_CONFIG
+    from language_identification_spark.functions.heuristics import (
+        cheap_drop_reason,
+        with_heuristics,
+    )
+    from tests.test_scrub import ADVERSARIAL_PEM_ROW
+
+    df = spark.createDataFrame(
+        [("r", ADVERSARIAL_PEM_ROW)], "source string, text string"
+    )
+    # the flagship would scrub this row: no cheap rule drops it
+    cheap = with_heuristics(df.withColumnRenamed("text", "content")).select(
+        cheap_drop_reason(DEFAULT_CONFIG).alias("r")
+    )
+    assert cheap.collect()[0].r is None
+    warm = spark.createDataFrame([("r", "x")], "source string, text string")
+    scrub_audit(warm).collect()  # a Python worker started outside the budget
+    t0 = time.perf_counter()
+    row = scrub_audit(df).collect()[0]
+    assert time.perf_counter() - t0 < 2.0
+    assert row.n_redactions == 0 and row.n_docs == 1
