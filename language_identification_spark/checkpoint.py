@@ -32,8 +32,15 @@ metrics".
   reaper confs in ``session.py``.
 
 Scale note: each bucket is one parallel Spark job over ~1/n_buckets of
-the staged input, and two buckets are in flight, so one bucket's plan build
-and commit overlap the other's job and its straggler tasks.
+the staged input.  The plan is built once per run over the whole staged
+table and each bucket binds late to it, a ``_bucket`` filter that Catalyst
+prunes at the scan; a ``stage_fn`` that keeps the filter above the scan
+(an aggregate, a join, a limit, a nondeterministic column) is refused
+before the first bucket runs.  Staging rebalances on ``_bucket``, so a
+bucket holds ~bucket bytes / advisory partition size files, not one per
+staging task, and its job has that many tasks.  Buckets in flight follow
+from that layout: enough to give every core a task, at least two, so one
+bucket's commit overlaps another's job and its straggler tasks.
 n_buckets trades checkpoint granularity against per-bucket overhead; at
 10^12 files a few thousand buckets keep a restart's loss under 0.1%.  The
 staging table costs one extra write+read of the input but replaces
@@ -45,15 +52,19 @@ from __future__ import annotations
 import itertools
 import json
 import logging
+import math
 import os
+import re
 import threading
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .config import DROP_REASONS
 from .sources.tableio import ParquetTableIO
@@ -196,15 +207,52 @@ def stage_source(
             "whole output root to restart from scratch."
         )
     if not reuse:
+        # rebalancing on the bucket bounds each bucket's files by its bytes
+        # (AQE's advisory partition size), not by the staging task count;
+        # the rows are the same, so tables staged without it still resume
         (
             src.withColumn("_bucket", bucket_col(n_buckets))
+            .hint("rebalance", "_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(staging_dir)
         )
         with open(meta_path, "w") as f:
             json.dump(meta, f)
-    return spark.read.parquet(staging_dir)
+    # the schema is known: reading with it skips the footer-inference job
+    schema = StructType([*src.schema.fields, StructField("_bucket", IntegerType())])
+    return spark.read.schema(schema).parquet(staging_dir)
+
+
+_NOT_ROW_LOCAL = (
+    "stage_fn must be row-local and deterministic: run_checkpointed builds "
+    "its plan once over the staged table and binds each bucket as a _bucket "
+    "filter that must reach the staged scan, which an aggregate, a join, a "
+    "limit or a nondeterministic column prevents"
+)
+_BUCKET_REF = re.compile(r"\b_bucket#\d+")
+
+
+def _bucket_pruned_at_scan(df: DataFrame) -> bool:
+    """True iff the only operators of ``df``'s optimized plan that read
+    ``_bucket`` are Filters directly over the staged relation, which the
+    planner turns into partition pruning."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    found = False
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        kids = [kids.apply(i) for i in range(kids.size())]
+        todo += kids
+        if not _BUCKET_REF.search(node.references().toString()):
+            continue
+        if not (
+            node.nodeName() == "Filter"
+            and kids[0].getClass().getSimpleName() == "LogicalRelation"
+        ):
+            return False
+        found = True
+    return found
 
 
 def run_checkpointed(
@@ -217,23 +265,61 @@ def run_checkpointed(
     fail_between: int | None = None,
     bucket_timeout_sec: float | None = None,
 ) -> DataFrame:
-    """Run ``stage_fn`` bucket by bucket, two buckets in flight, one
-    snapshot commit per bucket carrying its metrics row.
+    """Run ``stage_fn`` over the staged source once and commit its result
+    bucket by bucket, one snapshot commit per bucket carrying its metrics
+    row.
+
+    The plan is built once; each bucket binds late to it with a ``_bucket``
+    filter that must reach the staged scan, so ``stage_fn`` must be
+    row-local and deterministic (no aggregate, join, limit or random
+    column), else ``ValueError`` before any bucket runs.  Buckets in flight
+    are derived from the staged layout: ``ceil(defaultParallelism /
+    tasks_per_bucket)``, at least two and at most the pending count.
 
     ``fail_after=k`` injects a crash right after the k-th commit;
     ``fail_between=k`` crashes the k-th commit INSIDE its window — data
     files landed, manifest not swapped (the orphan state resume must
-    ignore).  They leave exactly k and k-1 commits: the bucket still in
-    flight is never committed.  Returns the union of all committed results.
+    ignore).  They leave exactly k and k-1 commits: the buckets still in
+    flight are never committed.  Returns the union of all committed results.
     """
     results = ParquetTableIO(f"{out_root}/results")
     # a bucket is DONE only when its snapshot carries its metrics row; older
     # roots (results + a separate metrics table) have none and are redone
     results.prune(lambda s: "metrics" in s["meta"])
     done = {m["bucket"] for m in results.committed_meta()}
+    pending = sorted(set(range(n_buckets)) - done)
     staged = stage_source(
         spark, src, f"{out_root}/staging", n_buckets,
         has_committed_work=bool(done),
+    )
+    t_plan = time.monotonic()
+    planned = stage_fn(staged.drop("_bucket"))
+    # S8: metrics via df.observe — computed by the SAME job that writes
+    # the snapshot, so lineage costs zero extra scans and zero recompute
+    aggs = [F.count(F.lit(1)).alias("rows_in")]
+    if _VERDICT_COLS.issubset(set(planned.columns)):
+        reason = F.coalesce(F.col("drop_reason"), F.lit("keep"))
+        aggs += [
+            F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+            F.sum("n_redactions").alias("n_redactions"),
+            *[
+                F.sum((reason == r).cast("long")).alias(f"reason_{r}")
+                for r in ("keep", *DROP_REASONS)
+            ],
+        ]
+    try:
+        probe = planned.filter(F.col("_bucket") == 0)
+    except AnalysisException as e:  # _bucket cannot reach the scan at all
+        raise ValueError(_NOT_ROW_LOCAL) from e
+    if not _bucket_pruned_at_scan(probe):
+        raise ValueError(_NOT_ROW_LOCAL)
+    plan_ms = int((time.monotonic() - t_plan) * 1000)
+    tasks_per_bucket = max(1, staged.filter(F.col("_bucket") == 0).rdd.getNumPartitions())
+    cores = spark.sparkContext.defaultParallelism
+    in_flight = max(2, min(len(pending), math.ceil(cores / tasks_per_bucket)))
+    log.info(
+        "buckets pending=%d tasks_per_bucket=%d in_flight=%d plan_ms=%d",
+        len(pending), tasks_per_bucket, in_flight, plan_ms,
     )
     stop = threading.Event()
     errors: list[BaseException] = []
@@ -241,23 +327,8 @@ def run_checkpointed(
 
     def run_bucket(b: int) -> None:
         t0 = time.monotonic()
-        staged_out = stage_fn(staged.filter(F.col("_bucket") == b).drop("_bucket"))
-        # S8: metrics via df.observe — computed by the SAME job that writes
-        # the snapshot, so lineage costs zero extra scans and zero recompute
-        has_verdict = _VERDICT_COLS.issubset(set(staged_out.columns))
-        aggs = [F.count(F.lit(1)).alias("rows_in")]
-        if has_verdict:
-            reason = F.coalesce(F.col("drop_reason"), F.lit("keep"))
-            aggs += [
-                F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-                F.sum("n_redactions").alias("n_redactions"),
-                *[
-                    F.sum((reason == r).cast("long")).alias(f"reason_{r}")
-                    for r in ("keep", *DROP_REASONS)
-                ],
-            ]
         obs = Observation(f"bucket-{b}")
-        staged_out = staged_out.observe(obs, *aggs)
+        staged_out = planned.filter(F.col("_bucket") == b).observe(obs, *aggs)
         commit: dict = {}
 
         def commit_meta() -> dict:  # runs under the results commit lock
@@ -313,7 +384,7 @@ def run_checkpointed(
             raise RuntimeError(f"injected failure after bucket {b}")
 
     def guarded(b: int) -> None:
-        # the first error stops the other thread from committing or starting
+        # the first error stops the other threads from committing or starting
         if stop.is_set():
             return
         try:
@@ -324,11 +395,10 @@ def run_checkpointed(
             errors.append(e)
             stop.set()
 
-    # two buckets in flight: one's plan build and commit overlap the other's
-    # job and its straggler tail; each thread inherits the caller's job group
+    # each thread inherits the caller's job group
     try:
-        with ThreadPoolExecutor(2, thread_name_prefix="bucket") as pool:
-            for b in sorted(set(range(n_buckets)) - done):
+        with ThreadPoolExecutor(in_flight, thread_name_prefix="bucket") as pool:
+            for b in pending:
                 pool.submit(inheritable_thread_target(spark)(guarded), b)
     finally:
         stop.set()

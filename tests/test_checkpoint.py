@@ -386,3 +386,143 @@ def test_stage_source_restages_on_older_fingerprint_scheme(spark, src, tmp_path)
     assert staged.count() == src.count()
     with open(meta_path) as f:
         assert _json.load(f)["v"] == meta["v"]
+
+
+def test_bucket_pass_skips_staged_schema_inference(spark, src, tmp_path):
+    # the staged table is read with the schema the runner already has, so
+    # the one job a pass pays outside its buckets is the results union read
+    from language_identification_spark.checkpoint import stage_source
+
+    root = str(tmp_path / "jobs1")
+    stage_source(spark, src, f"{root}/staging", N_BUCKETS)
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-job-pin-1", "job-count pin")
+    try:
+        run_checkpointed(spark, src, root, quality_filter, N_BUCKETS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("ckpt-job-pin-1"))
+    assert n_jobs <= N_BUCKETS + 1, n_jobs
+
+
+@pytest.mark.parametrize("n_buckets", [2, 8])
+def test_stage_fn_is_called_once_per_run(spark, src, tmp_path, n_buckets):
+    calls = []
+
+    def identity(df):
+        calls.append(1)
+        return df
+
+    out = run_checkpointed(spark, src, str(tmp_path / "once"), identity, n_buckets)
+    assert len(calls) == 1
+    assert out.count() == src.count()
+
+
+def test_bucket_plan_binds_late_and_prunes_at_scan(spark, src, tmp_path, monkeypatch):
+    # every bucket writes the one plan built over the staged table, with the
+    # bucket's predicate pruning partitions at the scan: no Filter above it,
+    # one Python stage, no Exchange
+    import contextlib
+    import io
+    import re
+
+    handed = []
+    append = ParquetTableIO.append
+
+    def capture(self, df, meta=None):
+        handed.append(df)
+        return append(self, df, meta)
+
+    monkeypatch.setattr(ParquetTableIO, "append", capture)
+    run_checkpointed(spark, src, str(tmp_path / "plan"), quality_filter, N_BUCKETS)
+    assert len(handed) == N_BUCKETS
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        handed[0].explain("formatted")
+    plan = re.sub(r"#\d+", "", buf.getvalue())
+    tree = plan.split("\n\n", 1)[0]
+    b = int(re.search(r"\(_bucket = (\d+)\)", plan).group(1))
+    assert f"PartitionFilters: [isnotnull(_bucket), (_bucket = {b})]" in plan, plan
+    assert tree.count("ArrowEvalPython") == 1, tree
+    assert "Filter" not in tree, tree
+    assert "Exchange" not in tree, tree
+
+
+def test_staging_writes_one_file_per_bucket(spark, src, tmp_path):
+    # 8 staging tasks used to write 8 files into every bucket dir; the
+    # rebalance on _bucket sizes the files to the data instead
+    import glob
+
+    from language_identification_spark.checkpoint import stage_source
+
+    root = str(tmp_path / "files")
+    staged = stage_source(spark, src.repartition(8), root, N_BUCKETS)
+    dirs = sorted(glob.glob(os.path.join(root, "_bucket=*")))
+    assert len(dirs) == N_BUCKETS
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "part-*"))) == 1, d
+    assert staged.filter(F.col("_bucket") == 0).rdd.getNumPartitions() == 1
+
+
+def test_old_layout_staging_resumes_to_same_rows(spark, src, tmp_path, full_rows, caplog):
+    # a staging dir written before the rebalance (one file per staging task
+    # in every bucket) is reused as is: the runner derives fewer buckets in
+    # flight from its wider bucket scans and ends with the same rows
+    import glob
+    import logging
+
+    from language_identification_spark.checkpoint import _source_fingerprint
+
+    root = str(tmp_path / "oldlayout")
+    staging = f"{root}/staging"
+    (
+        src.repartition(4).withColumn("_bucket", bucket_col(N_BUCKETS))
+        .write.partitionBy("_bucket").parquet(staging)
+    )
+    with open(os.path.join(staging, "_staging_meta.json"), "w") as f:
+        json.dump({"v": 2, "n_buckets": N_BUCKETS, "source": _source_fingerprint(src)}, f)
+    for d in glob.glob(os.path.join(staging, "_bucket=*")):
+        assert len(glob.glob(os.path.join(d, "part-*"))) == 4, d
+    caplog.set_level(logging.INFO, logger="language_identification_spark.checkpoint")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(
+            spark, src, root, quality_filter, N_BUCKETS, fail_after=2
+        )
+    assert "tasks_per_bucket=4 in_flight=2" in caplog.text, caplog.text
+    resumed = run_checkpointed(spark, src, root, quality_filter, N_BUCKETS)
+    assert _sorted_rows(resumed) == full_rows
+    for d in glob.glob(os.path.join(staging, "_bucket=*")):
+        assert len(glob.glob(os.path.join(d, "part-*"))) == 4, d  # not re-staged
+
+
+@pytest.mark.parametrize(
+    "stage_fn",
+    [
+        lambda df: df.groupBy("repo").count(),
+        lambda df: df.join(df.select("repo").distinct(), "repo"),
+        lambda df: df.limit(5),
+        lambda df: df.withColumn("r", F.rand(0)),
+    ],
+    ids=["aggregate", "join", "limit", "rand"],
+)
+def test_stage_fn_that_cannot_bind_late_fails_fast(spark, src, tmp_path, stage_fn):
+    # the bucket predicate must reach the staged scan; a stage_fn that keeps
+    # it above (or cannot carry _bucket at all) is refused before any bucket
+    # runs, instead of failing opaquely, returning too few rows or scanning
+    # every bucket's files per bucket
+    root = str(tmp_path / "bad")
+    with pytest.raises(ValueError, match="row-local and deterministic"):
+        run_checkpointed(spark, src, root, stage_fn, N_BUCKETS)
+    assert ParquetTableIO(f"{root}/results").snapshots() == []
+
+
+def test_empty_source_runs_to_no_rows(spark, src, tmp_path):
+    # staging an empty source writes no partition dirs; the staged read
+    # takes the known schema, so the run commits empty buckets instead of
+    # failing to infer a schema from no files
+    out = run_checkpointed(
+        spark, src.limit(0), str(tmp_path / "empty"), quality_filter, N_BUCKETS
+    )
+    assert out.count() == 0
+    assert read_metrics(spark, str(tmp_path / "empty")).count() == N_BUCKETS
