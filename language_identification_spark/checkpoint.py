@@ -61,7 +61,6 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -233,6 +232,22 @@ _NOT_ROW_LOCAL = (
 _BUCKET_REF = re.compile(r"\b_bucket#\d+")
 
 
+def _bucket_resolvable(df: DataFrame) -> bool:
+    """True iff Spark's analyzer can bind a ``_bucket`` filter over ``df``:
+    it carries a column missing from the output down through single-child
+    operators, except an Aggregate or a SubqueryAlias, to the relation that
+    still has it.  Reading this off the analyzed plan, instead of trying the
+    filter, keeps a refused ``stage_fn`` from logging Spark's analysis error
+    with its JVM trace."""
+    node = df._jdf.queryExecution().analyzed()
+    while not _BUCKET_REF.search(node.output().toString()):
+        kids = node.children()
+        if kids.size() != 1 or node.nodeName() in ("Aggregate", "SubqueryAlias"):
+            return False
+        node = kids.apply(0)
+    return True
+
+
 def _bucket_pruned_at_scan(df: DataFrame) -> bool:
     """True iff the only operators of ``df``'s optimized plan that read
     ``_bucket`` are Filters directly over the staged relation, which the
@@ -307,11 +322,9 @@ def run_checkpointed(
                 for r in ("keep", *DROP_REASONS)
             ],
         ]
-    try:
-        probe = planned.filter(F.col("_bucket") == 0)
-    except AnalysisException as e:  # _bucket cannot reach the scan at all
-        raise ValueError(_NOT_ROW_LOCAL) from e
-    if not _bucket_pruned_at_scan(probe):
+    if not _bucket_resolvable(planned) or not _bucket_pruned_at_scan(
+        planned.filter(F.col("_bucket") == 0)
+    ):
         raise ValueError(_NOT_ROW_LOCAL)
     plan_ms = int((time.monotonic() - t_plan) * 1000)
     tasks_per_bucket = max(1, staged.filter(F.col("_bucket") == 0).rdd.getNumPartitions())

@@ -23,19 +23,6 @@ def token_count_col(c: Column) -> Column:
     ).cast("long")
 
 
-def bpe_ish_token_count_col(c: Column) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND on transitions
-    between alnum runs and punctuation runs (a cheap BPE-like upper bound)."""
-    # count alnum runs + non-alnum/non-space runs
-    alnum_runs = F.size(
-        F.filter(F.split(c, r"[^\p{L}\p{N}]+"), lambda x: x != "")
-    )
-    punct_runs = F.size(
-        F.filter(F.split(c, r"[\p{L}\p{N}\s]+"), lambda x: x != "")
-    )
-    return (alnum_runs + punct_runs).cast("long")
-
-
 def punct_ratio_col(c: Column) -> Column:
     non_alnum_non_space = F.length(F.regexp_replace(c, r"[\p{L}\p{N}\s]", ""))
     return non_alnum_non_space.cast("double") / F.greatest(

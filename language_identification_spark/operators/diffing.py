@@ -18,9 +18,8 @@ Scale shape (100 TB lens): the content hash is computed scan-side
 (built-in sha2 inside whole-stage codegen), so the full-outer
 sort-merge join shuffles only (key, 64-hex-char hash) pairs — content
 never crosses the Exchange.  Unchanged rows (the overwhelming majority
-of any refresh) are filtered pre-shuffle-read on the joined result;
-with both snapshots written bucketed-by-key the Exchange disappears
-entirely.  No driver-side state, no collect.
+of any refresh) are filtered pre-shuffle-read on the joined result.
+No driver-side state, no collect.
 """
 
 from __future__ import annotations
@@ -62,10 +61,3 @@ def snapshot_diff(
     if not keep_unchanged:
         out = out.filter(F.col("status") != "unchanged")
     return out
-
-
-def diff_stats(diff: DataFrame) -> DataFrame:
-    """One-row-per-status rollup of a ``snapshot_diff`` result —
-    the refresh health report (O(4) rows out of a corpus-sized input;
-    single partial-aggregated groupBy)."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_rows"))

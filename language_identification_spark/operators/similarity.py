@@ -72,15 +72,6 @@ def _norm_hof(v: Column) -> Column:
     )
 
 
-def _dot_hof(va: Column, vb: Column) -> Column:
-    """Left-fold dot product (HOF form — see note above)."""
-    return F.aggregate(
-        F.zip_with(va, vb, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def cosine_topk(
     df: DataFrame, query: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
@@ -219,7 +210,7 @@ def cosine_dup_pairs(
     - The cosine threshold sits LAST in the join condition, after the
       cheap integer conjuncts, so the 64-dim dot only evaluates for
       deduplicated id-ordered candidates (conjunct order alone measured
-      131 s vs 13 s at sf1.0; see the fold-form note at ``_dot_hof``).
+      131 s vs 13 s at sf1.0; see the HOF note above ``_norm_hof``).
     - Below ``_DUP_BROADCAST_MAX_ROWS`` input rows the self-join
       broadcasts the build side and round-robin-repartitions the probe
       side: with only ``2^rows_per_band`` distinct sign patterns per

@@ -100,19 +100,3 @@ def leakage_safe_split(
         )
         .withColumn("split", assign)
     )
-
-
-def split_census(
-    assignments: DataFrame,
-    docs: DataFrame,
-    strata_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-(split, stratum) doc counts — the report a split ships with."""
-    return (
-        assignments.join(
-            docs.select(F.col(id_col), F.col(strata_col)), id_col
-        )
-        .groupBy("split", strata_col)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )

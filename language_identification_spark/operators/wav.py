@@ -138,13 +138,6 @@ def convert_wav(
     return encode_wav16(normalize_peak(mono, headroom_db), target_rate)
 
 
-def read_frames(payload: bytes, start_frame: int, frames: int) -> bytes:
-    """Chunked frame read (the reference's ``_read_frames`` over bytes)."""
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        wf.setpos(start_frame)
-        return wf.readframes(frames)
-
-
 CONVERTED_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

@@ -1,8 +1,7 @@
 """Data layout — range-sorted writes, zone-map audit, and compaction.
 
-Bucketing (`sources/bucketed.py`) pre-pays the JOIN shuffle; this module
-pre-pays the FILTER scan.  Parquet footers carry per-column min/max
-statistics per row group ("zone maps"), and Spark pushes comparison
+This module pre-pays the FILTER scan.  Parquet footers carry per-column
+min/max statistics per row group ("zone maps"), and Spark pushes comparison
 predicates down to the reader (`PushedFilters` in the plan), which then
 skips every row group — and, via footer-only reads, effectively every
 file — whose min/max range cannot contain a match.  On randomly-ordered

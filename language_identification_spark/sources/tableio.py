@@ -26,27 +26,19 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-class SnapshotTableIO:
-    """The snapshot/append contract, storage-format-agnostic.
+class ParquetTableIO:
+    """The snapshot/append contract over parquet snapshot dirs.
 
-    Subclasses pick the data format (`_write`/`_read`); the commit protocol
-    — data first, atomic manifest replace second, readers see only the
-    manifest — is identical for every implementation, and the contract test
-    (tests/test_tableio_contract.py) runs against all of them.  The real
-    Iceberg runtime slots in as a third subclass whose `_write`/`_read` call
-    ``df.writeTo(...)``; nothing above this interface changes.
+    The commit protocol — data first, atomic manifest replace second,
+    readers see only the manifest — is what tests/test_tableio_contract.py
+    pins; an Iceberg runtime would replace the two parquet calls with
+    ``df.writeTo(...)`` and keep everything else.
     """
 
     def __init__(self, table_path: str):
         self.table_path = table_path
         self._lock = threading.Lock()
         os.makedirs(table_path, exist_ok=True)
-
-    def _write(self, df: DataFrame, data_dir: str) -> None:
-        raise NotImplementedError
-
-    def _read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        raise NotImplementedError
 
     @property
     def _manifest_path(self) -> str:
@@ -72,7 +64,7 @@ class SnapshotTableIO:
         record what the write produced (``Observation`` metrics), or raise to
         veto the commit, leaving the data dir an invisible orphan."""
         snap_id = uuid.uuid4().hex[:16]
-        self._write(df, self.snapshot_dir(snap_id))
+        df.write.mode("overwrite").parquet(self.snapshot_dir(snap_id))
         with self._lock:
             entry = (meta() if callable(meta) else meta) or {}
             snap = {"id": snap_id, "dir": f"snap-{snap_id}", "meta": entry}
@@ -88,7 +80,7 @@ class SnapshotTableIO:
         if not snaps:
             return None
         paths = [os.path.join(self.table_path, s["dir"]) for s in snaps]
-        return self._read(spark, paths)
+        return spark.read.parquet(*paths)
 
     def committed_meta(self) -> list[dict]:
         return [s["meta"] for s in self.snapshots()]
@@ -105,27 +97,3 @@ class SnapshotTableIO:
             if len(kept) < len(snaps):
                 self._swap(kept)
         return len(snaps) - len(kept)
-
-
-class ParquetTableIO(SnapshotTableIO):
-    """Parquet-backed snapshots — the default (and fastest) implementation."""
-
-    def _write(self, df: DataFrame, data_dir: str) -> None:
-        df.write.mode("overwrite").parquet(data_dir)
-
-    def _read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        return spark.read.parquet(*paths)
-
-
-class JsonTableIO(SnapshotTableIO):
-    """JSON-lines-backed snapshots — the second implementation that keeps
-    the interface honest (SURVEY §7.0 promised the contract tested against
-    more than one storage path).  Schema note: spark.read.json infers types,
-    so readers get the same column names with JSON-representable types."""
-
-    def _write(self, df: DataFrame, data_dir: str) -> None:
-        df.write.mode("overwrite").json(data_dir)
-
-    def _read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        # read.json's second positional is a schema — pass paths as ONE list
-        return spark.read.json(paths)

@@ -5,25 +5,14 @@
 first label, extends monotonically on same label (``:1085-1089``), closes +
 reopens on a label switch (``:1092-1118``).  The batch twin is
 ``operators/islands.py``; this module is the Structured Streaming twin via
-``applyInPandasWithState`` — state = the open island per key, emitted rows =
-closed islands.
+``applyInPandasWithState`` — state = the open island per key plus the
+events the watermark has not yet released, emitted rows = closed islands.
 
-Timeout handling mirrors the reference's watchdog (``:1160-1169``): when a
-group sees no data before the processing-time timeout, the open island is
-flushed as closed.
-
-Two variants:
-
-- ``make_merge_islands_stateful`` (processing-time): events must arrive in
-  order per key, and ``max_gap`` must match, for exact parity with the batch
-  operator (the reference sorts first, ``:928``); sort-within-batch handles
-  intra-batch disorder only.  The default instance uses ``max_gap=inf``
-  (the live machine's semantics — same-label runs never gap-split).
-- ``make_merge_islands_eventtime`` (event-time): tolerant of out-of-order
-  arrival ACROSS micro-batches — events are buffered in state until the
-  watermark passes them, then run through the same machine in sorted order,
-  so a late event that bridges two islands still yields one island
-  (VERDICT r03 #4).  Use this one on real streams with late data.
+``make_merge_islands_eventtime`` is tolerant of out-of-order arrival ACROSS
+micro-batches: events are buffered in state until the watermark passes
+them, then run through the machine in sorted order, so a late event that
+bridges two islands still yields one island (VERDICT r03 #4).  The
+``sessionize_events_stream`` query runs it through ``streaming/replay.py``.
 """
 
 from __future__ import annotations
@@ -31,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -42,14 +31,6 @@ from pyspark.sql.types import (
 
 from ..pyworker import forget_zip_importers
 
-STATE_SCHEMA = StructType(
-    [
-        StructField("label", StringType()),
-        StructField("start", LongType()),
-        StructField("end", LongType()),
-    ]
-)
-
 OUTPUT_SCHEMA = StructType(
     [
         StructField("key", StringType()),
@@ -58,84 +39,6 @@ OUTPUT_SCHEMA = StructType(
         StructField("island_end", LongType()),
     ]
 )
-
-
-def make_merge_islands_stateful(max_gap: int | float = float("inf")):
-    """Build an applyInPandasWithState function that emits closed islands.
-
-    ``max_gap`` gives exact parity with the batch ``merge_islands`` operator:
-    a same-label event whose start exceeds the running end by more than
-    ``max_gap`` closes the island and opens a new one.  The default (inf)
-    matches the reference's LIVE ``on_lid_segment`` machine, which extends a
-    same-label run regardless of gap (``:1085-1089``) — gap splitting there
-    happens only in the offline merge (``:901-958``).
-
-    Usage:
-        df.groupBy("key").applyInPandasWithState(
-            make_merge_islands_stateful(max_gap), OUTPUT_SCHEMA, STATE_SCHEMA,
-            "append", GroupStateTimeout.ProcessingTimeTimeout)
-    """
-
-    def merge_fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        forget_zip_importers()
-        k = key[0]
-        closed: list[tuple] = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                label, start, end = state.get
-                closed.append((k, label, start, end))
-                state.remove()
-            yield pd.DataFrame(
-                closed, columns=["key", "label", "island_start", "island_end"]
-            )
-            return
-
-        if state.exists:
-            cur_label, cur_start, cur_end = state.get
-        else:
-            cur_label, cur_start, cur_end = None, None, None
-
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["start", "end"])  # reference sorts first (:928)
-            for label, start, end in zip(pdf["label"], pdf["start"], pdf["end"]):
-                label, start, end = str(label), int(start), int(end)
-                if cur_label is None:
-                    # case 1: first label → open (reference :1065-1080)
-                    cur_label, cur_start, cur_end = label, start, end
-                elif label == cur_label and start <= cur_end + max_gap:
-                    # case 2: same label within gap → extend monotonically
-                    # (:1085-1089; gap condition = batch twin's ``<=`` :935)
-                    cur_end = max(cur_end, end)
-                else:
-                    # case 3: switch or gap-split → close current, open next
-                    # (:1092-1118)
-                    closed.append((k, cur_label, cur_start, cur_end))
-                    cur_label, cur_start, cur_end = label, start, end
-
-        if cur_label is not None:
-            state.update((cur_label, cur_start, cur_end))
-            state.setTimeoutDuration(30_000)
-        yield pd.DataFrame(
-            closed, columns=["key", "label", "island_start", "island_end"]
-        )
-
-    return merge_fn
-
-
-# default instance: the reference's live switch machine (no gap splitting)
-merge_islands_stateful = make_merge_islands_stateful()
-
-
-# ---------------------------------------------------------------------------
-# Event-time variant: tolerant of OUT-OF-ORDER arrival across micro-batches
-# (VERDICT r03 #4).  The in-order machine above splits an island if a late
-# event that would have bridged it arrives in a later micro-batch; this one
-# buffers events in state until the watermark passes them, then runs the
-# SAME switch machine over the watermark-released prefix in sorted order.
-# ---------------------------------------------------------------------------
 
 EVENTTIME_STATE_SCHEMA = StructType(
     [
@@ -166,11 +69,11 @@ def make_merge_islands_eventtime(
     units) to the same epoch-ms scale as ``ts`` and must match that
     derivation (default: ``timestamp_seconds`` → value × 1000).  Per key the
     state holds the open island plus a small pending buffer of
-    not-yet-released events (bounded by arrival rate × watermark delay, the
-    same bound ``dropDuplicatesWithinWatermark`` gives the streaming exact
-    dedup).  Per invocation: append the batch's events, release the
-    ``ts < watermark`` prefix in ``(start, end)`` order through the same
-    open/extend/switch/gap-split machine as the in-order twin.
+    not-yet-released events (bounded by arrival rate × watermark delay).
+    Per invocation: append the batch's events, release the ``ts <
+    watermark`` prefix in ``(start, end)`` order through the
+    open/extend/switch/gap-split machine (the reference sorts first,
+    ``:928``).
 
     Island finalization (round-4 advice): for FINITE ``max_gap`` the open
     island closes exactly when the watermark passes
@@ -196,10 +99,14 @@ def make_merge_islands_eventtime(
 
     def _step(cur, label, start, end, closed, k):
         cur_label, cur_start, cur_end = cur
-        if cur_label is None:
+        if cur_label is None:  # first label → open (:1065-1080)
             return (label, start, end)
+        # same label within gap → extend monotonically (:1085-1089); the gap
+        # condition is the batch twin's ``<=``, so a gap of exactly max_gap
+        # still merges
         if label == cur_label and start <= cur_end + max_gap:
             return (cur_label, cur_start, max(cur_end, end))
+        # switch or gap-split → close current, open next (:1092-1118)
         closed.append((k, cur_label, cur_start, cur_end))
         return (label, start, end)
 

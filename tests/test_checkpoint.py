@@ -506,7 +506,9 @@ def test_old_layout_staging_resumes_to_same_rows(spark, src, tmp_path, full_rows
     ],
     ids=["aggregate", "join", "limit", "rand"],
 )
-def test_stage_fn_that_cannot_bind_late_fails_fast(spark, src, tmp_path, stage_fn):
+def test_stage_fn_that_cannot_bind_late_fails_fast(
+    spark, src, tmp_path, stage_fn, capfd
+):
     # the bucket predicate must reach the staged scan; a stage_fn that keeps
     # it above (or cannot carry _bucket at all) is refused before any bucket
     # runs, instead of failing opaquely, returning too few rows or scanning
@@ -515,6 +517,9 @@ def test_stage_fn_that_cannot_bind_late_fails_fast(spark, src, tmp_path, stage_f
     with pytest.raises(ValueError, match="row-local and deterministic"):
         run_checkpointed(spark, src, root, stage_fn, N_BUCKETS)
     assert ParquetTableIO(f"{root}/results").snapshots() == []
+    # refused from the analyzed plan: no failed analysis logs Spark's
+    # UNRESOLVED_COLUMN error and its JVM trace ahead of the ValueError
+    assert "UNRESOLVED_COLUMN" not in "".join(capfd.readouterr())
 
 
 def test_empty_source_runs_to_no_rows(spark, src, tmp_path):

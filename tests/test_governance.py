@@ -13,7 +13,7 @@ from language_identification_spark.operators.audit import (
     scrub_audit,
     secret_candidates,
 )
-from language_identification_spark.operators.diffing import diff_stats, snapshot_diff
+from language_identification_spark.operators.diffing import snapshot_diff
 from language_identification_spark.operators.embstats import norm_outliers
 from language_identification_spark.operators.repolevel import fork_pairs
 
@@ -120,7 +120,7 @@ def test_snapshot_diff_statuses(spark):
     assert got[4]["status"] == "added" and got[4]["old_sha256"] is None
 
     full = snapshot_diff(old, new, keep_unchanged=True)
-    stats = {r["status"]: r["n_rows"] for r in diff_stats(full).collect()}
+    stats = {r["status"]: r["count"] for r in full.groupBy("status").count().collect()}
     assert stats == {"removed": 1, "changed": 1, "added": 1, "unchanged": 1}
 
 

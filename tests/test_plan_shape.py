@@ -86,26 +86,6 @@ def test_analyze_input_clipped_jvm_side(spark, parquet_src):
     assert "substring" in plan and "4096" in plan
 
 
-def test_multimodal_feature_stage_single_python_node_no_shuffle(spark):
-    # the media feature extractor is ONE Arrow-batched python stage over the
-    # scan — no Exchange, no second python crossing (100 TB: decode cost is
-    # the only cost)
-    from language_identification_spark.operators.multimodal import (
-        extract_features,
-    )
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"P5 1 1 255\n\x00"), None, None, None, None)],
-        "media_id long, kind string, payload binary, width int, height int, "
-        "sample_rate int, n_frames int",
-    )
-    plan = (
-        extract_features(media)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("MapInPandas") == 1, plan
-    assert "Exchange" not in plan, plan
-
-
 def test_winnow_dup_pairs_plan_shape(spark):
     # VERDICT r04 #2: the winnowing pair miner's physical plan must be the
     # 100 TB shape — fingerprints computed pure-Catalyst (zero Python

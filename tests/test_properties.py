@@ -1,19 +1,13 @@
 """Property checks from SURVEY §5.2: verdict monotonicity in thresholds,
-island merge insensitivity to input order, sub-word token count bounds."""
+island merge insensitivity to input order."""
 
 from __future__ import annotations
 
 from dataclasses import replace
 
-from pyspark.sql import functions as F
-
 from language_identification_spark.config import DEFAULT_CONFIG
 from language_identification_spark.datagen.corpus import generate_source_files
 from language_identification_spark.datagen.labeler import label_frame
-from language_identification_spark.functions.text import (
-    bpe_ish_token_count_col,
-    token_count_col,
-)
 from language_identification_spark.operators.islands import merge_islands
 
 
@@ -50,26 +44,3 @@ def test_islands_order_insensitive(spark):
         )
         results.append(got)
     assert results[0] == results[1] == results[2]
-
-
-def test_bpe_ish_token_count(spark):
-    rows = [
-        ("hello world",),            # 2 alnum runs, 0 punct runs
-        ("f(x) = y + 1;",),          # alnum runs: f x y 1 → 4; punct runs: 5
-        ("",),
-        ("no_punct here",),          # '_' splits alnum runs: no punct here → 3; _ → 1
-    ]
-    df = spark.createDataFrame(rows, "t string")
-    got = [
-        (r.n, r.w)
-        for r in df.select(
-            bpe_ish_token_count_col(F.col("t")).alias("n"),
-            token_count_col(F.col("t")).alias("w"),
-        ).collect()
-    ]
-    assert got[0] == (2, 2)
-    assert got[1] == (9, 5)  # 5 whitespace tokens: f(x) = y + 1;
-    assert got[2] == (0, 0)
-    assert got[3] == (4, 2)
-    # sub-word count always >= whitespace count
-    assert all(n >= w for n, w in got)

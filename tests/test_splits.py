@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from language_identification_spark.operators.splits import (
     leakage_safe_split,
-    split_census,
     split_edges,
 )
 
@@ -73,14 +72,6 @@ def test_fracs_must_sum_to_one():
         split_edges({"train": 1.0, "val": 0.0})
     with pytest.raises(ValueError, match="at least one"):
         split_edges({})
-
-
-def test_census(spark):
-    docs = _docs(spark, 30)
-    out = leakage_safe_split(docs, _comps(spark, []), FRACS)
-    census = split_census(out, docs, "lang").collect()
-    assert sum(r.n_docs for r in census) == 30
-    assert all(r.split in FRACS for r in census)
 
 
 def test_bucket_matches_duckdb_arithmetic(spark):

@@ -1,28 +1,22 @@
-"""Stateful streaming island merge: rate-limited micro-batches reproduce the
-reference's open/extend/switch behavior; closed islands match the batch op."""
+"""Event-time stateful island merge: out-of-order micro-batches reproduce
+the reference's open/extend/switch behavior; closed islands match the batch
+op."""
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from language_identification_spark.streaming.stateful import (
-    OUTPUT_SCHEMA,
-    STATE_SCHEMA,
-    make_merge_islands_stateful,
-    merge_islands_stateful,
-)
 
+class _FakeEventState:
+    """Minimal event-time GroupState stand-in (watermark + timestamp) for
+    unit-testing the merge function."""
 
-class _FakeState:
-    """Minimal GroupState stand-in for unit-testing the merge function."""
-
-    hasTimedOut = False
-
-    def __init__(self):
+    def __init__(self, wm_ms=0):
         self._v = None
+        self._wm = wm_ms
+        self.timeout_ts = None
+        self.hasTimedOut = False
 
     @property
     def exists(self):
@@ -37,102 +31,6 @@ class _FakeState:
 
     def remove(self):
         self._v = None
-
-    def setTimeoutDuration(self, ms):
-        pass
-
-
-def _run(fn, rows):
-    import pandas as pd
-
-    state = _FakeState()
-    pdf = pd.DataFrame(rows, columns=["label", "start", "end"])
-    out = list(fn(("k",), iter([pdf]), state))[0]
-    closed = [tuple(r[1:]) for r in out.itertuples(index=False)]
-    return closed, state._v
-
-
-def test_stateful_gap_split_matches_batch_semantics():
-    # same-label events with a gap > max_gap must close and reopen, exactly
-    # like merge_islands' gap condition (start > running_end + max_gap)
-    rows = [("en", 0, 10), ("en", 15, 20), ("en", 40, 50)]
-    closed, open_island = _run(make_merge_islands_stateful(max_gap=5), rows)
-    assert closed == [("en", 0, 20)]  # gap of exactly max_gap still merges
-    assert open_island == ("en", 40, 50)
-    # default instance (live machine, max_gap=inf): never gap-splits
-    closed, open_island = _run(merge_islands_stateful, rows)
-    assert closed == []
-    assert open_island == ("en", 0, 50)
-
-
-def test_stateful_switch_machine(spark, tmp_path):
-    # events: en en | ar | en  → closed islands after stream drains: en, ar
-    # (the final en island stays open in state — matches the reference,
-    # which finalizes the open segment only at shutdown :1174-1193)
-    rows = [
-        ("f1", "en", 0, 10),
-        ("f1", "en", 10, 20),
-        ("f1", "ar", 20, 30),
-        ("f1", "en", 30, 40),
-    ]
-    src_dir = tmp_path / "events"
-    src_dir.mkdir()
-    import pandas as pd
-
-    pd.DataFrame(rows, columns=["key", "label", "start", "end"]).to_parquet(
-        src_dir / "p0.parquet"
-    )
-
-    stream = (
-        spark.readStream.schema("key string, label string, start long, end long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir))
-    )
-    out = stream.groupBy("key").applyInPandasWithState(
-        merge_islands_stateful,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("islands_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # with a processing-time timeout the stateful operator asks for another
-    # (no-data) batch forever, so availableNow never terminates by itself
-    # and processAllAvailable never returns: stop once the input is consumed
-    deadline = time.monotonic() + 120
-    while sum(p["numInputRows"] for p in q.recentProgress) < len(rows):
-        assert q.isActive, q.exception()
-        assert time.monotonic() < deadline, q.status
-        time.sleep(0.2)
-    q.stop()
-    assert not q.isActive and q.exception() is None
-    got = [
-        (r.label, r.island_start, r.island_end)
-        for r in spark.sql(
-            "select * from islands_out order by island_start"
-        ).collect()
-    ]
-    # the two switch-closed islands are deterministic; the final open island
-    # may additionally be flushed by the processing-time timeout (the
-    # reference's watchdog analog) depending on trigger timing
-    assert got[:2] == [("en", 0, 20), ("ar", 20, 30)]
-    assert got[2:] in ([], [("en", 30, 40)])
-
-
-class _FakeEventState(_FakeState):
-    """_FakeState plus the event-time surface (watermark + timestamp)."""
-
-    def __init__(self, wm_ms=0):
-        super().__init__()
-        self._wm = wm_ms
-        self.timeout_ts = None
-        self.hasTimedOut = False
 
     def getCurrentWatermarkMs(self):
         return self._wm
@@ -197,9 +95,10 @@ def test_eventtime_quiet_key_resume_within_gap_matches_batch():
     assert _run_eventtime(fn, st, []) == []
     assert st._v[:3] == ("en", 100, 110)
     assert st.timeout_ts == 130_001
-    # an on-time extender within max_gap arrives later → still ONE island
+    # an on-time extender exactly max_gap past the island's end arrives
+    # later → still ONE island (the batch twin's gap test is ``<=``)
     st._wm = 128_000
-    assert _run_eventtime(fn, st, [("en", 129, 140, 129)]) == []
+    assert _run_eventtime(fn, st, [("en", 130, 140, 130)]) == []
     st.hasTimedOut = True
     st._wm = 200_000
     out = list(fn(("k",), iter([]), st))[0]
@@ -221,7 +120,7 @@ def test_eventtime_quiet_key_resume_within_gap_matches_batch():
 def test_eventtime_stream_late_event_bridges_islands(spark, tmp_path):
     # VERDICT r03 #4 done-condition: a real 2-micro-batch stream where a late
     # event bridges two islands; output must equal the batch operator on the
-    # sorted whole.  The in-order twin would emit a split (en,100,110) here.
+    # sorted whole.
     import os
     import time
 
@@ -311,8 +210,10 @@ def test_eventtime_release_is_strictly_below_watermark():
 def test_replay_harness_matches_batch_islands(spark):
     # the sessionize_events_stream oracle's harness: a synthetic multi-key
     # table replayed as a real multi-micro-batch out-of-order stream must
-    # reproduce the batch gaps-and-islands operator exactly (keys, starts,
-    # ends), including islands that only close via the drain sentinels
+    # reproduce the batch gaps-and-islands operator exactly (keys, labels,
+    # starts, ends), including islands that only close via the drain
+    # sentinels and a label switch inside a burst, which closes an island
+    # like a gap does
     from language_identification_spark.operators.islands import merge_islands
     from language_identification_spark.streaming.replay import (
         replay_island_stream,
@@ -325,19 +226,20 @@ def test_replay_harness_matches_batch_islands(spark):
         for i in range(40):
             # per-key rhythm: bursts separated by > gap every 10th event
             t += 400_000 + (7_000_000 if i % 10 == 9 else 0) + 100_000 * (k % 3)
-            rows.append((f"k{k}", "s", t, t))
+            rows.append((f"k{k}", "en" if i < 25 else "ar", t, t))
     ev = spark.createDataFrame(
         rows, "key string, label string, start long, end long"
     )
 
     batch = merge_islands(ev, ["key"], "label", "start", "end", max_gap=gap)
     want = sorted(
-        (r["key"], r["island_start"], r["island_end"])
+        (r["key"], r["label"], r["island_start"], r["island_end"])
         for r in batch.collect()
     )
     out = replay_island_stream(spark, ev, max_gap=gap, n_batches=4)
     got = sorted(
-        (r["key"], r["island_start"], r["island_end"]) for r in out.collect()
+        (r["key"], r["label"], r["island_start"], r["island_end"])
+        for r in out.collect()
     )
     assert got == want and len(want) > 6
 

@@ -1,5 +1,5 @@
-"""TableIO contract test, run against BOTH storage implementations: atomic
-commit visibility, orphan invisibility, committed metadata, pruning."""
+"""TableIO contract test: atomic commit visibility, orphan invisibility,
+committed metadata, pruning."""
 
 from __future__ import annotations
 
@@ -8,15 +8,10 @@ import os
 
 import pytest
 
-from language_identification_spark.sources.tableio import (
-    JsonTableIO,
-    ParquetTableIO,
-)
-
-IMPLS = [ParquetTableIO, JsonTableIO]
+from language_identification_spark.sources.tableio import ParquetTableIO
 
 
-@pytest.fixture(params=IMPLS, ids=[c.__name__ for c in IMPLS])
+@pytest.fixture(params=[ParquetTableIO], ids=["ParquetTableIO"])
 def impl(request):
     return request.param
 
@@ -43,10 +38,7 @@ def test_uncommitted_data_invisible(spark, tmp_path, impl):
     t = impl(str(tmp_path / "t"))
     t.append(_df(spark, 0, 3), {"bucket": 0})
     orphan = os.path.join(t.table_path, "snap-deadbeefcafe0000")
-    if isinstance(t, JsonTableIO):
-        _df(spark, 100, 110).write.json(orphan)
-    else:
-        _df(spark, 100, 110).write.parquet(orphan)
+    _df(spark, 100, 110).write.parquet(orphan)
     assert t.read(spark).count() == 3  # orphan rows never appear
     assert len(t.snapshots()) == 1
 
@@ -99,18 +91,25 @@ def test_concurrent_appends_lose_no_commit(tmp_path):
     import sys
     import threading
 
-    from language_identification_spark.sources.tableio import SnapshotTableIO
+    class DirOnlyFrame:
+        """Stands in for a DataFrame whose parquet write only makes the dir."""
 
-    class DirOnly(SnapshotTableIO):
-        def _write(self, df, data_dir):
+        @property
+        def write(self):
+            return self
+
+        def mode(self, _):
+            return self
+
+        def parquet(self, data_dir):
             os.makedirs(data_dir)
 
-    t = DirOnly(str(tmp_path / "t"))
+    t = ParquetTableIO(str(tmp_path / "t"))
     n_threads, per_thread = 16, 25
 
     def worker(i):
         for j in range(per_thread):
-            t.append(None, lambda: {"w": i, "j": j})
+            t.append(DirOnlyFrame(), lambda: {"w": i, "j": j})
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)

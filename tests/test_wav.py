@@ -22,9 +22,7 @@ from language_identification_spark.operators.wav import (
     decode_pcm,
     encode_wav16,
     normalize_peak,
-    read_frames,
     resample_linear,
-    to_mono,
     wav_props,
 )
 
@@ -116,14 +114,6 @@ def test_normalize_peak_silence_passthrough():
     assert np.array_equal(normalize_peak(z), z)
 
 
-def test_read_frames_chunked_equals_whole():
-    payload = _make_wav(8000, 1, 2)
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        whole = wf.readframes(wf.getnframes())
-    chunks = b"".join(read_frames(payload, s, 512) for s in range(0, 2000, 512))
-    assert chunks == whole
-
-
 @pytest.mark.skipif(not os.path.exists(GOLDEN), reason="reference sample absent")
 def test_golden_reference_sample():
     """The reference's own pre-optimized sample: our props reader agrees with
@@ -167,29 +157,6 @@ def test_convert_audio_spark_matches_local_kernel(spark):
             2,
             TARGET_RATE,
         )
-
-
-def test_audio_feature_is_real_rms_envelope(spark):
-    """extract_features on a RIFF audio payload decodes for real: the
-    feature equals the per-segment RMS of the decoded mono signal."""
-    from language_identification_spark.operators.multimodal import (
-        FEATURE_DIM,
-        extract_features,
-    )
-
-    payload = _make_wav(8000, 1, 2, seconds=0.5)
-    df = spark.createDataFrame(
-        [(1, "audio", payload, None, None, 8000, None)],
-        "media_id long, kind string, payload binary, width int, height int,"
-        " sample_rate int, n_frames int",
-    )
-    (row,) = extract_features(df).collect()
-    mono = to_mono(decode_pcm(payload)[0])
-    seg = len(mono) // FEATURE_DIM
-    expected = np.sqrt(
-        (mono[: seg * FEATURE_DIM].reshape(FEATURE_DIM, seg) ** 2).mean(axis=1)
-    )
-    assert np.allclose(np.array(row.feature), expected, atol=1e-6)
 
 
 def test_convert_audio_survives_corrupt_riff(spark):
