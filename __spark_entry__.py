@@ -1706,35 +1706,6 @@ def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _src_fingerprint(src: str) -> str:
-    """Cache key for staged artifacts derived from a parquet source:
-    sha256 over (path, size, mtime) of every constituent file, so
-    regenerating the source under the same path invalidates the cache
-    instead of silently reusing a stale artifact (ADVICE r02 #5)."""
-    import hashlib
-    import os
-
-    h = hashlib.sha256()
-    # the source may be a single parquet FILE or a directory of parts —
-    # os.walk on a file yields nothing, which silently degenerated the
-    # fingerprint to sha256("") and pinned one cache dir forever (round-4
-    # find: the strict sidecar check flushed out a stale pre-sidecar index
-    # living under exactly that empty-hash name)
-    paths = (
-        [src]
-        if os.path.isfile(src)
-        else [
-            os.path.join(root, fn)
-            for root, _dirs, files in sorted(os.walk(src))
-            for fn in sorted(files)
-        ]
-    )
-    for p in paths:
-        st = os.stat(p)
-        h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}\n".encode())
-    return h.hexdigest()[:16]
-
-
 def _ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build-once cache of the write-side ANN index for `sf_dir`.
 
@@ -1745,6 +1716,7 @@ def _ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
+    from language_identification_spark.checkpoint import path_fingerprint
     from language_identification_spark.operators.similarity import build_ann_index
 
     from language_identification_spark.operators.similarity import (
@@ -1753,7 +1725,7 @@ def _ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
     src = f"{sf_dir}/embeddings.parquet"
     idx_dir = os.path.join(
-        tempfile.gettempdir(), f"ann_index_{_src_fingerprint(src)}"
+        tempfile.gettempdir(), f"ann_index_{path_fingerprint(src)}"
     )
     # a complete cache has BOTH the parquet _SUCCESS and the centroid
     # sidecar; anything less (older layout, crash between the two writes)
@@ -2318,11 +2290,12 @@ def _q_range_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from language_identification_spark.checkpoint import path_fingerprint
     from language_identification_spark.sources.layout import write_range_sorted
 
     src = f"{sf_dir}/documents.parquet"
     d = os.path.join(
-        tempfile.gettempdir(), f"range_layout_{_src_fingerprint(src)}"
+        tempfile.gettempdir(), f"range_layout_{path_fingerprint(src)}"
     )
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         write_range_sorted(

@@ -14,7 +14,9 @@ pre-training data run actually executes over a document lake:
 
 Stages (each optional stage is skipped unless its flag is given; every
 stage reads the previous stage's parquet, so a failed run resumes by
-re-submitting — completed stage outputs are detected and reused):
+re-submitting — completed stage outputs are detected and reused; a
+re-submit into the same ``--out`` from a changed ``--source`` or with other
+arguments raises, see ``checkpoint.check_job_record``):
 
 0. **license filter** (``--license-filter``) — SPDX/header license
    detection per file, repo-level rollup, permissive-only keep (one
@@ -132,6 +134,10 @@ def main() -> None:
     if args.rank_weighting and not args.module_owners:
         ap.error("--rank-weighting requires --module-owners")
 
+    from language_identification_spark.checkpoint import check_job_record
+
+    check_job_record(args)
+
     from language_identification_spark.operators.dedup import exact_dedup
     from language_identification_spark.operators.decontaminate import decontaminate
     from language_identification_spark.operators.linededup import dedup_lines
@@ -199,7 +205,7 @@ def main() -> None:
 
         def _fork_collapse(df):
             # verdict table is O(#repos); keep only representative repos'
-            # files (broadcast semi-join, same pattern as apply_repo_filter)
+            # files (broadcast semi-join, same pattern as the license filter)
             verdict = collapse_forks(
                 df, repo_col=args.repo_col, text_col=args.text_col,
                 min_jaccard_milli=args.fork_collapse,

@@ -22,7 +22,8 @@ oracle in ``__spark_entry__`` does precisely that).
 Resume contract matches jobs/run_curation.py: stages whose _SUCCESS
 exists are reused on re-submit — a killed run re-trains nothing it
 already committed (the encode stage re-reads the committed merges, so
-a resume encodes with the identical tokenizer).
+a resume encodes with the identical tokenizer).  A re-submit from a
+changed source or with other arguments (``--encode`` aside) raises.
 """
 
 from __future__ import annotations
@@ -57,6 +58,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from language_identification_spark.checkpoint import check_job_record
     from language_identification_spark.operators.bpe import (
         apply_merges,
         bpe_encode,
@@ -65,6 +67,8 @@ def main() -> None:
         word_freqs,
     )
 
+    # --encode only adds the last stage: no reused stage depends on it
+    check_job_record(args, "encode")
     owned = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName(args.app_name).getOrCreate()
     lowercase = not args.no_lowercase

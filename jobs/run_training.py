@@ -19,7 +19,8 @@ oracles and any external re-scorer unchanged.
         --source /path/to/documents_parquet --out /path/to/model_dir
 
 Resume contract matches jobs/run_curation.py: stages whose _SUCCESS (or
-output file) exists are reused on re-submit.
+output file) exists are reused on re-submit, and a re-submit from a
+changed source or with other arguments raises.
 """
 
 from __future__ import annotations
@@ -49,6 +50,8 @@ def main() -> None:
 
     import numpy as np
 
+    from language_identification_spark.checkpoint import check_job_record
+
     from language_identification_spark.models import langid as langid_mod
     from language_identification_spark.models import perplexity as ppl_mod
     from language_identification_spark.models.train_distributed import (
@@ -59,6 +62,7 @@ def main() -> None:
     )
     from tools.export_weights import _write_matrix
 
+    check_job_record(args)
     owned = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName(args.app_name).getOrCreate()
     docs = spark.read.parquet(args.source).select(

@@ -121,6 +121,63 @@ def _source_fingerprint(src: DataFrame) -> str:
     return hashlib.sha256("\n".join(parts).encode()).hexdigest()
 
 
+def path_fingerprint(path: str) -> str:
+    """Fingerprint of a parquet file or directory without a Spark job:
+    sha256 over (path, size, mtime) of every constituent file, so a source
+    regenerated under the same path gets a new fingerprint."""
+    import hashlib
+
+    h = hashlib.sha256()
+    # os.walk on a FILE yields nothing, which would pin every single-file
+    # source to sha256("")
+    paths = (
+        [path]
+        if os.path.isfile(path)
+        else [
+            os.path.join(root, fn)
+            for root, _dirs, files in sorted(os.walk(path))
+            for fn in sorted(files)
+        ]
+    )
+    for p in paths:
+        st = os.stat(p)
+        h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def check_job_record(args, *ignore: str) -> None:
+    """Refuse to resume a job into ``args.out`` from another source or with
+    other arguments.
+
+    The record is every parsed argument except ``app_name`` and ``ignore``
+    (arguments no reused stage depends on), plus ``path_fingerprint`` of
+    ``args.source``.  The first run writes it to ``<out>/_job.json``; a
+    later run whose record differs raises ``ValueError`` naming the
+    differing fields, before any stage runs — the jobs reuse every stage
+    whose ``_SUCCESS`` marker exists, which is only sound for the same
+    inputs (``stage_source`` refuses the same case for the checkpointed
+    runner).
+    """
+    record = {
+        k: v for k, v in vars(args).items() if k not in ("app_name", *ignore)
+    }
+    record["source_fingerprint"] = path_fingerprint(args.source)
+    path = os.path.join(args.out, "_job.json")
+    if os.path.exists(path):
+        with open(path) as f:
+            prev = json.load(f)
+        diff = sorted(k for k in record.keys() | prev.keys() if record.get(k) != prev.get(k))
+        if diff:
+            raise ValueError(
+                f"{args.out} holds stages of another job run (differs in "
+                f"{', '.join(diff)}); use a new --out or delete this one"
+            )
+        return
+    os.makedirs(args.out, exist_ok=True)
+    with open(path, "w") as f:
+        json.dump(record, f, indent=1, sort_keys=True)
+
+
 def stage_source(
     spark: SparkSession,
     src: DataFrame,

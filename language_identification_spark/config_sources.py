@@ -9,11 +9,6 @@ Re-expresses the reference's config behaviors as an engine config source
   75-109``).
 - ``env_get`` — multi-name fallback with or-chain semantics: the first name
   whose value is truthy wins, empty strings fall through (``:474-482``).
-- ``resolve_output_mode`` — preferred-option validity check with demotion to
-  the fallback and an error when neither is usable, mirroring the
-  endpoint→region demotion rule (``:494-507``): a catalog identifier that
-  does not look like ``catalog.db.table`` is demoted to path mode when an
-  output path exists.
 - ``filter_config`` — layer the decision thresholds into ``FilterConfig``
   with precedence spark conf > env > .env > frozen defaults.
 """
@@ -74,50 +69,28 @@ def load_dotenv(
     return loaded
 
 
-def env_get(
-    env: MutableMapping[str, str], *names: str, default: str = ""
-) -> str:
-    """First TRUTHY value among ``names`` (or-chain: '' falls through)."""
+def env_get(env: MutableMapping[str, str], *names: str) -> str:
+    """First TRUTHY value among ``names`` (or-chain: '' falls through), else ''."""
     for n in names:
         v = env.get(n)
         if v:
             return v.strip()
-    return default
-
-
-def resolve_output_mode(
-    catalog: str, path: str
-) -> tuple[str, str]:
-    """(mode, target) with the reference's demotion rule.
-
-    Prefer catalog mode; a catalog identifier without the ``cat.db.table``
-    shape is demoted to path mode when a path is available (the reference
-    demotes an endpoint without ``/speech/`` to region mode, ``:494-507``).
-    Raises when neither source is usable.
-    """
-    if catalog and "." not in catalog and path:
-        catalog = ""  # demote: malformed preferred option, fallback exists
-    if catalog:
-        return "catalog", catalog
-    if path:
-        return "path", path
-    raise ValueError("Provide an output catalog identifier or an output path.")
+    return ""
 
 
 def filter_config(
     env: MutableMapping[str, str] | None = None,
     dotenv_path: str | None = None,
     spark=None,
-    base: FilterConfig = DEFAULT_CONFIG,
 ) -> FilterConfig:
-    """Layered FilterConfig: spark conf > env > .env > ``base`` defaults."""
+    """Layered FilterConfig: spark conf > env > .env > ``DEFAULT_CONFIG``."""
     if env is None:
         env = os.environ
     if dotenv_path is not None:
         load_dotenv(dotenv_path, env)
 
     overrides: dict[str, object] = {}
-    for field in dataclasses.fields(base):
+    for field in dataclasses.fields(DEFAULT_CONFIG):
         if field.name not in ENV_NAMES:
             continue
         raw = env_get(env, *ENV_NAMES[field.name])
@@ -125,6 +98,6 @@ def filter_config(
             raw = spark.conf.get(SPARK_CONF_KEYS[field.name], None) or raw
         if not raw:
             continue
-        cur = getattr(base, field.name)
+        cur = getattr(DEFAULT_CONFIG, field.name)
         overrides[field.name] = type(cur)(raw)
-    return dataclasses.replace(base, **overrides) if overrides else base
+    return dataclasses.replace(DEFAULT_CONFIG, **overrides)

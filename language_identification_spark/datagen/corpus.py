@@ -247,13 +247,17 @@ def _pii(rng: np.random.Generator, lang: str, ext: str) -> str:
     return "\n".join(lines)
 
 
-def training_corpus(n_per_lang: int = 200, seed: int = 1337) -> dict[str, list[str]]:
+TRAIN_PER_LANG = 200  # clean training files per language
+TRAIN_SEED = 1337  # an RNG stream disjoint from the evaluation corpus' seeds
+
+
+def training_corpus() -> dict[str, list[str]]:
     """Clean files per language for model training (disjoint RNG stream)."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(TRAIN_SEED)
     out: dict[str, list[str]] = {}
     for lang in SUPPORTED_LANGS:
         docs = []
-        for i in range(n_per_lang):
+        for i in range(TRAIN_PER_LANG):
             ext = EXTS[i % len(EXTS)]
             docs.append(clean_content(rng, lang, ext))
         out[lang] = docs

@@ -64,10 +64,7 @@ WINNOW_B = 31
 WINNOW_M = 1 << 31
 
 
-def with_winnow_fingerprints(
-    df, text_col: str, out_col: str = "winnow_fp",
-    k: int = WINNOW_K, w: int = WINNOW_W,
-):
+def with_winnow_fingerprints(df, text_col: str, out_col: str = "winnow_fp"):
     """Winnowing rolling-hash fingerprints (Schleimer et al.) as PURE
     Catalyst expressions — the local document-fingerprinting scheme behind
     MOSS-style near-duplicate detection.
@@ -89,15 +86,15 @@ def with_winnow_fingerprints(
         tmp_cps, F.transform(F.split(norm, ""), lambda ch: F.ascii(ch).cast("long"))
     )
     cps = F.col(tmp_cps)
-    n_hashes = F.size(cps) - F.lit(k - 1)
+    n_hashes = F.size(cps) - F.lit(WINNOW_K - 1)
     df = df.withColumn(
         tmp_h,
         F.when(
-            F.size(cps) >= k,
+            F.size(cps) >= WINNOW_K,
             F.transform(
                 F.sequence(F.lit(1), n_hashes),
                 lambda i: F.aggregate(
-                    F.sequence(F.lit(0), F.lit(k - 1)),
+                    F.sequence(F.lit(0), F.lit(WINNOW_K - 1)),
                     F.lit(0).cast("long"),
                     lambda acc, j: (
                         acc * F.lit(WINNOW_B)
@@ -110,8 +107,10 @@ def with_winnow_fingerprints(
     )
     hashes = F.col(tmp_h)
     minima = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(hashes) - F.lit(w - 1), F.lit(1))),
-        lambda p: F.array_min(F.slice(hashes, p.cast("int"), w)),
+        F.sequence(
+            F.lit(1), F.greatest(F.size(hashes) - F.lit(WINNOW_W - 1), F.lit(1))
+        ),
+        lambda p: F.array_min(F.slice(hashes, p.cast("int"), WINNOW_W)),
     )
     fp = F.when(
         F.size(hashes) > 0, F.array_sort(F.array_distinct(minima))

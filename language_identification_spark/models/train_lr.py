@@ -96,12 +96,11 @@ def _margin_expr(weights: list[float]) -> Column:
 def train_quality_lr(
     df: DataFrame,
     text_col: str = "text",
-    iters: int = DEFAULT_ITERS,
-    lr: float = DEFAULT_LR,
 ) -> list[float]:
-    """Full-batch GD; returns ``[w0 (bias), w1, w2, w3]`` quantized to 9
-    decimals.  One aggregation job per iteration; only (d+1) scalars reach
-    the driver per round.
+    """Full-batch GD, ``DEFAULT_ITERS`` steps of size ``DEFAULT_LR``;
+    returns ``[w0 (bias), w1, w2, w3]`` quantized to 9 decimals.  One
+    aggregation job per iteration; only (d+1) scalars reach the driver per
+    round.
 
     The exact-integer features (4 longs per row) are persisted before the
     loop: without the cache every iteration re-scans the corpus and
@@ -128,7 +127,7 @@ def train_quality_lr(
     y = F.col("label").cast("double")
     w = [0.0, 0.0, 0.0, 0.0]
     try:
-        for _ in range(iters):
+        for _ in range(DEFAULT_ITERS):
             margin = _margin_expr(w)
             resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)) - y
             row = feats.agg(
@@ -142,7 +141,7 @@ def train_quality_lr(
             if n == 0:
                 raise ValueError("cannot train on an empty table")
             w = [
-                round(w[j] - lr * float(row[f"g{j}"]) / n, 9)
+                round(w[j] - DEFAULT_LR * float(row[f"g{j}"]) / n, 9)
                 for j in range(4)
             ]
     finally:

@@ -57,7 +57,7 @@ SECRET_TOKEN_REGEX = r"[A-Za-z0-9+/=_-]{24,}"
 # alphabet is 64 symbols but a 44-char sample only realizes ~32 distinct),
 # hex keys ~3.9, English identifiers ~3-4.2 on short strings.  4.2 catches
 # every random base64/alnum credential while keeping hex and identifiers
-# out; raise it for stricter precision.
+# out.
 DEFAULT_ENTROPY_BITS = 4.2
 
 
@@ -124,19 +124,17 @@ def secret_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_entropy_bits: float = DEFAULT_ENTROPY_BITS,
-    token_regex: str = SECRET_TOKEN_REGEX,
 ) -> DataFrame:
     """High-entropy credential candidates per document.
 
     Output: ``<id_col>``, ``pos`` (token ordinal within the doc),
     ``token_len``, ``token_sha256`` (the raw token never leaves the
     operator), ``entropy_milli`` (milli-bits/char, exact long) and
-    ``is_secret`` (entropy >= threshold).  One scan, zero Exchanges —
+    ``is_secret`` (entropy >= ``DEFAULT_ENTROPY_BITS``).  One scan, zero Exchanges —
     everything up to the caller's sink is row-local.
     """
     toks = F.expr(
-        f"regexp_extract_all(coalesce({text_col}, ''), '{token_regex}', 0)"
+        f"regexp_extract_all(coalesce({text_col}, ''), '{SECRET_TOKEN_REGEX}', 0)"
     )
     exploded = df.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
     chars = F.filter(F.split(F.col("tok"), ""), lambda x: x != F.lit(""))
@@ -147,7 +145,7 @@ def secret_candidates(
         F.length("tok").alias("token_len"),
         F.sha2(F.col("tok"), 256).alias("token_sha256"),
         F.round(F.round(ent, 6) * 1000).cast("long").alias("entropy_milli"),
-        (F.round(F.round(ent, 6) * 1000) >= F.lit(float(min_entropy_bits) * 1000)).alias(
+        (F.round(F.round(ent, 6) * 1000) >= F.lit(DEFAULT_ENTROPY_BITS * 1000)).alias(
             "is_secret"
         ),
     )

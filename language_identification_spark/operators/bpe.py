@@ -32,7 +32,7 @@ is scan-side, the word groupBy shuffles words not documents).  Each of
 the ``n_merges`` iterations is one job over the cached word table; the
 Exchange carries partial pair counts (O(local pair vocab) rows per
 partition).  The iteration's rewrite is whole-stage-codegen string ops —
-no UDF, no Python on the hot path.  Every ``cut_every`` merges the
+no UDF, no Python on the hot path.  Every ``CUT_EVERY`` merges the
 symbol table is materialized (``partitioning.materialize``), so lineage
 stays bounded.
 
@@ -50,6 +50,7 @@ from ..partitioning import materialize
 from ..pyworker import forget_zip_importers
 
 END_OF_WORD = "</w>"
+CUT_EVERY = 16  # merges between lineage cuts of the symbol table
 
 
 def word_freqs(df: DataFrame, text_col: str = "text", lowercase: bool = True) -> DataFrame:
@@ -108,7 +109,6 @@ def _bpe_train_with_words(
     text_col: str = "text",
     n_merges: int = 8,
     lowercase: bool = True,
-    cut_every: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
     """``bpe_train`` plus the FINAL merged word table (word, freq, sym) —
     the loop already holds it, so downstream consumers (vocabulary
@@ -116,10 +116,6 @@ def _bpe_train_with_words(
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
     spark = df.sparkSession
-
-    if cut_every <= 0:
-        raise ValueError(f"cut_every must be positive, got {cut_every}")
-
     cur = materialize(
         word_freqs(df, text_col=text_col, lowercase=lowercase).select(
             "word", "freq", initial_symbols(F.col("word")).alias("sym")
@@ -142,10 +138,10 @@ def _bpe_train_with_words(
         # chain references its input ONCE per iteration, so the plan only
         # deepens linearly — but at production merge counts (10^3+) an
         # uncut chain still makes Catalyst analysis quadratic-total and
-        # codegen depth unbounded.  Cutting every ``cut_every`` rounds
-        # bounds plan depth at ~3*cut_every string ops while paying the
-        # materialization cost 1/cut_every as often as an every-round cut.
-        if rank % cut_every == 0:
+        # codegen depth unbounded.  Cutting every ``CUT_EVERY`` rounds
+        # bounds plan depth at ~3*CUT_EVERY string ops while paying the
+        # materialization cost 1/CUT_EVERY as often as an every-round cut.
+        if rank % CUT_EVERY == 0:
             cur = materialize(cur)
     mdf = spark.createDataFrame(
         merges, "merge_rank int, left string, right string, pair_count long"
@@ -158,7 +154,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 8,
     lowercase: bool = True,
-    cut_every: int = 16,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges; return the merge table.
 
@@ -169,11 +164,7 @@ def bpe_train(
     Stops early if the corpus runs out of mergeable pairs.
     """
     merges, _ = _bpe_train_with_words(
-        df,
-        text_col=text_col,
-        n_merges=n_merges,
-        lowercase=lowercase,
-        cut_every=cut_every,
+        df, text_col=text_col, n_merges=n_merges, lowercase=lowercase
     )
     return merges
 
@@ -270,11 +261,11 @@ def bpe_vocab(
     text_col: str = "text",
     n_merges: int = 8,
     k: int = 200,
-    lowercase: bool = True,
 ) -> DataFrame:
-    """Train ``n_merges`` merges, then report the resulting top-``k``
-    subword symbol vocabulary: ``symbol``, ``freq`` (total weighted
-    occurrences across the corpus), ordered freq desc / symbol asc.
+    """Train ``n_merges`` merges on the lowercased corpus, then report the
+    resulting top-``k`` subword symbol vocabulary: ``symbol``, ``freq``
+    (total weighted occurrences across the corpus), ordered freq desc /
+    symbol asc.
 
     One extra job after training: the final word table explodes its
     symbol sequences into a partial-aggregated groupBy — the same
@@ -282,9 +273,7 @@ def bpe_vocab(
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    _, final = _bpe_train_with_words(
-        df, text_col=text_col, n_merges=n_merges, lowercase=lowercase
-    )
+    _, final = _bpe_train_with_words(df, text_col=text_col, n_merges=n_merges)
     exploded = final.select("freq", F.explode(F.split("sym", " ")).alias("symbol"))
     agg = exploded.groupBy("symbol").agg(F.sum("freq").alias("freq"))
     return agg.orderBy(F.col("freq").desc(), F.col("symbol").asc()).limit(k)

@@ -29,25 +29,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+MAX_MILLI = 1000  # scores are milli-units in [0, MAX_MILLI]
+
 
 def threshold_sweep(
     scored: DataFrame,
     score_col: str,
     label_col: str,
     step_milli: int = 25,
-    max_milli: int = 1000,
 ) -> DataFrame:
     """Sweep ``keep iff score >= t`` over a milli-unit threshold grid.
 
-    ``score_col`` is an integer 0..max_milli score (quantize floats
+    ``score_col`` is an integer 0..MAX_MILLI score (quantize floats
     upstream — one rounding point, the engine's usual convention);
     ``label_col`` is the boolean ground truth.  Returns one row per grid
     threshold: ``(threshold_milli, tp, fp, fn, tn, precision_milli,
     recall_milli, f1_milli)``.
     """
-    if step_milli <= 0 or max_milli % step_milli != 0:
+    if step_milli <= 0 or MAX_MILLI % step_milli != 0:
         raise ValueError(
-            f"step_milli must divide max_milli, got {step_milli}/{max_milli}"
+            f"step_milli must divide {MAX_MILLI}, got {step_milli}"
         )
     cells = scored.select(
         (
@@ -61,7 +62,7 @@ def threshold_sweep(
         (F.count(F.lit(1)) - F.sum("_y")).alias("neg"),
     )
     spark = scored.sparkSession
-    grid = spark.range(0, max_milli + 1, step_milli).select(
+    grid = spark.range(0, MAX_MILLI + 1, step_milli).select(
         F.col("id").cast("long").alias("threshold_milli")
     )
     joined = (

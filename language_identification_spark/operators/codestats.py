@@ -137,27 +137,6 @@ def code_metrics(
 BLOCK_COMMENT_RE = r"(?s)/\*.*?\*/"
 
 
-def strip_comments_rewrite(text: Column) -> Column:
-    """The stripped text as a pure Catalyst expression over ``text``.
-
-    Two deterministic passes: (1) ``/* ... */`` block comments deleted
-    (lazy match, so an unterminated ``/*`` is left alone — consistent in
-    both engines); (2) whole lines whose first non-blank characters are
-    ``#`` or ``//`` dropped.  Documented approximation shared by every
-    regex-based code-curation pipeline: a string literal that *looks*
-    like a comment (a lone ``"# nope"`` line, a ``/* */`` inside a
-    string) is stripped too — real parsers don't fit a 100 TB scan, and
-    the transform is only used for dedup normalization and
-    comment-density curation, where the occasional false positive is
-    harmless and bit-reproducible.
-    """
-    no_block = F.regexp_replace(text, BLOCK_COMMENT_RE, "")
-    kept = F.filter(
-        F.split(no_block, "\n"), lambda x: ~x.rlike(COMMENT_RE)
-    )
-    return F.array_join(kept, "\n")
-
-
 def strip_comments(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -167,9 +146,16 @@ def strip_comments(
 
     Columns: ``n_lines_in``, ``n_block_chars_removed``,
     ``n_comment_lines_removed``, ``stripped_chars``, ``stripped_sha256``.
-    Row-local (one projection, zero Exchange, zero UDF): callers that
-    want the corpus rewritten use ``strip_comments_rewrite`` directly in
-    a ``withColumn``, exactly like ``collapse_runs_rewrite``.
+    Row-local (one projection, zero Exchange, zero UDF).
+
+    The rewrite is two deterministic passes: (1) ``/* ... */`` block
+    comments deleted (lazy match, so an unterminated ``/*`` is left alone
+    — consistent in both engines); (2) whole lines whose first non-blank
+    characters are ``#`` or ``//`` dropped.  A string literal that *looks*
+    like a comment (a lone ``"# nope"`` line, a ``/* */`` inside a string)
+    is stripped too: the rewrite serves dedup normalization and
+    comment-density curation, where that false positive is harmless and
+    bit-reproducible.
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
     no_block = F.regexp_replace(text, BLOCK_COMMENT_RE, "")

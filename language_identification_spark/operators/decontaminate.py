@@ -32,9 +32,7 @@ Hash note: hits are matched on ``xxhash64(gram)``, not the gram
 string, so a 64-bit collision between a training gram and an unrelated
 benchmark gram would count a false hit.  At 10⁷ benchmark grams the
 collision odds across even 10¹² training grams are ~10⁻³ per full run
-— acceptable for a *flagging* stage; pass ``hash_grams=False`` to join
-on the strings when auditable exactness matters more than shuffle
-width.
+— acceptable for a *flagging* stage.
 
 No reference analog: the reference engine (language identification
 over audio transcripts) has no dedup/decontamination stage; this is
@@ -93,16 +91,11 @@ def with_word_ngrams(
     return df.withColumn(out_col, grams).drop(tmp)
 
 
-def _gram_rel(
-    df: DataFrame, text_col: str, id_cols: list[str], n: int,
-    hash_grams: bool, gram_key: str,
-) -> DataFrame:
-    """(id_cols…, gram_key) relation — one row per distinct gram per doc."""
+def _gram_rel(df: DataFrame, text_col: str, id_cols: list[str], n: int) -> DataFrame:
+    """(id_cols…, ``_gram_h``) relation — one row per distinct gram hash per doc."""
     df = with_word_ngrams(df, text_col, "_grams", n)
-    g = F.array_distinct(F.col("_grams"))
-    if hash_grams:
-        g = F.transform(g, lambda x: F.xxhash64(x))
-    return df.select(*id_cols, F.explode(g).alias(gram_key))
+    g = F.transform(F.array_distinct(F.col("_grams")), lambda x: F.xxhash64(x))
+    return df.select(*id_cols, F.explode(g).alias("_gram_h"))
 
 
 def decontaminate(
@@ -112,7 +105,6 @@ def decontaminate(
     id_col: str = "doc_id",
     n: int = DEFAULT_N,
     max_df: int | None = None,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Flag training documents sharing any word n-gram with a benchmark.
 
@@ -124,18 +116,17 @@ def decontaminate(
     ``max_df``: drop grams matching more than this many distinct
     training documents before counting (boilerplate exclusion).
     """
-    gram_key = "_gram_h" if hash_grams else "_gram"
-    bench_grams = _gram_rel(bench, text_col, [], n, hash_grams, gram_key).distinct()
-    train_grams = _gram_rel(train, text_col, [id_col], n, hash_grams, gram_key)
+    bench_grams = _gram_rel(bench, text_col, [], n).distinct()
+    train_grams = _gram_rel(train, text_col, [id_col], n)
     # map-side broadcast semi-join: non-benchmark grams never leave the
     # stage that generated them
-    hits = train_grams.join(F.broadcast(bench_grams), gram_key, "left_semi")
+    hits = train_grams.join(F.broadcast(bench_grams), "_gram_h", "left_semi")
     if max_df is not None:
         # boilerplate cap over the (small) join output — per-gram distinct
         # doc counts need one window, not a corpus-wide gram-frequency pass.
         # Rows are distinct (id, gram) pairs by construction, so count(*)
         # per gram IS the distinct-document frequency.
-        df_w = Window.partitionBy(gram_key)
+        df_w = Window.partitionBy("_gram_h")
         hits = hits.withColumn("_df", F.count(F.lit(1)).over(df_w)).filter(
             F.col("_df") <= max_df
         )

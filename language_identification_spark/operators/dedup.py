@@ -260,7 +260,6 @@ def jaccard_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    max_bucket: int = MAX_BUCKET,
     staging_path: str | None = None,
 ) -> DataFrame:
     """Exact char-3-shingle Jaccard over LSH candidate pairs.
@@ -300,7 +299,7 @@ def jaccard_pairs(
         feat = feat.repartition(_feat_parts(feat))
     feat = materialize(feat, staging_path)
     pairs = _pairs_from_bands(
-        _band_table(feat.select(id_col, "sig"), id_col, max_bucket), id_col
+        _band_table(feat.select(id_col, "sig"), id_col, MAX_BUCKET), id_col
     )
     return _verify_candidate_pairs(pairs, feat, id_col, threshold)
 
@@ -369,7 +368,6 @@ def incremental_jaccard_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    max_bucket: int = MAX_BUCKET,
     lake_staging: str | None = None,
 ) -> DataFrame:
     """Near-dedup a NEW batch against the committed lake — the production
@@ -416,7 +414,7 @@ def incremental_jaccard_pairs(
         feat = feat.repartition(_feat_parts(feat))
     feat = materialize(feat)
     bands = _band_table(
-        feat.select(id_col, "sig"), id_col, max_bucket
+        feat.select(id_col, "sig"), id_col, MAX_BUCKET
     ).join(feat.select(id_col, "is_delta"), id_col)
     # at least one delta side: lake×lake never materializes
     pairs = _pairs_from_bands(
@@ -430,7 +428,6 @@ def winnow_dup_pairs(
     text_col: str,
     id_col: str,
     min_shared: int = 2,
-    max_bucket: int = MAX_BUCKET,
     staging_path: str | None = None,
 ) -> DataFrame:
     """MOSS-style near-dup candidate pairs from shared winnowing
@@ -444,7 +441,7 @@ def winnow_dup_pairs(
     ``min_shared`` fingerprints.  All stages are shuffle-on-short-key:
     fingerprints come from the pure-Catalyst ``with_winnow_fingerprints``
     (no UDF), the posting list shuffles on the 64-bit fingerprint, and
-    fingerprints shared by more than ``max_bucket`` documents are dropped
+    fingerprints shared by more than ``MAX_BUCKET`` documents are dropped
     before the self-join (``_capped``: a license header shared by 100k
     files would otherwise yield 10^10 pairs).  Content never shuffles.
 
@@ -473,7 +470,7 @@ def winnow_dup_pairs(
     posting = _capped(
         fps.select(F.col(id_col), F.explode("winnow_fp").alias("fp")),
         ["fp"],
-        max_bucket,
+        MAX_BUCKET,
     )
     return (
         _self_join(posting, id_col, ["fp"])
@@ -488,8 +485,11 @@ def winnow_dup_pairs(
     )
 
 
-def char_ngram_set_expr(text_col: F.Column, n: int = 3) -> F.Column:
-    """Distinct char n-grams of lowercased text as a pure Catalyst expression
+CHAR_N = 3  # exact-verification gram size: the minhash path's char 3-shingles
+
+
+def char_ngram_set_expr(text_col: F.Column) -> F.Column:
+    """Distinct char ``CHAR_N``-grams of lowercased text as a pure Catalyst expression
     (array<string>) — whole-stage codegen, no UDF, no hashing.
 
     The exact-verification twin of the hashed-shingle path: hashing trades a
@@ -498,27 +498,25 @@ def char_ngram_set_expr(text_col: F.Column, n: int = 3) -> F.Column:
     """
     t = F.lower(text_col)
     grams = F.transform(
-        F.sequence(F.lit(1), F.length(t) - F.lit(n - 1)),
-        lambda i: F.substring(t, i, n),
+        F.sequence(F.lit(1), F.length(t) - F.lit(CHAR_N - 1)),
+        lambda i: F.substring(t, i, CHAR_N),
     )
     empty = F.array().cast("array<string>")
     return F.array_distinct(
-        F.when(F.length(t) >= n, grams).otherwise(empty)
+        F.when(F.length(t) >= CHAR_N, grams).otherwise(empty)
     )
 
 
-def exact_jaccard_pairs(
-    pairs: DataFrame, text_a: str, text_b: str, n: int = 3
-) -> DataFrame:
-    """Exact char-n-gram Jaccard for pre-identified candidate pairs.
+def exact_jaccard_pairs(pairs: DataFrame, text_a: str, text_b: str) -> DataFrame:
+    """Exact char-``CHAR_N``-gram Jaccard for pre-identified candidate pairs.
 
     ``pairs`` carries both texts; output adds ``jaccard`` (double).  Pure
     expressions end-to-end — at scale this is the verification stage applied
     AFTER LSH candidate generation, so it only ever sees candidate pairs,
     never the n² cross product.
     """
-    sa = char_ngram_set_expr(F.col(text_a), n)
-    sb = char_ngram_set_expr(F.col(text_b), n)
+    sa = char_ngram_set_expr(F.col(text_a))
+    sb = char_ngram_set_expr(F.col(text_b))
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = F.size(F.array_union(sa, sb)).cast("double")
     jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
@@ -696,7 +694,6 @@ def simhash_dup_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    max_bucket: int = MAX_BUCKET,
     staging_path: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via SimHash chunk bucketing + exact Hamming verify.
@@ -717,7 +714,7 @@ def simhash_dup_pairs(
     fingerprint UDF would re-evaluate over the full content on BOTH join
     sides.
 
-    ``max_bucket`` is the skew guard of ``_capped``: members of a capped
+    ``MAX_BUCKET`` is the skew guard of ``_capped``: members of a capped
     bucket still pair up through their other, more selective chunks.
 
     ``max_hamming`` must be <= 3: with 4 disjoint chunks the pigeonhole
@@ -745,7 +742,7 @@ def simhash_dup_pairs(
             F.posexplode(F.array(*_simhash_chunks())).alias("ci", "cv"),
         ),
         ["ci", "cv"],
-        max_bucket,
+        MAX_BUCKET,
     )
     return (
         _self_join(posts, id_col, ["ci", "cv"])

@@ -33,14 +33,12 @@ def snapshot_diff(
     new: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
-    keep_unchanged: bool = False,
 ) -> DataFrame:
     """Diff two snapshot versions of a keyed corpus.
 
     Output: ``<key_col>``, ``status`` in {'added','removed','changed'}
-    (plus 'unchanged' when ``keep_unchanged``), ``old_sha256``,
-    ``new_sha256`` (NULL on the absent side).  Deterministic, exact —
-    no floats, no sampling.
+    (unchanged keys are dropped), ``old_sha256``, ``new_sha256`` (NULL on
+    the absent side).  Deterministic, exact — no floats, no sampling.
     """
     h = lambda c: F.sha2(F.coalesce(F.col(c), F.lit("")), 256)  # noqa: E731
     o = old.select(F.col(key_col).alias("k"), h(text_col).alias("old_sha256"))
@@ -52,12 +50,9 @@ def snapshot_diff(
         .when(F.col("old_sha256") != F.col("new_sha256"), F.lit("changed"))
         .otherwise(F.lit("unchanged"))
     )
-    out = joined.select(
+    return joined.select(
         F.col("k").alias(key_col),
         status.alias("status"),
         "old_sha256",
         "new_sha256",
-    )
-    if not keep_unchanged:
-        out = out.filter(F.col("status") != "unchanged")
-    return out
+    ).filter(F.col("status") != "unchanged")

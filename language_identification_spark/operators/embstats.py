@@ -42,19 +42,22 @@ def l2_norm_col(vec: Column) -> Column:
     )
 
 
+OUTLIER_Z = 3
+
+
 def norm_outliers(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    z: int = 3,
 ) -> DataFrame:
     """Per-vector norm + exact integer z-score outlier flag per label.
 
     Output: ``<id_col>``, ``<label_col>``, ``norm_micro`` (long,
     micro-quantized L2 norm), ``n_label`` (group size), ``mean_micro``
-    (integer-floor group mean) and ``is_outlier``.  ``z`` must be an
-    integer so ``z^2`` stays exact.
+    (integer-floor group mean) and ``is_outlier`` (more than ``OUTLIER_Z``
+    standard deviations from the group mean; an integer so ``z^2`` stays
+    exact).
     """
     norm_micro = (
         F.round(F.round(l2_norm_col(F.col(vec_col)), 6) * 1000000)
@@ -84,5 +87,5 @@ def norm_outliers(
         )
         .cast("long")
         .alias("mean_micro"),
-        (dev * dev > F.lit(int(z) * int(z)) * var_n2).alias("is_outlier"),
+        (dev * dev > F.lit(OUTLIER_Z * OUTLIER_Z) * var_n2).alias("is_outlier"),
     )

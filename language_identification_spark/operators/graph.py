@@ -49,21 +49,24 @@ from ..partitioning import materialize
 
 SCALE = 1_000_000_000  # ppb rank mass
 IMPORT_RE = r"(?m)^(?:import|from)[ ]+([A-Za-z_][A-Za-z0-9_.]*)"
+IMPORT_HEADER = 2048  # leading chars scanned for imports
+TOPO_MAX_ITERS = 64  # layering rounds: import DAGs are tens deep
+DAMPING_PCT = 85  # PageRank damping, integer percent
+CONTEXT_SEP = "\n\n"  # between the files of a repo context
 
 
 def extract_imports(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_header: int = 2048,
 ) -> DataFrame:
     """Modules imported by each document: ``id_col``, ``module``.
 
-    Scans only the first ``max_header`` chars (imports live at the top of
+    Scans only the first ``IMPORT_HEADER`` chars (imports live at the top of
     a file; the clip bounds regex cost for pathological rows).  Distinct
     per (doc, module).
     """
-    head = F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, max_header)
+    head = F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, IMPORT_HEADER)
     return (
         df.select(
             F.col(id_col),
@@ -129,11 +132,7 @@ def rank_weights(
     )
 
 
-def topo_layers(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iters: int = 64,
-) -> DataFrame:
+def topo_layers(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Topological layering: ``node``, ``layer`` (long).
 
     Repo-context training (and any dependency-ordered corpus
@@ -187,7 +186,7 @@ def topo_layers(
     )
     n_assigned = int(obs0.get["n"])
     try:
-        for _ in range(max_iters):
+        for _ in range(TOPO_MAX_ITERS):
             # a dst is ready when EVERY in-edge src already has a layer:
             # count(layer) counts non-null joined layers, so total == done
             # is exactly "all predecessors assigned"
@@ -241,7 +240,6 @@ def pagerank_int(
     nodes: DataFrame,
     edges: DataFrame,
     n_iters: int = 10,
-    damping_pct: int = 85,
 ) -> DataFrame:
     """Integer PageRank: ``node``, ``rank_ppb`` after ``n_iters`` rounds.
 
@@ -250,8 +248,6 @@ def pagerank_int(
     exact-integer per the module docstring, so results are independent of
     partitioning, parallelism, and engine.
     """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     spark = nodes.sparkSession
     # nodes/edges usually derive from a full corpus scan (import mining);
     # persist everything the iteration loop touches so each of the
@@ -261,7 +257,7 @@ def pagerank_int(
     if n == 0:
         nodes.unpersist()
         return spark.createDataFrame([], "node string, rank_ppb long")
-    teleport = (100 - damping_pct) * (SCALE // n) // 100
+    teleport = (100 - DAMPING_PCT) * (SCALE // n) // 100
     # r06 negative result: per-iteration broadcasts of the rank/inflow
     # tables measured 6.2 s -> 9.8 s at sf1.0 (fresh broadcast build per
     # round) — see topo_layers note.  Shuffle joins kept.
@@ -323,7 +319,7 @@ def pagerank_int(
                     (
                         F.lit(teleport)
                         + F.expr(
-                            f"{damping_pct} * (coalesce(inflow, 0) + {share}) DIV 100"
+                            f"{DAMPING_PCT} * (coalesce(inflow, 0) + {share}) DIV 100"
                         )
                     ).cast("long").alias("rank_ppb"),
                     "has_out",
@@ -344,7 +340,6 @@ def repo_context_concat(
     repo_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = "\n\n",
 ) -> DataFrame:
     """One training document per repo: every file concatenated in
     ``(layer, id)`` order — definitions before uses (the repo-context
@@ -381,7 +376,7 @@ def repo_context_concat(
             ),
             lambda s: s["t"],
         ),
-        sep,
+        CONTEXT_SEP,
     )
     return j.groupBy(repo_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_files"),

@@ -78,23 +78,3 @@ def merge_islands(
         )
         .drop("_run", "_island")
     )
-
-
-def pad_boundaries(
-    df: DataFrame,
-    start_col: str = "island_start",
-    end_col: str = "island_end",
-    pad: int | float = 0,
-    lower_bound: int | float = 0,
-    upper_bound_col: str | None = None,
-) -> DataFrame:
-    """Tail-overlap padding (reference ``:628,:693-696,:728-730`` — W5).
-
-    Extends both boundaries by ``pad``, clamped to ``[lower_bound,
-    upper_bound_col]`` — pure column arithmetic, no extra I/O (SURVEY §4.1).
-    """
-    start = F.greatest(F.lit(lower_bound), F.col(start_col) - F.lit(pad))
-    end = F.col(end_col) + F.lit(pad)
-    if upper_bound_col is not None:
-        end = F.least(F.col(upper_bound_col), end)
-    return df.withColumn(start_col, start).withColumn(end_col, end)

@@ -35,23 +35,19 @@ def salted_join(
     key_col: str,
     salt_from: str,
     salt_factor: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join ``facts ⋈ dim`` on ``key_col`` with the fact side salted.
+    """Inner equi-join ``facts ⋈ dim`` on ``key_col`` with the fact side salted.
 
     ``salt_from`` names a fact column whose xxhash64 scatters rows across
     replicas (any well-distributed column works; a row id is ideal —
     deterministic, unlike a random or partition-derived salt, so retries
-    and resumed runs place every row identically).  ``how`` supports
-    ``inner`` and ``left`` (each fact row joins the single dim replica
-    carrying its salt, so left semantics are preserved exactly).
+    and resumed runs place every row identically).  Each fact row joins
+    the single dim replica carrying its salt.
 
     Dim replication costs ``salt_factor ×`` the dim size in shuffle —
     the right trade when the dim is too big to broadcast and fact keys
     are hot; for broadcast-able dims use ``F.broadcast`` instead.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how={how!r}: salting preserves inner/left only")
     if salt_factor < 1:
         raise ValueError(f"salt_factor={salt_factor} must be >= 1")
     if SALT_COL in facts.columns or SALT_COL in dim.columns:
@@ -68,4 +64,4 @@ def salted_join(
         SALT_COL,
         F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1)).cast("array<long>")),
     )
-    return f.join(d, on=[key_col, SALT_COL], how=how).drop(SALT_COL)
+    return f.join(d, on=[key_col, SALT_COL]).drop(SALT_COL)

@@ -149,7 +149,7 @@ def filter_permissive_repos(
     """Keep only documents from repos whose rollup verdict is ``keep``.
 
     The verdict table is O(#repos) — broadcast-joined so the corpus
-    never shuffles (same pattern as ``repolevel.apply_repo_filter``).
+    never shuffles (same pattern as ``repolevel.quota_cap``'s kept keys).
     """
     keep = rollup.filter(F.col("keep")).select(F.col("repo").alias(repo_col))
     return df.join(F.broadcast(keep), repo_col, "left_semi")

@@ -43,18 +43,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MIN_LINE_CHARS = 1  # shorter (trimmed) lines, i.e. blank ones, are never deduped
+
 
 def mark_duplicate_lines(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_chars: int = 1,
 ) -> DataFrame:
     """Explode ``docs`` into lines and flag which ones survive.
 
     Returns ``(id_col, line_no, line, keep)`` — one row per line, where
     ``keep`` is false iff the line is a dedupable duplicate (its trimmed
-    length is ≥ ``min_chars`` and an earlier (doc_id, line_no) has the
+    length is ≥ ``MIN_LINE_CHARS`` and an earlier (doc_id, line_no) has the
     same content).  NULL text is treated as empty (one blank line, so
     the document survives reconstruction).
     """
@@ -64,7 +65,7 @@ def mark_duplicate_lines(
             F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         ).alias("line_no", "line"),
     )
-    dedupable = F.length(F.trim(F.col("line"))) >= min_chars
+    dedupable = F.length(F.trim(F.col("line"))) >= MIN_LINE_CHARS
     exempt = lines.filter(~dedupable).withColumn("keep", F.lit(True))
     cand = lines.filter(dedupable).withColumn("_h", F.xxhash64(F.col("line")))
     winners = cand.groupBy("_h").agg(
@@ -84,7 +85,6 @@ def dedup_lines(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_chars: int = 1,
 ) -> DataFrame:
     """Rebuild the corpus with cross-document duplicate lines removed.
 
@@ -94,7 +94,7 @@ def dedup_lines(
     string, not NULL — it is the caller's min-length filter's job to
     drop it).
     """
-    marked = mark_duplicate_lines(docs, text_col, id_col, min_chars)
+    marked = mark_duplicate_lines(docs, text_col, id_col)
     return marked.groupBy(id_col).agg(
         F.array_join(
             F.transform(

@@ -30,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..pyworker import forget_zip_importers
-from .islands import merge_islands, pad_boundaries
+from .islands import merge_islands
 
 BLOCK_LINES = 4  # lines per classification block
 
@@ -93,77 +93,20 @@ def _line_spans_batch(content: pd.Series) -> pd.Series:
 line_spans_udf = pandas_udf(_line_spans_batch, _SPAN_SCHEMA)
 
 
-def langid_line_spans(
-    df: DataFrame, id_col: str, content_col: str, context_pad: int = 0
-) -> DataFrame:
-    """Per-file language spans: block events → merged same-language islands.
-
-    ``context_pad`` is the reference's tail-overlap pad (W5, ``:628,
-    :693-696,:728-730``): span boundaries are extended by ``context_pad``
-    lines, clamped to ``[0, n_lines]``, so a downstream per-span consumer
-    (``span_context_text``) sees boundary context without re-reading.
-    ``island_duration``/``n_events`` stay un-padded (they are lineage
-    measures of the detected span itself).
-    """
+def langid_line_spans(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
+    """Per-file language spans: block events → merged same-language islands."""
     events = (
-        df.select(
-            F.col(id_col),
-            F.size(F.split(F.col(content_col), "\n")).cast("long").alias(
-                "n_lines"
-            ),
-            line_spans_udf(F.col(content_col)).alias("spans"),
-        )
-        .select(id_col, "n_lines", F.explode("spans").alias("sp"))
+        df.select(F.col(id_col), line_spans_udf(F.col(content_col)).alias("spans"))
+        .select(id_col, F.explode("spans").alias("sp"))
         .select(
             id_col,
-            "n_lines",
             F.col("sp.label").alias("label"),
             F.col("sp.start_line").cast("long").alias("start"),
             F.col("sp.end_line").cast("long").alias("end"),
         )
         .filter(F.col("label") != "")
     )
-    # n_lines is functionally dependent on the id — adding it to the
-    # partition key changes nothing about the shuffle, only carries the
-    # clamp bound through the aggregation for free
-    islands = merge_islands(
-        events, [id_col, "n_lines"], "label", "start", "end", max_gap=0
-    )
-    if context_pad:
-        islands = pad_boundaries(
-            islands,
-            "island_start",
-            "island_end",
-            pad=context_pad,
-            lower_bound=0,
-            upper_bound_col="n_lines",
-        )
-    return islands.drop("n_lines")
-
-
-def span_context_text(
-    docs: DataFrame, spans: DataFrame, id_col: str, content_col: str
-) -> DataFrame:
-    """Materialize each (padded) span's line range as text — the consumer of
-    the W5 boundary pad.  Pure expressions: split + slice + array_join; the
-    reference had to re-read bytes at every boundary (``:728-730``), here the
-    pad is column arithmetic on the same scan."""
-    lines = F.split(F.col(content_col), "\n")
-    return (
-        spans.join(docs.select(F.col(id_col), F.col(content_col)), id_col)
-        .withColumn(
-            "context",
-            F.array_join(
-                F.slice(
-                    lines,
-                    (F.col("island_start") + 1).cast("int"),
-                    (F.col("island_end") - F.col("island_start")).cast("int"),
-                ),
-                "\n",
-            ),
-        )
-        .drop(content_col)
-    )
+    return merge_islands(events, [id_col], "label", "start", "end")
 
 
 def majority_label(spans: DataFrame, id_col: str) -> DataFrame:

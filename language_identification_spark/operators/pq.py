@@ -148,11 +148,10 @@ def _pq_assign_udf(books: np.ndarray):
 def train_pq_codebooks(
     df: DataFrame,
     vec_col: str = "embedding",
-    m: int = PQ_M,
-    k: int = PQ_K,
     iters: int = PQ_ITERS,
 ) -> np.ndarray:
-    """Per-subspace Lloyd k-means over DataFrame ops; returns (m, k, d/m).
+    """Per-subspace Lloyd k-means over DataFrame ops; returns
+    ``(PQ_M, PQ_K, d / PQ_M)``.
 
     Deterministic: fixed-seed init (module constant), Arrow-vectorized
     assignment bit-matching the Catalyst encode (see ``_pq_assign_udf``),
@@ -161,10 +160,10 @@ def train_pq_codebooks(
     M×K×subdim aggregated scalars — row data never reaches the driver.
     """
     dim = len(df.select(vec_col).first()[0])
-    subdim = dim // m
-    if m * subdim != dim:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    books = np.round(_PQ_INIT[:m, :k, :subdim].copy(), 9)
+    subdim = dim // PQ_M
+    if PQ_M * subdim != dim:
+        raise ValueError(f"dim {dim} not divisible by PQ_M={PQ_M}")
+    books = np.round(_PQ_INIT[:PQ_M, :PQ_K, :subdim].copy(), 9)
     for _ in range(iters):
         assign = _pq_assign_udf(books)
         enc = df.select(

@@ -12,8 +12,8 @@ The percentile estimator is the knob that matters at scale:
 
 * ``exact=False`` (default): ``percentile_approx`` — Spark's mergeable
   quantile sketch.  Partial aggregation applies, executor memory per
-  group is bounded by ``accuracy`` (not group size), and error is
-  ≤ 1/accuracy of rank.  This is the only shape that survives a
+  group is bounded by ``APPROX_ACCURACY`` (not group size), and error is
+  ≤ 1/APPROX_ACCURACY of rank.  This is the only shape that survives a
   billion-row group.
 * ``exact=True``: ``percentile`` — collects each group's values into
   the aggregation buffer (memory O(group size)); linear-interpolation
@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from language_identification_spark.functions.text import token_count_col
 
+APPROX_ACCURACY = 10000  # percentile_approx sketch size
+
 
 def corpus_profile(
     docs: DataFrame,
@@ -45,7 +47,6 @@ def corpus_profile(
     text_col: str = "text",
     percentiles: tuple[float, ...] = (0.5, 0.95),
     exact: bool = False,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-``group_col`` token-count profile of ``docs``.
 
@@ -68,7 +69,7 @@ def corpus_profile(
         est = (
             F.percentile("_tc", F.lit(float(p)))
             if exact
-            else F.percentile_approx("_tc", F.lit(float(p)), F.lit(accuracy))
+            else F.percentile_approx("_tc", F.lit(float(p)), F.lit(APPROX_ACCURACY))
         )
         pct_cols.append(F.round(est * 1000).cast("long").alias(name))
     return base.groupBy(group_col).agg(

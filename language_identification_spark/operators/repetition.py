@@ -128,7 +128,6 @@ def gopher_repetition(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    ngram_ns: tuple[int, ...] = (2, 3, 4),
 ) -> DataFrame:
     """Per-document Gopher repetition signals + keep verdict.
 
@@ -146,7 +145,8 @@ def gopher_repetition(
     numbers via UNNEST + GROUP BY either way); the operator stays
     row-local — one scan, no Exchange, only (id, text) cross the Python
     boundary."""
-    ns = tuple(ngram_ns)
+    ns = tuple(TOP_NGRAM_CHAR_PPM)
+    caps = [TOP_NGRAM_CHAR_PPM[n] for n in ns]
     fields = [
         StructField(id_col, df.schema[id_col].dataType),
         StructField("n_chars", LongType()),
@@ -192,9 +192,7 @@ def gopher_repetition(
                     and row[3] <= DUP_LINE_CHAR_PPM
                     and row[5] <= DUP_PARA_CHAR_PPM
                 )
-                for n, v in zip(ns, tops):
-                    if n in TOP_NGRAM_CHAR_PPM:
-                        keep = keep and v <= TOP_NGRAM_CHAR_PPM[n]
+                keep = keep and all(v <= cap for v, cap in zip(tops, caps))
                 row.append(bool(keep))
                 rows.append(row)
             yield pd.DataFrame(rows, columns=names)

@@ -71,12 +71,14 @@ def repo_rollup(
     )
 
 
+MAX_POSTING = 64  # a file hash in more repos than this pairs none of them
+
+
 def fork_pairs(
     df: DataFrame,
     repo_col: str = "source",
     text_col: str = "text",
     min_jaccard_milli: int = 200,
-    max_posting: int = 64,
 ) -> DataFrame:
     """Repo-level fork/mirror detection via exact Jaccard over file-hash sets.
 
@@ -89,7 +91,7 @@ def fork_pairs(
     exact Jaccard ``|A & B| / |A u B|`` is integer arithmetic on set
     sizes.
 
-    ``max_posting`` drops hashes present in more than that many repos
+    ``MAX_POSTING`` drops hashes present in more than that many repos
     (vendored boilerplate: empty __init__.py, LICENSE files, lockfiles) —
     the same skew-cap pattern as the MinHash bands in
     ``operators/dedup.py``; without it one ubiquitous file contributes
@@ -104,7 +106,7 @@ def fork_pairs(
     only.  The pair aggregation is partial-combined on (repo_a, repo_b),
     and the two size joins broadcast the O(#repos) size table.  The
     posting cap bounds any one hash's pair fan-out to
-    ``max_posting^2/2``.
+    ``MAX_POSTING^2/2``.
     """
     files = df.select(
         F.col(repo_col).alias("repo"),
@@ -114,7 +116,7 @@ def fork_pairs(
     eligible = (
         files.groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_repos"))
-        .filter(F.col("n_repos") <= F.lit(int(max_posting)))
+        .filter(F.col("n_repos") <= F.lit(MAX_POSTING))
         .select("h")
     )
     posting = files.join(eligible, on="h", how="inner")
@@ -150,7 +152,6 @@ def collapse_forks(
     repo_col: str = "source",
     text_col: str = "text",
     min_jaccard_milli: int = 200,
-    max_posting: int = 64,
 ) -> DataFrame:
     """One representative repo per fork/mirror cluster.
 
@@ -165,7 +166,7 @@ def collapse_forks(
     winner; itself when unclustered), ``n_files`` (distinct content
     hashes), ``is_rep``.  Filtering a corpus to representatives is then a
     broadcast semi-join on ``is_rep`` rows, same pattern as
-    ``apply_repo_filter``.
+    ``license.filter_permissive_repos``.
 
     Scale shape (100 TB lens): every table past the (already skew-capped)
     pair mining is O(#repos) — cluster labels, size table, winner
@@ -179,7 +180,7 @@ def collapse_forks(
         connected_components_star,
     )
 
-    pairs = fork_pairs(df, repo_col, text_col, min_jaccard_milli, max_posting)
+    pairs = fork_pairs(df, repo_col, text_col, min_jaccard_milli)
     comps = connected_components_star(pairs, "repo_a", "repo_b")
     sizes = (
         df.select(
@@ -240,8 +241,9 @@ def quota_cap(
     ids only.  The kept-key table is bounded at ``quota x #repos`` BY
     CONSTRUCTION, which is what makes the broadcast semi-join back to the
     corpus safe at any corpus size (same pattern as
-    ``apply_repo_filter``).  Mega-repo skew inside the window sorts only
-    that repo's ids; ranking is one sort of O(repo size) ids, not content.
+    ``license.filter_permissive_repos``).  Mega-repo skew inside the window
+    sorts only that repo's ids; ranking is one sort of O(repo size) ids,
+    not content.
     """
     if quota < 1:
         raise ValueError(f"quota must be >= 1, got {quota}")
@@ -261,20 +263,6 @@ def quota_cap(
         .select(group_col, key_col)
     )
     return df.join(F.broadcast(kept), on=[group_col, key_col], how="left_semi")
-
-
-def apply_repo_filter(
-    df: DataFrame,
-    verdicts: DataFrame,
-    group_col: str = "source",
-) -> DataFrame:
-    """Keep only rows whose repo passed the rollup.
-
-    The verdict table is O(#repos) — tiny next to the corpus — so the
-    join is an explicit broadcast: no shuffle of the corpus side.
-    """
-    keep_keys = verdicts.filter(F.col("repo_keep")).select(group_col)
-    return df.join(F.broadcast(keep_keys), on=group_col, how="inner")
 
 
 def skew_profile(

@@ -23,9 +23,7 @@ Spark-first shape, and why it scales:
 
 The corpus is scanned once: ``bm25_topk`` materializes the small
 (id, doc length, per-term tf) table when it is called (one job, via
-``partitioning.materialize``) and both passes read that.  When the same
-corpus serves MANY queries, stage ``with_words`` output once and pass
-``text_is_words=True`` so each query skips the tokenization too.
+``partitioning.materialize``) and both passes read that.
 
 No reference analog: part of the LLM-training-data extension surface.
 """
@@ -49,9 +47,6 @@ def bm25_topk(
     k: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-    text_is_words: bool = False,
 ) -> DataFrame:
     """Top-``k`` documents by BM25 score for ``terms``.
 
@@ -60,20 +55,13 @@ def bm25_topk(
     ordered by (score desc, id asc); documents matching no term are
     excluded.  idf is the Lucene variant ``ln(1 + (N-df+0.5)/(df+0.5))``
     (never negative, so stopword-like terms dilute rather than invert).
-
-    ``text_is_words=True`` treats ``text_col`` as an already-tokenized
-    ``array<string>`` column (for corpora staged once to serve many
-    queries).
     """
     if not terms:
         raise ValueError("terms must be non-empty")
     if len(set(terms)) != len(terms):
         raise ValueError("terms must be distinct (duplicates double-count)")
 
-    if text_is_words:
-        base = docs.withColumn("_w", F.col(text_col))
-    else:
-        base = with_words(docs, text_col, "_w")
+    base = with_words(docs, text_col, "_w")
     words = F.col("_w")
     # one-arg closure per term: a two-arg lambda would make F.filter
     # pass (element, index) and bind the term slot to the index column
@@ -110,8 +98,8 @@ def bm25_topk(
         tf = F.col(f"_tf_{i}").cast("double")
         dfreq = F.col(f"_df_{i}").cast("double")
         idf = F.log(F.lit(1.0) + (n - dfreq + 0.5) / (dfreq + 0.5))
-        norm = F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("_dl") / avgdl)
-        score = score + idf * tf * F.lit(k1 + 1) / (tf + norm)
+        norm = F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("_dl") / avgdl)
+        score = score + idf * tf * F.lit(K1 + 1) / (tf + norm)
         any_hit = any_hit | (tf > 0)
     return (
         scored.filter(any_hit)

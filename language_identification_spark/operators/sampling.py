@@ -54,14 +54,13 @@ def stratified_sample(
     rates: dict[str, float],
     default_rate: float = 0.0,
     salt: str = "stratified",
-    n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """Keep each row iff its deterministic bucket falls under its
     stratum's rate.
 
     ``rates`` maps stratum value → keep rate in [0, 1]; strata not
     listed use ``default_rate``.  Rates are quantized to
-    ``1/n_buckets`` (default 0.01%).  NULL strata take the default
+    ``1/N_BUCKETS`` (0.01%).  NULL strata take the default
     rate.  The rate lookup is folded into a CASE expression (strata
     maps are small — languages, sources, quality tiers — never
     data-sized), so the whole operator stays inside whole-stage
@@ -73,11 +72,11 @@ def stratified_sample(
     if not 0.0 <= default_rate <= 1.0:
         raise ValueError(f"default_rate must be in [0,1], got {default_rate}")
 
-    threshold = F.lit(int(round(default_rate * n_buckets)))
+    threshold = F.lit(int(round(default_rate * N_BUCKETS)))
     # sorted for a deterministic expression tree (stable plans diff cleanly)
     for stratum, rate in sorted(rates.items()):
         threshold = F.when(
-            F.col(strata_col) == stratum, F.lit(int(round(rate * n_buckets)))
+            F.col(strata_col) == stratum, F.lit(int(round(rate * N_BUCKETS)))
         ).otherwise(threshold)
-    bucket = sample_bucket_col(F.col(key_col), salt, n_buckets)
+    bucket = sample_bucket_col(F.col(key_col), salt)
     return df.filter(bucket < threshold)

@@ -121,11 +121,10 @@ ivf_cell_udf = pandas_udf(_ivf_cell_batch, LongType())
 def ivf_topk(
     df: DataFrame, query: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
-    nprobe: int = IVF_NPROBE,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF-style approximate top-k: probe the ``nprobe`` centroid cells
-    nearest the query (~nprobe/IVF_K of the data scanned).
+    """IVF-style approximate top-k: probe the ``IVF_NPROBE`` centroid cells
+    nearest the query (~IVF_NPROBE/IVF_K of the data scanned).
 
     At scale the cell id is a write-side partition column, so probing prunes
     partitions at the source instead of filtering post-scan.  Measured on the
@@ -139,7 +138,7 @@ def ivf_topk(
     cell_udf = ivf_cell_udf if centroids is None else _cell_assign_udf(cent)
     q = np.asarray(query, dtype=np.float64)
     qn = q / np.linalg.norm(q)
-    probes = np.argsort(-(cent[:, : len(q)] @ qn))[:nprobe].tolist()
+    probes = np.argsort(-(cent[:, : len(q)] @ qn))[:IVF_NPROBE].tolist()
     cells = df.withColumn("ivf_cell", cell_udf(F.col(vec_col)))
     return (
         cells.filter(F.col("ivf_cell").isin(*[int(p) for p in probes]))
@@ -295,29 +294,25 @@ def cosine_dup_pairs(
     )
 
 
-def _probe_buckets(query: list[float], probe_hamming: int) -> list[int]:
+def _probe_buckets(query: list[float]) -> list[int]:
+    """The query's LSH bucket and its N_PLANES hamming-1 neighbours."""
     q = np.asarray(query, dtype=np.float64)[None, :]
     qb = int(_bucket_of(q)[0])
-    buckets = {qb}
-    if probe_hamming >= 1:
-        for p in range(N_PLANES):
-            buckets.add(qb ^ (1 << p))
-    return sorted(buckets)
+    return sorted({qb} | {qb ^ (1 << p) for p in range(N_PLANES)})
 
 
 def lsh_topk(
     df: DataFrame, query: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
-    probe_hamming: int = 1,
 ) -> DataFrame:
     """Approximate top-k: scan only the query's LSH bucket and its
-    hamming<=probe_hamming neighbors (multi-probe).
+    hamming-1 neighbors (multi-probe).
 
     This is the index-free form: the bucket UDF runs over every row per
     query.  For repeated queries at scale, build the write-side index once
     (``build_ann_index``) and probe with ``lsh_topk_indexed`` — partition
     pruning then replaces the full scan."""
-    buckets = _probe_buckets(query, probe_hamming)
+    buckets = _probe_buckets(query)
     bucketed = df.withColumn("bucket", lsh_bucket_udf(F.col(vec_col)))
     return (
         bucketed.filter(F.col("bucket").isin(*buckets))
@@ -454,7 +449,6 @@ def build_ann_index(
 def ivf_topk_indexed(
     spark, index_dir: str, query: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
-    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """IVF probe against the write-side index: partition pruning at the
     source, no per-row Python.  Results identical to ``ivf_topk`` when the
@@ -481,7 +475,7 @@ def ivf_topk_indexed(
         ) from e
     q = np.asarray(query, dtype=np.float64)
     qn = q / np.linalg.norm(q)
-    probes = np.argsort(-(cent[:, : len(q)] @ qn))[:nprobe].tolist()
+    probes = np.argsort(-(cent[:, : len(q)] @ qn))[:IVF_NPROBE].tolist()
     df = spark.read.parquet(index_dir)
     return (
         df.filter(F.col("ivf_cell").isin(*[int(p) for p in probes]))
@@ -497,7 +491,6 @@ def ivf_topk_indexed(
 def lsh_topk_indexed(
     spark, index_dir: str, query: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
-    probe_hamming: int = 1,
 ) -> DataFrame:
     """Multi-probe LSH against the write-side index.
 
@@ -506,7 +499,7 @@ def lsh_topk_indexed(
     ``lsh_prefix``/``lsh_bucket`` turns them into row-group min/max skips;
     the bucket filter is an exact codegen comparison on the surviving row
     groups.  Results identical to ``lsh_topk``."""
-    buckets = _probe_buckets(query, probe_hamming)
+    buckets = _probe_buckets(query)
     prefixes = sorted({b >> (N_PLANES - LSH_PREFIX_BITS) for b in buckets})
     df = spark.read.parquet(index_dir)
     return (

@@ -17,12 +17,10 @@ bucket arithmetic bit-for-bit.
 
 Scale shape (100 TB lens): the component map holds one row per document
 that appears in ANY near-dup pair — typically a few percent of the corpus
-— and carries two longs, no content.  The default plan broadcasts it
-(``broadcast_components=True``); corpora where the map itself is huge set
-it False and the join becomes an ids-only shuffle while the document text
-stays put (assignment is a projection over ``doc_id`` — callers join the
-split column back, or select ids per split, without ever shuffling
-content).  Bucket edges are integers over ``n_buckets``, so fractions are
+— and carries two longs, no content, so it is broadcast and the document
+text stays put (assignment is a projection over ``doc_id`` — callers join
+the split column back, or select ids per split, without ever shuffling
+content).  Bucket edges are integers over ``N_BUCKETS``, so fractions are
 quantized exactly the same way on every engine.
 """
 
@@ -34,10 +32,13 @@ from pyspark.sql import functions as F
 from .sampling import N_BUCKETS, sample_bucket_col
 
 
-def split_edges(fracs: dict[str, float], n_buckets: int = N_BUCKETS) -> list[tuple[str, int]]:
+SPLIT_SALT = "split"  # the bucket hash's salt: "split|<split_key>"
+
+
+def split_edges(fracs: dict[str, float]) -> list[tuple[str, int]]:
     """``[(name, exclusive_upper_bucket)...]`` in dict order.
 
-    Fractions are quantized to ``round(cum * n_buckets)`` and must sum to
+    Fractions are quantized to ``round(cum * N_BUCKETS)`` and must sum to
     exactly 1.0 after quantization — a silent remainder bucket would be a
     split nobody asked for.
     """
@@ -49,11 +50,11 @@ def split_edges(fracs: dict[str, float], n_buckets: int = N_BUCKETS) -> list[tup
         if frac <= 0:
             raise ValueError(f"split {name!r} has non-positive fraction {frac}")
         cum += frac
-        edges.append((name, int(round(cum * n_buckets))))
-    if edges[-1][1] != n_buckets:
+        edges.append((name, int(round(cum * N_BUCKETS))))
+    if edges[-1][1] != N_BUCKETS:
         raise ValueError(
             f"fractions sum to {cum}, not 1.0 (quantized upper edge "
-            f"{edges[-1][1]} != {n_buckets})"
+            f"{edges[-1][1]} != {N_BUCKETS})"
         )
     return edges
 
@@ -65,30 +66,28 @@ def leakage_safe_split(
     id_col: str = "doc_id",
     comp_node_col: str = "node",
     comp_col: str = "comp",
-    salt: str = "split",
-    n_buckets: int = N_BUCKETS,
-    broadcast_components: bool = True,
 ) -> DataFrame:
     """Assign every doc a split; near-dup components are co-assigned.
 
     ``components`` is the ``connected_components_star`` output (one row
     per doc that appears in any dup pair, mapping it to its component's min
-    id).  Docs absent from it are singletons and hash their own id.  Returns
-    ``(id_col, split_key, bucket, split)`` — ``split_key`` published so an
-    auditor can re-derive the assignment off-cluster.
+    id); it is broadcast.  Docs absent from it are singletons and hash
+    their own id.  Returns ``(id_col, split_key, bucket, split)`` —
+    ``split_key`` published so an auditor can re-derive the assignment
+    off-cluster.
     """
-    edges = split_edges(fracs, n_buckets)
-    comp = components.select(
-        F.col(comp_node_col).alias("__node"),
-        F.col(comp_col).alias("__comp"),
+    edges = split_edges(fracs)
+    comp = F.broadcast(
+        components.select(
+            F.col(comp_node_col).alias("__node"),
+            F.col(comp_col).alias("__comp"),
+        )
     )
-    if broadcast_components:
-        comp = F.broadcast(comp)
     keyed = docs.select(F.col(id_col)).join(
         comp, F.col(id_col) == F.col("__node"), "left"
     )
     split_key = F.coalesce(F.col("__comp"), F.col(id_col)).cast("long")
-    bucket = sample_bucket_col(split_key, salt, n_buckets)
+    bucket = sample_bucket_col(split_key, SPLIT_SALT)
     assign = F.lit(edges[-1][0])
     for name, upper in reversed(edges[:-1]):
         assign = F.when(F.col("bucket") < upper, F.lit(name)).otherwise(assign)

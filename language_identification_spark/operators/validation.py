@@ -20,10 +20,7 @@ but counters moves (pinned by plan test).  ``column_profile`` with exact
 distincts additionally shuffles the DISTINCT VALUES of the profiled
 columns (Spark's Expand + hash Exchange, deduplicated map-side first) —
 that is inherent to exact multi-column count(distinct) and is the one
-genuinely expensive piece at lake scale; ``approx=True`` swaps in
-``approx_count_distinct`` (HLL sketch, mergeable, constant memory —
-the Exchange collapses back to counters) for cluster runs; the oracle
-pins the exact variant.
+genuinely expensive piece at lake scale.
 
 Reference parity: the reference engine validates per-file WAV headers at
 ingest (guard projections); this is the corpus-level analog from the
@@ -36,9 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def column_profile(
-    df: DataFrame, cols: list[str] | None = None, approx: bool = False
-) -> DataFrame:
+def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """One-pass per-column profile: (column, n_rows, n_nulls, n_distinct,
     min_str, max_str), one output row per profiled column.
 
@@ -46,7 +41,7 @@ def column_profile(
     numerically, not lexically) and rendered to strings afterwards, which
     keeps the schema uniform across heterogeneous columns.  NULL-only
     columns render empty strings rather than NULL so downstream diffs are
-    total.  ``approx`` trades exact distinct counts for an HLL sketch.
+    total.
     """
     names = cols if cols is not None else df.columns
     if not names:
@@ -55,14 +50,11 @@ def column_profile(
         # (ADVICE r05) — fail fast with the actual problem instead
         raise ValueError("column_profile: no columns to profile "
                          "(empty cols list on a zero-column frame?)")
-    n_distinct = (
-        F.approx_count_distinct if approx else F.count_distinct
-    )
     aggs: list[Column] = [F.count(F.lit(1)).alias("_rows")]
     for c in names:
         col = F.col(c)
         aggs.append(F.count(col).alias(f"_nn_{c}"))
-        aggs.append(n_distinct(col).alias(f"_nd_{c}"))
+        aggs.append(F.count_distinct(col).alias(f"_nd_{c}"))
         aggs.append(F.min(col).cast("string").alias(f"_mn_{c}"))
         aggs.append(F.max(col).cast("string").alias(f"_mx_{c}"))
     wide = df.agg(*aggs)

@@ -28,12 +28,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+MIN_TOKEN_CHARS = 1  # drops the empty token that blank text splits into
+
+
 def vocab_topk(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 100,
-    min_token_chars: int = 1,
 ) -> DataFrame:
     """Top-k corpus tokens by total frequency.
 
@@ -47,7 +49,7 @@ def vocab_topk(
     toks = F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+")
     exploded = df.select(
         F.col(id_col), F.explode(toks).alias("token")
-    ).filter(F.length("token") >= min_token_chars)
+    ).filter(F.length("token") >= MIN_TOKEN_CHARS)
     agg = exploded.groupBy("token").agg(
         F.count(F.lit(1)).alias("tf"),
         F.count_distinct(F.col(id_col)).alias("df"),

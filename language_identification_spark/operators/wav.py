@@ -105,13 +105,13 @@ def resample_linear(x: np.ndarray, src_rate: int, dst_rate: int) -> np.ndarray:
     return np.interp(pos, np.arange(len(x), dtype=np.float64), x)
 
 
-def normalize_peak(x: np.ndarray, headroom_db: float = HEADROOM_DB) -> np.ndarray:
-    """Scale so the peak sits ``headroom_db`` below full scale (ref:
+def normalize_peak(x: np.ndarray) -> np.ndarray:
+    """Scale so the peak sits ``HEADROOM_DB`` below full scale (ref:
     ``audio.normalize``).  Silence passes through unscaled."""
     peak = float(np.abs(x).max(initial=0.0))
     if peak == 0.0:
         return x
-    return x * (10.0 ** (-headroom_db / 20.0) / peak)
+    return x * (10.0 ** (-HEADROOM_DB / 20.0) / peak)
 
 
 def encode_wav16(x: np.ndarray, rate: int) -> bytes:
@@ -126,16 +126,12 @@ def encode_wav16(x: np.ndarray, rate: int) -> bytes:
     return buf.getvalue()
 
 
-def convert_wav(
-    payload: bytes,
-    target_rate: int = TARGET_RATE,
-    headroom_db: float = HEADROOM_DB,
-) -> bytes:
+def convert_wav(payload: bytes) -> bytes:
     """Full reference conversion: decode → mono → resample → normalize →
     16-bit WAV bytes (``convert_audio_optimized.py:37-104``)."""
     x, rate = decode_pcm(payload)
-    mono = resample_linear(to_mono(x), rate, target_rate)
-    return encode_wav16(normalize_peak(mono, headroom_db), target_rate)
+    mono = resample_linear(to_mono(x), rate, TARGET_RATE)
+    return encode_wav16(normalize_peak(mono), TARGET_RATE)
 
 
 CONVERTED_SCHEMA = StructType(
@@ -150,57 +146,48 @@ CONVERTED_SCHEMA = StructType(
 )
 
 
-def _convert_batches(
-    target_rate: int, headroom_db: float
-):
-    def conv_one(payload) -> bytes | None:
-        # variable-length audio decode is inherently per-payload; each call
-        # is numpy inside.  ONE bytes() materialization per row (it is a
-        # no-op when Arrow already hands us bytes); non-WAV and corrupt rows
-        # surface as None, not job failures — a 100 TB run must not die on
-        # one payload.
-        if payload is None:
-            return None
-        b = bytes(payload)
-        if not b.startswith(b"RIFF"):
-            return None
-        try:
-            return convert_wav(b, target_rate, headroom_db)
-        except Exception:  # noqa: BLE001 — truncated/corrupt WAV
-            return None
-
-    _NULL_PROPS = (None, None, None, None)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        forget_zip_importers()
-        for pdf in batches:
-            convs = [conv_one(p) for p in pdf["payload"]]
-            props = [
-                wav_props(c) if c is not None else _NULL_PROPS for c in convs
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "payload": convs,
-                    "sample_rate": [p[2] for p in props],
-                    "n_frames": [p[3] for p in props],
-                    "channels": [p[0] for p in props],
-                    "sample_width": [p[1] for p in props],
-                }
-            )
-
-    return gen
+def _conv_one(payload) -> bytes | None:
+    # variable-length audio decode is inherently per-payload; each call
+    # is numpy inside.  ONE bytes() materialization per row (it is a
+    # no-op when Arrow already hands us bytes); non-WAV and corrupt rows
+    # surface as None, not job failures — a 100 TB run must not die on
+    # one payload.
+    if payload is None:
+        return None
+    b = bytes(payload)
+    if not b.startswith(b"RIFF"):
+        return None
+    try:
+        return convert_wav(b)
+    except Exception:  # noqa: BLE001 — truncated/corrupt WAV
+        return None
 
 
-def convert_audio(
-    df: DataFrame,
-    target_rate: int = TARGET_RATE,
-    headroom_db: float = HEADROOM_DB,
-) -> DataFrame:
-    """Media table → Speech-SDK-format WAV payloads (mono / target_rate /
+_NULL_PROPS = (None, None, None, None)
+
+
+def _convert_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    forget_zip_importers()
+    for pdf in batches:
+        convs = [_conv_one(p) for p in pdf["payload"]]
+        props = [wav_props(c) if c is not None else _NULL_PROPS for c in convs]
+        yield pd.DataFrame(
+            {
+                "media_id": pdf["media_id"].to_numpy(),
+                "payload": convs,
+                "sample_rate": [p[2] for p in props],
+                "n_frames": [p[3] for p in props],
+                "channels": [p[0] for p in props],
+                "sample_width": [p[1] for p in props],
+            }
+        )
+
+
+def convert_audio(df: DataFrame) -> DataFrame:
+    """Media table → Speech-SDK-format WAV payloads (mono / 16 kHz /
     16-bit / -3 dBFS peak), one Arrow-batched stage, no shuffle.  Input
     needs ``media_id`` + ``payload`` columns; corrupt/non-WAV payloads
     yield null rows instead of failing the job."""
     return df.select("media_id", "payload").mapInPandas(
-        _convert_batches(target_rate, headroom_db), CONVERTED_SCHEMA
+        _convert_batches, CONVERTED_SCHEMA
     )

@@ -36,23 +36,23 @@ from .stateful import (
 
 _SENTINEL_KEY = "__drain__"
 _QUERY_SEQ = count()
+N_BATCHES = 5  # micro-batch files in the feed
+DEMOTE_EVERY = 7  # every 7th row arrives one micro-batch late
+TIMEOUT_SEC = 180  # wall-clock bound on draining the stream
 
 
 def replay_island_stream(
     spark: SparkSession,
     events: DataFrame,
     max_gap: int,
-    n_batches: int = 5,
-    demote_every: int = 7,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Feed ``events(key string, label string, start long, end long)``
-    through the out-of-order event-time island machine as ``n_batches``
+    through the out-of-order event-time island machine as ``N_BATCHES``
     micro-batches and return every RELEASED island.
 
     ``start``/``end`` are microsecond epochs (the events-table convention);
     event time is ``start`` and ``ts_of`` maps machine-time µs → epoch ms.
-    Every ``demote_every``-th row is moved one micro-batch later than its
+    Every ``DEMOTE_EVERY``-th row is moved one micro-batch later than its
     timestamp order, so cross-batch late data is exercised on every run;
     the watermark delay is sized to the feed's exact worst-case lateness
     so demoted rows provably stay on-time on ANY timestamp distribution
@@ -65,11 +65,11 @@ def replay_island_stream(
     n = len(pdf)
     if n == 0:
         return spark.createDataFrame([], OUTPUT_SCHEMA)
-    per = max(1, (n + n_batches - 1) // n_batches)
+    per = max(1, (n + N_BATCHES - 1) // N_BATCHES)
     idx = pdf.index.to_numpy()
     batch = idx // per
     # demote every k-th row one batch later: bounded, deterministic disorder
-    batch = (batch + (idx % demote_every == demote_every - 1)).clip(
+    batch = (batch + (idx % DEMOTE_EVERY == DEMOTE_EVERY - 1)).clip(
         None, batch.max()
     )
 
@@ -131,12 +131,12 @@ def replay_island_stream(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(TIMEOUT_SEC):
         # a partially-drained memory sink would read as a bogus engine
         # divergence (and the query would keep mutating the table); fail
         # loudly instead (round-5 review)
         q.stop()
         raise RuntimeError(
-            f"island replay stream did not finish within {timeout_sec}s"
+            f"island replay stream did not finish within {TIMEOUT_SEC}s"
         )
     return spark.table(name).filter(F.col("key") != _SENTINEL_KEY)

@@ -193,28 +193,6 @@ def test_strip_comments_matches_scalar(spark):
     assert got[4]["n_comment_lines_removed"] == 0
 
 
-def test_strip_comments_rewrite_roundtrip(spark):
-    from pyspark.sql import functions as F
-
-    from language_identification_spark.operators.codestats import (
-        strip_comments,
-        strip_comments_rewrite,
-    )
-
-    df = spark.createDataFrame(
-        [(0, "keep\n# drop\n/* gone */keep2")], "doc_id long, text string"
-    )
-    rewritten = df.select(
-        strip_comments_rewrite(F.coalesce(F.col("text"), F.lit(""))).alias("t")
-    ).collect()[0]["t"]
-    assert rewritten == "keep\nkeep2"
-    # the reporter's sha256 is the sha256 of exactly this rewrite
-    import hashlib
-
-    row = strip_comments(df).collect()[0]
-    assert row["stripped_sha256"] == hashlib.sha256(rewritten.encode()).hexdigest()
-
-
 def test_strip_comments_plan_row_local(spark):
     import contextlib
     import io

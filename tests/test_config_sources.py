@@ -1,5 +1,5 @@
 """Config-source layering tests (S9): .env precedence, multi-name fallback,
-mode demotion, spark-conf override — table-driven per the reference rules."""
+spark-conf override — table-driven per the reference rules."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from language_identification_spark.config_sources import (
     env_get,
     filter_config,
     load_dotenv,
-    resolve_output_mode,
 )
 
 
@@ -46,32 +45,11 @@ def test_dotenv_missing_file_is_noop(tmp_path):
         ({"B": "y"}, "y"),
         ({"A": "", "B": "y"}, "y"),  # empty string falls through (or-chain)
         ({"A": " x "}, "x"),  # stripped like the reference
-        ({}, "dflt"),
+        ({}, ""),  # no truthy name → empty string
     ],
 )
 def test_env_get_multi_name_fallback(env, expected):
-    assert env_get(env, "A", "B", default="dflt") == expected
-
-
-@pytest.mark.parametrize(
-    "catalog,path,mode,target",
-    [
-        ("cat.db.results", "", "catalog", "cat.db.results"),
-        ("cat.db.results", "/out", "catalog", "cat.db.results"),
-        ("malformed", "/out", "path", "/out"),  # demotion rule (ref :494-507)
-        ("", "/out", "path", "/out"),
-        # no fallback → the malformed preferred option is still used, exactly
-        # like the reference keeps a /speech/-less endpoint when no region
-        ("malformed", "", "catalog", "malformed"),
-    ],
-)
-def test_resolve_output_mode(catalog, path, mode, target):
-    assert resolve_output_mode(catalog, path) == (mode, target)
-
-
-def test_resolve_output_mode_neither_raises():
-    with pytest.raises(ValueError):
-        resolve_output_mode("", "")
+    assert env_get(env, "A", "B") == expected
 
 
 def test_filter_config_layering(tmp_path):

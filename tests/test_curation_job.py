@@ -404,3 +404,42 @@ def test_curation_job_split_stage(spark, tmp_path, monkeypatch, capsys):
     run_curation.main()
     again = {r.doc_id: r.split for r in spark.read.parquet(report["split"]).collect()}
     assert again == by_id
+
+
+def _mtimes(root):
+    return {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _dirs, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_curation_job_resume_refuses_changed_source_or_args(
+    spark, tmp_path, monkeypatch, capsys
+):
+    src = str(tmp_path / "docs.parquet")
+    rows = [(i, f"doc {i} body", "en") for i in range(6)]
+    schema = "doc_id long, text string, lang string"
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    out = str(tmp_path / "out")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "jobs"))
+    import run_curation
+
+    argv = ["run_curation.py", "--source", src, "--out", out, "--line-dedup"]
+    monkeypatch.setattr(sys, "argv", argv)
+    run_curation.main()
+    written = _mtimes(out)
+    # an identical re-submit reuses every stage: nothing is rewritten
+    run_curation.main()
+    assert _mtimes(out) == written
+
+    monkeypatch.setattr(sys, "argv", argv + ["--default-rate", "0.5"])
+    with pytest.raises(ValueError, match="default_rate"):
+        run_curation.main()
+    # the source regenerated under the same path
+    spark.createDataFrame(rows[:3], schema).write.mode("overwrite").parquet(src)
+    monkeypatch.setattr(sys, "argv", argv)
+    with pytest.raises(ValueError, match="source_fingerprint"):
+        run_curation.main()
+    assert _mtimes(out) == written  # refused before any stage ran

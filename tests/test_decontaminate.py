@@ -50,15 +50,23 @@ def test_hash_and_string_paths_agree(spark):
         [(i, f"x{i} alpha beta gamma delta filler") for i in range(20)]
         + [(99, "no overlap whatsoever in this one")],
     )
-    a = sorted(
-        (r["doc_id"], r["n_hit_grams"])
-        for r in decontaminate(train, bench, n=4, hash_grams=True).collect()
+    # grams are matched on their xxhash64: the hits must equal an exact
+    # string-gram intersection computed here
+    def grams(text):
+        w = text.split()
+        return {" ".join(w[i:i + 4]) for i in range(len(w) - 3)}
+
+    bench_grams = grams("alpha beta gamma delta epsilon")
+    want = sorted(
+        (r["doc_id"], len(grams(r["text"]) & bench_grams))
+        for r in train.collect()
+        if grams(r["text"]) & bench_grams
     )
-    b = sorted(
+    got = sorted(
         (r["doc_id"], r["n_hit_grams"])
-        for r in decontaminate(train, bench, n=4, hash_grams=False).collect()
+        for r in decontaminate(train, bench, n=4).collect()
     )
-    assert a == b and len(a) == 20
+    assert got == want and len(got) == 20
 
 
 def test_max_df_drops_boilerplate(spark):

@@ -92,17 +92,18 @@ def test_simhash_dup_pairs(docs):
             simhash_dup_pairs(docs, "text", "doc_id", max_hamming=bad)
 
 
-def test_simhash_dup_pairs_bucket_cap(spark):
-    # a template cluster larger than max_bucket is dropped from its buckets;
+def test_simhash_dup_pairs_bucket_cap(spark, monkeypatch):
+    # a template cluster larger than MAX_BUCKET is dropped from its buckets;
     # with identical fingerprints every chunk bucket is the same oversized
     # set, so no pairs survive the cap — exact_dedup's job, not simhash's
-    from language_identification_spark.operators.dedup import simhash_dup_pairs
+    from language_identification_spark.operators import dedup
 
     rows = [(i, BASE) for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert simhash_dup_pairs(df, "text", "doc_id", max_bucket=4).count() == 0
-    got = simhash_dup_pairs(df, "text", "doc_id", max_bucket=64)
-    assert got.count() == 45  # 10 choose 2, all hamming 0
+    got = dedup.simhash_dup_pairs(df, "text", "doc_id")
+    assert got.count() == 45  # 10 choose 2 under the cap, all hamming 0
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
+    assert dedup.simhash_dup_pairs(df, "text", "doc_id").count() == 0
 
 
 def _union_find(edges):
@@ -269,16 +270,17 @@ def test_lsh_bucket_cap_boundary_and_recall_through_other_bands(spark):
     assert len(uncapped) == 45
 
 
-def test_exact_dup_cluster_beyond_cap_is_exact_dedups_job(spark):
+def test_exact_dup_cluster_beyond_cap_is_exact_dedups_job(spark, monkeypatch):
     # The documented division of labor: a dense EXACT-dup cluster larger
-    # than max_bucket collides in every band, so LSH drops all its buckets —
+    # than MAX_BUCKET collides in every band, so LSH drops all its buckets —
     # and exact_dedup still reports the full cluster.
+    from language_identification_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
     n = 6
     rows = [(i, BASE) for i in range(n)] + [(99, "unrelated text entirely")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = jaccard_pairs(
-        df, "text", "doc_id", threshold=0.0, max_bucket=4
-    ).collect()
+    pairs = jaccard_pairs(df, "text", "doc_id", threshold=0.0).collect()
     assert pairs == []
     groups = {
         r.representative: r.n_copies
@@ -307,16 +309,17 @@ def test_winnow_dup_pairs_shared_substring(spark):
     assert not any(2 in p for p in pairs)
 
 
-def test_winnow_dup_pairs_boilerplate_cap(spark):
-    # a fingerprint shared by more docs than max_bucket (license-header
+def test_winnow_dup_pairs_boilerplate_cap(spark, monkeypatch):
+    # a fingerprint shared by more docs than MAX_BUCKET (license-header
     # boilerplate) must not explode into pairs
-    from language_identification_spark.operators.dedup import winnow_dup_pairs
+    from language_identification_spark.operators import dedup
 
     header = "licensed under the apache license version two point zero "
     rows = [(i, header + f"unique tail number {i} with its own words") for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = winnow_dup_pairs(df, "text", "doc_id", min_shared=1, max_bucket=1000).count()
-    capped = winnow_dup_pairs(df, "text", "doc_id", min_shared=1, max_bucket=4).count()
+    uncapped = dedup.winnow_dup_pairs(df, "text", "doc_id", min_shared=1).count()
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
+    capped = dedup.winnow_dup_pairs(df, "text", "doc_id", min_shared=1).count()
     assert uncapped == 28  # all 8 docs pair through the shared header
     assert capped < uncapped  # header fingerprints above the cap dropped
 

@@ -12,10 +12,7 @@ from language_identification_spark.operators.fim import (
     N_BUCKETS,
     fim_transform,
 )
-from language_identification_spark.operators.repolevel import (
-    apply_repo_filter,
-    repo_rollup,
-)
+from language_identification_spark.operators.repolevel import repo_rollup
 
 
 def _py_u32(salt: str, tag: str, key) -> int:
@@ -110,17 +107,6 @@ def test_repo_rollup_min_docs(repo_docs):
     }
     assert got["solo"] is False  # fails the min-docs floor, not the score
     assert got["good"] is True
-
-
-def test_apply_repo_filter_broadcasts(repo_docs):
-    verdicts = repo_rollup(repo_docs, tau_milli=400)
-    kept = apply_repo_filter(repo_docs, verdicts)
-    assert set(r["source"] for r in kept.select("source").distinct().collect()) == {
-        "good",
-        "solo",
-    }
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # corpus side never shuffles
 
 
 def test_repo_rollup_partial_aggregation(repo_docs):

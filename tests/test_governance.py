@@ -119,10 +119,6 @@ def test_snapshot_diff_statuses(spark):
     assert got[3]["old_sha256"] == _sha("c") and got[3]["new_sha256"] == _sha("C!")
     assert got[4]["status"] == "added" and got[4]["old_sha256"] is None
 
-    full = snapshot_diff(old, new, keep_unchanged=True)
-    stats = {r["status"]: r["count"] for r in full.groupBy("status").count().collect()}
-    assert stats == {"removed": 1, "changed": 1, "added": 1, "unchanged": 1}
-
 
 def test_snapshot_diff_hashes_shuffle_not_content(spark):
     # the Exchange inputs must carry (key, hash) only — text is projected
@@ -160,9 +156,11 @@ def test_fork_pairs_exact_jaccard(spark):
     assert r["jaccard_milli"] == (1000 * 2) // (4 + 2 - 2)  # 500
 
 
-def test_fork_pairs_set_semantics_and_posting_cap(spark):
+def test_fork_pairs_set_semantics_and_posting_cap(spark, monkeypatch):
     # duplicate text within a repo collapses (set semantics); a file present
-    # in more repos than max_posting never generates candidate pairs
+    # in more repos than MAX_POSTING never generates candidate pairs
+    from language_identification_spark.operators import repolevel
+
     rows = [
         Row(source="A", text="dup"),
         Row(source="A", text="dup"),
@@ -170,16 +168,13 @@ def test_fork_pairs_set_semantics_and_posting_cap(spark):
         Row(source="B", text="dup"),
         Row(source="C", text="dup"),
     ]
-    got = fork_pairs(
-        spark.createDataFrame(rows), min_jaccard_milli=1, max_posting=2
-    ).collect()
-    assert got == []  # 'dup' sits in 3 repos > cap 2 -> no candidates
-    got2 = fork_pairs(
-        spark.createDataFrame(rows), min_jaccard_milli=1, max_posting=3
-    ).collect()
-    # with the cap lifted: B-C share their single file -> jaccard 1000
-    bc = [r for r in got2 if (r["repo_a"], r["repo_b"]) == ("B", "C")][0]
+    got = fork_pairs(spark.createDataFrame(rows), min_jaccard_milli=1).collect()
+    # 3 repos are under the cap: B-C share their single file -> jaccard 1000
+    bc = [r for r in got if (r["repo_a"], r["repo_b"]) == ("B", "C")][0]
     assert bc["jaccard_milli"] == 1000 and bc["n_shared"] == 1
+    monkeypatch.setattr(repolevel, "MAX_POSTING", 2)
+    got = fork_pairs(spark.createDataFrame(rows), min_jaccard_milli=1).collect()
+    assert got == []  # 'dup' sits in 3 repos > cap 2 -> no candidates
 
 
 # ----------------------------------------------------------- norm outliers

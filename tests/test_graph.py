@@ -8,6 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from language_identification_spark.operators.graph import (
+    DAMPING_PCT,
+    IMPORT_HEADER,
     SCALE,
     extract_imports,
     pagerank_int,
@@ -15,7 +17,7 @@ from language_identification_spark.operators.graph import (
 )
 
 
-def scalar_pagerank(nodes, edges, n_iters=10, damping=85):
+def scalar_pagerank(nodes, edges, n_iters=10, damping=DAMPING_PCT):
     n = len(nodes)
     outdeg = Counter(s for s, _ in edges)
     r = {v: SCALE // n for v in nodes}
@@ -80,12 +82,6 @@ def test_pagerank_empty_nodes(spark):
     assert pagerank_int(nodes, edges).count() == 0
 
 
-def test_pagerank_damping_validation(graph):
-    nodes, edges = graph
-    with pytest.raises(ValueError):
-        pagerank_int(nodes, edges, damping_pct=101)
-
-
 def test_rank_weights(graph, spark):
     from language_identification_spark.operators.graph import rank_weights
 
@@ -118,11 +114,17 @@ def test_extract_imports(spark):
 
 
 def test_extract_imports_clip(spark):
-    # an import beyond the max_header clip is not scanned
-    text = ("x = 1\n" * 500) + "import too_late\n"
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    assert extract_imports(df, max_header=100).count() == 0
-    assert extract_imports(df, max_header=10_000).count() == 1
+    # an import beyond the IMPORT_HEADER clip is not scanned
+    pad = "x = 1\n"
+    n_in = IMPORT_HEADER // len(pad) - 3  # the import line ends inside the clip
+    df = spark.createDataFrame(
+        [
+            (1, pad * n_in + "import in_time\n"),
+            (2, pad * (n_in + 10) + "import too_late\n"),
+        ],
+        "doc_id long, text string",
+    )
+    assert [r["module"] for r in extract_imports(df).collect()] == ["in_time"]
 
 
 def test_extract_imports_dedup_and_null(spark):

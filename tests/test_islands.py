@@ -9,7 +9,6 @@ import pytest
 
 from language_identification_spark.operators.islands import (
     merge_islands,
-    pad_boundaries,
 )
 
 GAP = 200  # reference max_gap_ms=200 (:902)
@@ -86,15 +85,3 @@ def test_single_exchange_in_plan(spark):
         df, ["file_id"], "label", "start", "end"
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_pad_boundaries(spark):
-    df = spark.createDataFrame(
-        [(0, 50, 400), (1, 300, 480)],
-        "doc_len long, island_start long, island_end long",
-    ).withColumn("doc_len", __import__("pyspark").sql.functions.lit(500))
-    got = pad_boundaries(df, pad=100, upper_bound_col="doc_len").orderBy(
-        "island_start"
-    ).collect()
-    assert (got[0].island_start, got[0].island_end) == (0, 500)  # clamped both ends
-    assert (got[1].island_start, got[1].island_end) == (200, 500)

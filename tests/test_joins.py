@@ -35,17 +35,6 @@ def test_salted_inner_matches_plain_join(skewed):
     assert got == want and len(got) == 200  # orphan dropped
 
 
-def test_salted_left_keeps_orphans(skewed):
-    facts, dim = skewed
-    got = _rows(
-        salted_join(
-            facts, dim, "key", salt_from="fact_id", salt_factor=5, how="left"
-        )
-    )
-    want = _rows(facts.join(dim, "key", "left"))
-    assert got == want and len(got) == 201
-
-
 def test_salt_factor_one_degenerates_to_plain(skewed):
     facts, dim = skewed
     got = _rows(salted_join(facts, dim, "key", "fact_id", salt_factor=1))
@@ -54,8 +43,6 @@ def test_salt_factor_one_degenerates_to_plain(skewed):
 
 def test_invalid_args(skewed):
     facts, dim = skewed
-    with pytest.raises(ValueError, match="how"):
-        salted_join(facts, dim, "key", "fact_id", how="full")
     with pytest.raises(ValueError, match="salt_factor"):
         salted_join(facts, dim, "key", "fact_id", salt_factor=0)
 

@@ -1,14 +1,9 @@
 from __future__ import annotations
 
-import math
-import os
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from language_identification_spark.sources.layout import (
-    compact,
     file_column_ranges,
     write_range_sorted,
 )
@@ -29,12 +24,6 @@ def df(spark):
         )
         .orderBy(F.rand(seed=7))
         .cache()
-    )
-
-
-def _parquet_files(path):
-    return sorted(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
     )
 
 
@@ -86,46 +75,8 @@ def test_random_layout_control_has_full_span_files(spark, df, tmp_path):
     assert all(hi - lo > N_ROWS // 2 for _, lo, hi in ranges)
 
 
-def test_max_records_per_file_bounds_rows(spark, df, tmp_path):
-    out = str(tmp_path / "capped")
-    write_range_sorted(df, out, ["doc_id"], n_ranges=4, max_records_per_file=300)
-    files = _parquet_files(out)
-    assert len(files) >= math.ceil(N_ROWS / 300)
-    assert all(pq.ParquetFile(f).metadata.num_rows <= 300 for f in files)
-    # rolled files within a range stay disjoint: sorted before rolling
-    spans = sorted((lo, hi) for _, lo, hi in file_column_ranges(out, "doc_id"))
-    for (_, hi_prev), (lo, _) in zip(spans, spans[1:]):
-        assert hi_prev < lo
-
-
-def test_compact_bounds_file_count_and_preserves_rows(spark, df, tmp_path):
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "compacted")
-    df.repartition(16).write.parquet(src)
-    assert len(_parquet_files(src)) == 16
-    total = sum(os.path.getsize(f) for f in _parquet_files(src))
-    n = compact(spark, src, dst, target_bytes_per_file=math.ceil(total / 3))
-    assert n == 3 and len(_parquet_files(dst)) == 3
-    a = sorted(map(tuple, spark.read.parquet(src).collect()))
-    b = sorted(map(tuple, spark.read.parquet(dst).collect()))
-    assert a == b
-
-
-def test_compact_with_sort_recluster(spark, df, tmp_path):
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "reclustered")
-    df.repartition(16).write.parquet(src)
-    compact(spark, src, dst, n_files=4, sort_cols=["doc_id"])
-    spans = sorted((lo, hi) for _, lo, hi in file_column_ranges(dst, "doc_id"))
-    assert len(spans) == 4
-    for (_, hi_prev), (lo, _) in zip(spans, spans[1:]):
-        assert hi_prev < lo
-
-
 def test_errors(spark, df, tmp_path):
     with pytest.raises(ValueError):
         write_range_sorted(df, str(tmp_path / "x"), [], n_ranges=4)
     with pytest.raises(ValueError):
         write_range_sorted(df, str(tmp_path / "x"), ["doc_id"], n_ranges=0)
-    src = str(tmp_path / "t")
-    df.limit(10).write.parquet(src)
-    with pytest.raises(ValueError):
-        compact(spark, src, src)

@@ -69,13 +69,14 @@ def test_null_text_survives_as_empty(docs):
 
 
 def test_min_chars_exempts_short_lines(spark):
+    # trimmed length below MIN_LINE_CHARS (1): space-only lines
     df = spark.createDataFrame(
-        [(0, "ab\nlong enough line"), (1, "ab\nlong enough line")],
+        [(0, "   \nlong enough line"), (1, "   \nlong enough line")],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r["text"] for r in dedup_lines(df, min_chars=5).collect()}
-    assert got[0] == "ab\nlong enough line"
-    assert got[1] == "ab"  # short line exempt everywhere, long one deduped
+    got = {r["doc_id"]: r["text"] for r in dedup_lines(df).collect()}
+    assert got[0] == "   \nlong enough line"
+    assert got[1] == "   "  # short line exempt everywhere, long one deduped
 
 
 def test_mark_counts_align(docs):

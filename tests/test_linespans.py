@@ -37,28 +37,3 @@ def test_majority(mixed):
     spans = langid_line_spans(mixed, "file_id", "content")
     maj = {r.file_id: r.majority_lang for r in majority_label(spans, "file_id").collect()}
     assert maj == {1: "en", 2: "zh"}
-
-
-def test_context_pad_clamped_end_to_end(spark):
-    # W5 wiring: padded spans feed a real consumer; clamps hold at both ends
-    from language_identification_spark.operators.linespans import (
-        span_context_text,
-    )
-
-    en = "the quick brown fox jumps over the lazy dog again and again"
-    es = "el rapido zorro marron salta sobre el perro perezoso otra vez"
-    # 12 lines: 4 en, 4 es, 4 en → spans [0,4) [4,8) [8,12)
-    text = "\n".join([en] * 4 + [es] * 4 + [en] * 4)
-    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    spans = langid_line_spans(docs, "doc_id", "text", context_pad=2).collect()
-    got = {(r.label, r.island_start, r.island_end) for r in spans}
-    # middle span padded both ways; edge spans clamped at 0 and n_lines=12
-    assert got == {("en", 0, 6), ("es", 2, 10), ("en", 6, 12)}
-    ctx = {
-        (r.label, r.context.count("zorro"))
-        for r in span_context_text(docs, langid_line_spans(
-            docs, "doc_id", "text", context_pad=2
-        ), "doc_id", "text").collect()
-    }
-    # the padded es span picked up 2 en lines each side but kept all 4 es
-    assert ("es", 4) in ctx

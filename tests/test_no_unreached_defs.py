@@ -3,7 +3,12 @@
 ``jobs/``, ``tools/`` or ``perfbench/``.  A definition that only tests name is
 a capability no engine entry point reaches: delete it, or keep it in ``KEPT``
 with the test that needs it.  Names count as identifiers (a name, an
-attribute or an import), not as words in docstrings or comments."""
+attribute or an import), not as words in docstrings or comments.
+
+The same callers must also set every option they are offered: a defaulted
+parameter that no caller outside ``tests/`` passes is a configuration no
+oracle checks and no benchmark measures.  Make it a module constant, or keep
+it in ``KEPT_KNOBS`` with the need outside tests that sets it."""
 
 from __future__ import annotations
 
@@ -30,14 +35,25 @@ KEPT = {
         "test_train_distributed.py (bit-identity with the in-process trainer)",
     "models/seed_corpora.py::train_split":
         "test_train_distributed.py, test_training_job.py (training corpus)",
-    # only a test reaches these capabilities yet: delete each, or name its caller
-    "config_sources.py::resolve_output_mode": "test_config_sources.py::test_resolve_output_mode",
-    "operators/codestats.py::strip_comments_rewrite":
-        "test_codestats.py::test_strip_comments_rewrite_roundtrip",
-    "operators/linespans.py::span_context_text":
-        "test_linespans.py::test_context_pad_clamped_end_to_end",
-    "operators/repolevel.py::apply_repo_filter": "test_fim.py::test_apply_repo_filter_broadcasts",
-    "sources/layout.py::compact": "test_layout.py::test_compact_bounds_file_count_and_preserves_rows",
+}
+
+
+KEPT_KNOBS = {
+    "checkpoint.py::run_checkpointed(fail_after)":
+        "perfbench's crash-and-resume run passes it through **kw",
+    "checkpoint.py::run_checkpointed(fail_between)":
+        "fault-injection seam: only it reaches the commit window a crash test needs",
+    "config_sources.py::filter_config(env)":
+        "the environment the layering reads; a caller substitutes its own",
+    "datagen/labeler.py::label_frame(cfg)":
+        "the labeler follows whatever FilterConfig a deployment layers in",
+    "session.py::get_spark(shuffle_partitions)": "a session setting",
+    "operators/dedup.py::incremental_jaccard_pairs(lake_staging)":
+        "a path: where a deployment stages the lake's features",
+    "functions/heuristics.py::with_heuristics(content)": "a column name",
+    "operators/validation.py::column_profile(cols)": "column names",
+    "operators/similarity.py::build_ann_index(centroids)":
+        "a data input, like the trained centroids the driver passes to ivf_topk",
 }
 
 
@@ -69,3 +85,49 @@ def test_every_package_definition_is_named_outside_tests():
     ]
     assert sorted(set(unreached) - set(KEPT)) == [], "named only by tests"
     assert sorted(set(KEPT) - set(unreached)) == [], "KEPT entry now has a caller"
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    return f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    names = [x.arg for x in pos[len(pos) - len(a.defaults):]]
+    names += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return [n for n in names if not n.endswith(("_col", "_cols"))]
+
+
+def _set_by(fn: ast.FunctionDef, calls: list[ast.Call]) -> set[str]:
+    """Parameters of ``fn`` that some call passes, by keyword or position."""
+    pos = [x.arg for x in fn.args.posonlyargs + fn.args.args]
+    out: set[str] = set()
+    for c in calls:
+        out |= {k.arg for k in c.keywords if k.arg}
+        starred = any(isinstance(x, ast.Starred) for x in c.args)
+        out |= set(pos if starred else pos[: len(c.args)])
+    return out
+
+
+def test_every_option_is_set_outside_tests():
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _sources():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and _callee(node):
+                calls.setdefault(_callee(node), []).append(node)
+    unset = [
+        f"{path.relative_to(PACKAGE).as_posix()}::{node.name}({name})"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and not node.name.startswith("_")
+        and node.name in calls
+        for name in _defaulted(node)
+        if name not in _set_by(node, calls[node.name])
+    ]
+    assert sorted(set(unset) - set(KEPT_KNOBS)) == [], "options no caller outside tests sets"
+    assert sorted(set(KEPT_KNOBS) - set(unset)) == [], "KEPT_KNOBS entry now set by a caller"

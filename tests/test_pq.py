@@ -7,12 +7,21 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from language_identification_spark.operators import pq
 from language_identification_spark.operators.pq import (
     adc_lut,
     encode_pq,
     pq_topk,
     train_pq_codebooks,
 )
+
+
+@pytest.fixture(autouse=True)
+def four_by_four(monkeypatch):
+    """4 subspaces x 4 centroids: one centroid per cluster of ``clustered``
+    (the codebook shape is read on the driver, so the patch reaches it)."""
+    monkeypatch.setattr(pq, "PQ_M", 4)
+    monkeypatch.setattr(pq, "PQ_K", 4)
 
 
 def _emb_df(spark, mat):
@@ -33,20 +42,20 @@ def clustered():
 
 def test_codebook_shape_and_determinism(spark, clustered):
     df = _emb_df(spark, clustered)
-    b1 = train_pq_codebooks(df, m=4, k=4, iters=2)
-    b2 = train_pq_codebooks(df, m=4, k=4, iters=2)
+    b1 = train_pq_codebooks(df, iters=2)
+    b2 = train_pq_codebooks(df, iters=2)
     assert b1.shape == (4, 4, 4)
     assert np.array_equal(b1, b2)  # bit-identical retrain
 
 
 def test_dim_not_divisible_raises(spark, clustered):
     with pytest.raises(ValueError, match="not divisible"):
-        train_pq_codebooks(_emb_df(spark, clustered), m=5, k=4, iters=1)
+        train_pq_codebooks(_emb_df(spark, clustered[:, :15]), iters=1)
 
 
 def test_encode_matches_numpy_reference(spark, clustered):
     df = _emb_df(spark, clustered)
-    books = train_pq_codebooks(df, m=4, k=4, iters=2)
+    books = train_pq_codebooks(df, iters=2)
     got = {
         r.vec_id: list(r.codes) for r in encode_pq(df, books).collect()
     }
@@ -64,7 +73,7 @@ def test_encode_matches_numpy_reference(spark, clustered):
 
 def test_same_cluster_same_code(spark, clustered):
     df = _emb_df(spark, clustered)
-    books = train_pq_codebooks(df, m=4, k=4, iters=2)
+    books = train_pq_codebooks(df, iters=2)
     codes = {r.vec_id: tuple(r.codes) for r in encode_pq(df, books).collect()}
     # within a well-separated cluster every member quantizes identically
     for c in range(4):
@@ -76,7 +85,7 @@ def test_same_cluster_same_code(spark, clustered):
 
 def test_probe_finds_query_cluster(spark, clustered):
     df = _emb_df(spark, clustered)
-    books = train_pq_codebooks(df, m=4, k=4, iters=2)
+    books = train_pq_codebooks(df, iters=2)
     codes = encode_pq(df, books)
     # query = a member of cluster 2; its 15 members dominate by inner product
     q = [float(x) for x in clustered[2 * 15 + 3]]
@@ -87,7 +96,7 @@ def test_probe_finds_query_cluster(spark, clustered):
 
 def test_adc_scores_match_numpy(spark, clustered):
     df = _emb_df(spark, clustered)
-    books = train_pq_codebooks(df, m=4, k=4, iters=2)
+    books = train_pq_codebooks(df, iters=2)
     codes_df = encode_pq(df, books)
     q = [float(x) for x in clustered[0]]
     lut = adc_lut(q, books)
@@ -105,7 +114,7 @@ def test_adc_scores_match_numpy(spark, clustered):
 
 def test_encode_plan_rowlocal_no_udf(spark, clustered):
     df = _emb_df(spark, clustered)
-    books = train_pq_codebooks(df, m=4, k=4, iters=1)
+    books = train_pq_codebooks(df, iters=1)
     plan = (
         encode_pq(df, books)._jdf.queryExecution().executedPlan().toString()
     )

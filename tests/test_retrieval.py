@@ -6,7 +6,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from language_identification_spark.operators.decontaminate import with_words
 from language_identification_spark.operators.retrieval import bm25_topk
 
 DOCS = [
@@ -82,15 +81,6 @@ def test_tf_saturation_beats_raw_count(docs):
     }
     assert got[7] > got[3] > 0
     assert got[7] < 10 * got[3]
-
-
-def test_text_is_words_parity(docs):
-    staged = with_words(docs, "text", "words").select("doc_id", "words")
-    a = bm25_topk(docs, ["join", "spark"], k=100).collect()
-    b = bm25_topk(
-        staged, ["join", "spark"], k=100, text_col="words", text_is_words=True
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_bad_terms_raise(docs):

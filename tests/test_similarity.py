@@ -110,15 +110,21 @@ def test_indexed_probes_match_scan_paths(spark, emb, tmp_path):
     assert "ArrowEvalPython" not in lsh_plan
 
 
-def test_trained_ivf_centroids_improve_recall_on_clustered_data(spark, tmp_path):
+def test_trained_ivf_centroids_improve_recall_on_clustered_data(
+    spark, tmp_path, monkeypatch
+):
     """Spherical k-means quantizer: on clustered data (the realistic
     embedding regime) trained cells give better recall@10 than the
-    data-independent random centroids, probing the same fraction."""
+    data-independent random centroids, probing the same number of cells."""
+    from language_identification_spark.operators import similarity
     from language_identification_spark.operators.similarity import (
         build_ann_index,
         ivf_topk_indexed,
         train_ivf_centroids,
     )
+
+    # 2 of the 8 trained cells (the probe list is built on the driver)
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 2)
 
     rng = np.random.default_rng(123)
     centers = rng.standard_normal((8, DIM)) * 4.0
@@ -144,11 +150,11 @@ def test_trained_ivf_centroids_improve_recall_on_clustered_data(spark, tmp_path)
         truth = set(_numpy_topk(mat, np.asarray(q, dtype=np.float64), 10))
         got_d = {
             r.vec_id
-            for r in ivf_topk_indexed(spark, idx_default, q, k=10, nprobe=2).collect()
+            for r in ivf_topk_indexed(spark, idx_default, q, k=10).collect()
         }
         got_t = {
             r.vec_id
-            for r in ivf_topk_indexed(spark, idx_trained, q, k=10, nprobe=2).collect()
+            for r in ivf_topk_indexed(spark, idx_trained, q, k=10).collect()
         }
         rec_default += len(got_d & truth)
         rec_trained += len(got_t & truth)

@@ -45,7 +45,7 @@ def test_singletons_hash_own_id(spark):
     assert all(r.split_key == d for d, r in out.items())
 
 
-def test_deterministic_and_broadcast_parity(spark):
+def test_deterministic_across_partitionings(spark):
     docs = _docs(spark)
     comps = _comps(spark, [(1, 1), (17, 1)])
     a = sorted(map(tuple, leakage_safe_split(docs, comps, FRACS).collect()))
@@ -53,7 +53,7 @@ def test_deterministic_and_broadcast_parity(spark):
         map(
             tuple,
             leakage_safe_split(
-                docs, comps, FRACS, broadcast_components=False
+                docs.repartition(5), comps.repartition(3), FRACS
             ).collect(),
         )
     )

@@ -236,7 +236,7 @@ def test_replay_harness_matches_batch_islands(spark):
         (r["key"], r["label"], r["island_start"], r["island_end"])
         for r in batch.collect()
     )
-    out = replay_island_stream(spark, ev, max_gap=gap, n_batches=4)
+    out = replay_island_stream(spark, ev, max_gap=gap)
     got = sorted(
         (r["key"], r["label"], r["island_start"], r["island_end"])
         for r in out.collect()
@@ -276,7 +276,7 @@ def test_replay_harness_skewed_timestamps_drop_nothing(spark):
         (r["key"], r["island_start"], r["island_end"])
         for r in batch.collect()
     )
-    out = replay_island_stream(spark, ev, max_gap=gap, n_batches=5)
+    out = replay_island_stream(spark, ev, max_gap=gap)
     got = sorted(
         (r["key"], r["island_start"], r["island_end"]) for r in out.collect()
     )

@@ -93,3 +93,29 @@ def test_tokenizer_job_resume_reuses_merges(spark, src, tmp_path, monkeypatch,
         for f in os.listdir(m_path)
     } == mtimes
     assert spark.read.parquet(second["encoded"]).count() == len(CORPUS)
+
+
+def test_tokenizer_job_resume_refuses_changed_source(spark, src, tmp_path, monkeypatch,
+                                                     capsys):
+    out = str(tmp_path / "tok")
+    argv = ["--source", src, "--out", out, "--merges", "4"]
+    _run(monkeypatch, argv)
+
+    def mtimes():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _dirs, files in os.walk(out)
+            for f in files
+        }
+
+    written = mtimes()
+    _run(monkeypatch, argv)  # identical re-submit: every stage reused
+    assert mtimes() == written
+    with pytest.raises(ValueError, match="merges"):
+        _run(monkeypatch, ["--source", src, "--out", out, "--merges", "5"])
+    spark.createDataFrame([(0, "another corpus")], "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(src)
+    with pytest.raises(ValueError, match="source_fingerprint"):
+        _run(monkeypatch, argv)
+    assert mtimes() == written

@@ -6,6 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from language_identification_spark.models.train_lr import (
+    DEFAULT_ITERS,
+    DEFAULT_LR,
     lr_feature_cols,
     score_quality_lr,
     train_quality_lr,
@@ -73,14 +75,14 @@ def test_training_matches_numpy_bit_identical(corpus):
     from __spark_entry__ import _numpy_train_quality_lr
 
     feats = lr_feature_cols(corpus).orderBy("doc_id").collect()
-    w_spark = train_quality_lr(corpus, iters=25, lr=2.0)
+    w_spark = train_quality_lr(corpus)
     w_np = _numpy_train_quality_lr(
         np.array([r["len_milli"] for r in feats]),
         np.array([r["punct_permilli"] for r in feats]),
         np.array([r["stop_permilli"] for r in feats]),
         np.array([r["label"] for r in feats]),
-        iters=25,
-        lr=2.0,
+        DEFAULT_ITERS,
+        DEFAULT_LR,
     )
     assert w_spark == w_np
 
@@ -97,4 +99,4 @@ def test_score_plan_row_local(corpus):
 def test_empty_table_raises(spark):
     df = spark.createDataFrame([], "doc_id long, text string")
     with pytest.raises(ValueError):
-        train_quality_lr(df, iters=1)
+        train_quality_lr(df)

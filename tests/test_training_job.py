@@ -9,6 +9,7 @@ import sys
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 
 from language_identification_spark.models import langid as langid_mod
 from language_identification_spark.models import perplexity as ppl_mod
@@ -58,3 +59,34 @@ def test_training_job_end_to_end(spark, tmp_path, monkeypatch, capsys):
     before = os.path.getmtime(report["langid_logp"])
     run_training.main()
     assert os.path.getmtime(report["langid_logp"]) == before
+
+
+def test_training_job_resume_refuses_changed_source(spark, tmp_path, monkeypatch, capsys):
+    rows = [(l, t) for l in SUPPORTED_LANGS[:2] for t in train_split(l)[:5]]
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(rows, "lang string, text string").write.parquet(src)
+    out = str(tmp_path / "model")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "jobs"))
+    import run_training
+
+    monkeypatch.setattr(sys, "argv", ["run_training.py", "--source", src, "--out", out])
+    run_training.main()
+
+    def mtimes():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _dirs, files in os.walk(out)
+            for f in files
+        }
+
+    written = mtimes()
+    run_training.main()  # identical re-submit: every stage reused
+    assert mtimes() == written
+
+    spark.createDataFrame(rows[:3], "lang string, text string").write.mode(
+        "overwrite"
+    ).parquet(src)
+    with pytest.raises(ValueError, match="source_fingerprint"):
+        run_training.main()
+    assert mtimes() == written

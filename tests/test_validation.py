@@ -43,16 +43,6 @@ def test_column_profile_empty_and_null_only(spark):
     assert got.n_nulls == 2 and got.n_distinct == 0 and got.max_str == ""
 
 
-def test_column_profile_approx_variant(spark):
-    rows = [(i, f"v{i % 7}") for i in range(1000)]
-    df = spark.createDataFrame(rows, "id long, v string")
-    got = {r.column: r for r in column_profile(df, approx=True).collect()}
-    # HLL on small-cardinality columns is exact in practice; on id allow
-    # the documented ~2% default relative error
-    assert got["v"].n_distinct == 7
-    assert abs(got["id"].n_distinct - 1000) <= 50
-
-
 def test_validate_expectations_null_verdict_is_violation(spark):
     got = {
         r.rule: r
@@ -91,8 +81,7 @@ def test_validate_plan_counters_only(spark):
 def test_column_profile_plan_dedups_before_exchange(spark):
     # exact multi-distinct legitimately shuffles DISTINCT VALUES (Expand +
     # hash Exchange), but a partial HashAggregate must dedup map-side
-    # BEFORE the Exchange, and the approx variant must collapse back to a
-    # counters-only SinglePartition plan
+    # BEFORE the Exchange
     exact = column_profile(_df(spark), cols=["id", "name"])
     plan = exact._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan, plan
@@ -102,12 +91,6 @@ def test_column_profile_plan_dedups_before_exchange(spark):
     # aggregate: values dedup per-partition before they travel
     assert any("partial_" in l for l in lines[ex + 1 :]), plan
     assert "Python" not in plan, plan
-
-    approx = column_profile(_df(spark), cols=["id", "name"], approx=True)
-    aplan = approx._jdf.queryExecution().executedPlan().toString()
-    for line in aplan.splitlines():
-        if "Exchange" in line:
-            assert "SinglePartition" in line, line
 
 
 def test_empty_args_raise_clearly(spark):
